@@ -6,6 +6,7 @@ between hash groups, a within-batch draft+correction, and a delete."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from tests.conftest import SF_ORACLE
@@ -13,6 +14,8 @@ from worker_spark.operators.components import cluster_assignments
 from worker_spark.sources.synth_corpus import documents_v2_dupes
 from worker_spark.streaming.dedup_pipeline import (
     StreamingDedupPipeline,
+    StreamingNearDupPipeline,
+    StreamingSubstringPipeline,
     dedup_pipeline_stream,
 )
 
@@ -327,3 +330,23 @@ def test_substring_pipeline_tracks_batch_fingerprint_clusters(
         == 0
     )
     pipe.fsck()
+
+
+@pytest.mark.parametrize(
+    "pipeline",
+    [StreamingDedupPipeline, StreamingNearDupPipeline, StreamingSubstringPipeline],
+)
+def test_mismatched_bucket_moduli_raise(spark, tmp_path, pipeline):
+    """A pipeline reuses one batch's bucket ids across its stores, so a
+    root whose components store was pinned at another modulus must fail
+    loudly — as a ValueError, which ``python -O`` cannot strip."""
+    from worker_spark.streaming.components_index import (
+        IncrementalComponentsIndex,
+    )
+
+    root = tmp_path / "p"
+    IncrementalComponentsIndex(spark, str(root / "components"), n_buckets=4)
+    pipe = pipeline(spark, str(root), n_buckets=8)
+    docs = spark.createDataFrame([(1, "a b c")], "doc_id long, text string")
+    with pytest.raises(ValueError, match="modul"):
+        pipe.apply_batch(docs)

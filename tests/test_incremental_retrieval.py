@@ -242,6 +242,79 @@ def test_bm25_formula_has_one_definition():
     )[0]
 
 
+SERVE_DOCS = [
+    (1, "Fjord og fjell i Noreg"),
+    (2, "blåbær og tyttebær på fjellet ved fjord"),
+    (3, "hash join beats sort merge join"),
+    (4, "ærfugl øy ål fjord fjord"),
+]
+
+
+@pytest.fixture(scope="module")
+def served(spark, tmp_path_factory):
+    """A 4-document index (8 buckets) and its corpus frame, shared by
+    the serve-path tests; the sf0.01 parity tests above are full-tier."""
+    docs = spark.createDataFrame(SERVE_DOCS, "doc_id long, text string")
+    idx = IncrementalRetrievalIndex(
+        spark, str(tmp_path_factory.mktemp("serve")), n_buckets=8
+    )
+    idx.apply_batch(docs)
+    return idx, docs
+
+
+@pytest.mark.parametrize(
+    "queries",
+    [
+        [],
+        [""],
+        ["fjord fjord"],
+        ["BLÅBÆR Øy"],
+        ["zzabsent"],
+        ["fjord", "hash join", "ærfugl ål sort zzabsent"],
+    ],
+    ids=["none", "blank", "repeated", "upper_aeoa", "absent", "batch3"],
+)
+def test_served_topk_matches_batch_scorer(served, queries):
+    idx, docs = served
+    got = idx.bm25_topk(queries, k=3)
+    want = bm25_topk(docs, queries, k=3)
+    assert got.schema == want.schema
+    assert _rows(got) == _rows(want)
+
+
+def test_serve_plan_launches_no_job_and_scans_no_rdd(spark, served):
+    """Building a query plan is pure planning: the term buckets come
+    from the host-side hash and the query terms are a JVM-local frame,
+    so no probe job runs and no scan re-runs a Python RDD. Holds while
+    n_buckets <= 32: above Spark's parallel-listing threshold a read of
+    every bucket path would itself launch a listing job."""
+    import time
+    import uuid
+
+    idx, _ = served
+    assert idx.store.n_buckets <= 32
+    sc = spark.sparkContext
+    group, probe = f"serve-plan-{uuid.uuid4().hex}", f"probe-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "bm25_topk plan build")
+    try:
+        plan = idx.bm25_topk(["fjord", "hash join"], k=3)
+        # the status tracker is fed asynchronously and in order: once a
+        # later job is visible, any job of the build would be too
+        sc.setJobGroup(probe, "listener barrier")
+        spark.range(1).count()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    tracker = sc.statusTracker()
+    deadline = time.time() + 30
+    while not tracker.getJobIdsForGroup(probe) and time.time() < deadline:
+        time.sleep(0.05)
+    assert tracker.getJobIdsForGroup(probe)
+    assert tracker.getJobIdsForGroup(group) == []
+    physical = plan._jdf.queryExecution().executedPlan().toString()
+    assert "ExistingRDD" not in physical and "Python" not in physical
+
+
 def _bucket_snapshot(table_dir):
     """bucket dir -> sorted (file, size) list: the 'bytes rewritten'
     witness — a bucket whose snapshot is unchanged was never rewritten

@@ -446,13 +446,17 @@ def test_weighted_reservoir_is_ppswor_shaped(spark):
 
 def test_host_side_xxhash64_long_matches_engine(spark):
     # bucket_of_long replaces a per-batch touched-bucket collect for the
-    # constant-key journal/ledger tables: the host-side XXH64 must agree
-    # with the engine's xxhash64 (seed 42) on the full signed-64 range
-    # edges and a value sweep, and the derived bucket with bucket_of
+    # constant-key journal/ledger tables, and bucket_of_str the BM25
+    # read side's query-term bucket probe: the host-side XXH64 must
+    # agree with the engine's xxhash64 (seed 42) on the full signed-64
+    # range edges and a value sweep, on strings covering every tail
+    # branch and the 32-byte stripe loop, and the derived buckets with
+    # bucket_of
     from pyspark.sql import functions as F
 
     from worker_spark.plans.bucketed_state import (
         BucketedParquetStateStore,
+        xxhash64,
         xxhash64_long,
     )
 
@@ -473,3 +477,20 @@ def test_host_side_xxhash64_long_matches_engine(spark):
     )
     one = spark.createDataFrame([(0,)], "jkey: long")
     assert store.touched_buckets(one, "jkey") == [store.bucket_of_long(0)]
+
+    # UTF-8 lengths 0, 3, 4, 7, 8, 31, 32, 33 and ~120 bytes: the 1-byte,
+    # 4-byte and 8-byte tails, and zero, one and several 32-byte stripes
+    strs = [
+        "", "abc", "abcd", "abcdefg", "abcdefgh", "x" * 31, "y" * 32,
+        "z" * 33, "Hash Join", "blåbærsyltetøy", "ÆØÅ æøå", "漢字検索",
+        "ord" + "bøker og 字典 " * 7,
+    ]
+    assert {len(t.encode()) for t in strs} >= {0, 3, 4, 7, 8, 31, 32, 33}
+    assert max(len(t.encode()) for t in strs) >= 120
+    sdf = spark.createDataFrame([(t,) for t in strs], "t: string").select(
+        "t", F.xxhash64("t").alias("h")
+    )
+    assert all(r["h"] == xxhash64(r["t"].encode()) for r in sdf.collect())
+    for t in strs:
+        term = spark.createDataFrame([(t,)], "term: string")
+        assert store.touched_buckets(term, "term") == [store.bucket_of_str(t)]

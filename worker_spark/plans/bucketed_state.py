@@ -100,25 +100,86 @@ def _rotl64(x: int, r: int) -> int:
     return ((x << r) | (x >> (64 - r))) & _M64
 
 
-def xxhash64_long(value: int, seed: int = 42) -> int:
-    """Spark's ``xxhash64`` of ONE LongType column, host-side (XXH64 of
-    the 8-byte little-endian value, Spark's default seed 42) — returns
-    the SIGNED 64-bit result, matching the SQL function. Verified
-    against the engine in tests/test_properties.py. Exists so writers
-    whose bucket key is a literal (the single-bucket journal/config
-    tables, key always 0) can compute their touched bucket without a
-    per-batch collect job over the journaled frame."""
-    h = (seed + _P64_5 + 8) & _M64
-    k1 = (value & _M64) * _P64_2 & _M64
-    k1 = _rotl64(k1, 31) * _P64_1 & _M64
-    h ^= k1
-    h = (_rotl64(h, 27) * _P64_1 + _P64_4) & _M64
+def _round(acc: int, lane: int) -> int:
+    return _rotl64((acc + lane * _P64_2) & _M64, 31) * _P64_1 & _M64
+
+
+def xxhash64(data: bytes, seed: int = 42) -> int:
+    """Spark's ``xxhash64`` host-side: XXH64 of ``data`` (the engine
+    hashes a string's UTF-8 bytes and a long's 8 little-endian bytes,
+    with its default seed 42) — returns the SIGNED 64-bit result,
+    matching the SQL function. Verified against the engine in
+    tests/test_properties.py. Exists so a writer or reader whose bucket
+    keys are known on the driver (constant journal keys, a query's own
+    terms) can compute their buckets without a collect job."""
+    n = len(data)
+    p = 0
+    if n >= 32:
+        v = [
+            (seed + _P64_1 + _P64_2) & _M64,
+            (seed + _P64_2) & _M64,
+            seed & _M64,
+            (seed - _P64_1) & _M64,
+        ]
+        while p + 32 <= n:
+            for i in range(4):
+                lane = int.from_bytes(data[p : p + 8], "little")
+                v[i] = _round(v[i], lane)
+                p += 8
+        h = (
+            _rotl64(v[0], 1) + _rotl64(v[1], 7)
+            + _rotl64(v[2], 12) + _rotl64(v[3], 18)
+        ) & _M64
+        for x in v:
+            h = ((h ^ _round(0, x)) * _P64_1 + _P64_4) & _M64
+    else:
+        h = (seed + _P64_5) & _M64
+    h = (h + n) & _M64
+    while p + 8 <= n:
+        h ^= _round(0, int.from_bytes(data[p : p + 8], "little"))
+        h = (_rotl64(h, 27) * _P64_1 + _P64_4) & _M64
+        p += 8
+    if p + 4 <= n:
+        h ^= int.from_bytes(data[p : p + 4], "little") * _P64_1 & _M64
+        h = (_rotl64(h, 23) * _P64_2 + _P64_3) & _M64
+        p += 4
+    for byte in data[p:]:
+        h ^= byte * _P64_5 & _M64
+        h = _rotl64(h, 11) * _P64_1 & _M64
     h ^= h >> 33
     h = h * _P64_2 & _M64
     h ^= h >> 29
     h = h * _P64_3 & _M64
     h ^= h >> 32
     return h - (1 << 64) if h >= (1 << 63) else h
+
+
+def xxhash64_long(value: int, seed: int = 42) -> int:
+    """Spark's ``xxhash64`` of ONE LongType column: the 8-byte
+    little-endian case of ``xxhash64`` (the engine's hashLong)."""
+    return xxhash64((value & _M64).to_bytes(8, "little"), seed)
+
+
+def local_frame(
+    spark: SparkSession, rows: list[tuple], schema: T.StructType
+) -> DataFrame:
+    """A small driver-side frame built inside the JVM: the rows become
+    one literal array that ``inline`` expands over a one-row range.
+    ``spark.createDataFrame(list)`` instead yields a Python RDD, and
+    every action that reads it starts Python-worker tasks to re-serialize
+    the rows. Columns come back nullable, as from any parquet read."""
+    structs = [
+        F.struct(
+            *[
+                F.lit(v).cast(f.dataType).alias(f.name)
+                for v, f in zip(row, schema.fields)
+            ]
+        )
+        for row in rows
+    ]
+    return spark.range(0, 1, 1, 1).select(
+        F.inline(F.array(*structs).cast(T.ArrayType(schema)))
+    )
 
 
 def tree_bytes(root: str) -> dict[str, tuple[int, float]]:
@@ -191,6 +252,12 @@ class BucketedParquetStateStore:
         ledger / config pattern, key always 0) this replaces the
         per-write touched-bucket collect over the whole frame."""
         return int(xxhash64_long(int(value))) % self.n_buckets
+
+    def bucket_of_str(self, value: str) -> int:
+        """``bucket_of`` for one literal string key, computed host-side
+        from its UTF-8 bytes — no job. The BM25 read side prunes the
+        postings to its query terms' buckets this way."""
+        return xxhash64(value.encode("utf-8")) % self.n_buckets
 
     # --- layout -----------------------------------------------------------
 
@@ -502,7 +569,7 @@ class BucketedParquetStateStore:
             if schema is None:
                 # genuinely never created (no schema witness either)
                 raise FileNotFoundError(self._table_dir(table))
-            return self.spark.createDataFrame([], schema=schema)
+            return local_frame(self.spark, [], schema)
         reader = self.spark.read
         if schema is not None:
             reader = reader.schema(schema)

@@ -51,19 +51,11 @@ def register(name: str, oracle: Optional[str], doc: str = ""):
 # pins the hashes, and tests/test_rotation_guard.py fails any change whose
 # query is not inside _DRIVER_WINDOW[:50].
 _DRIVER_WINDOW = [
-    # ---- Round-14 rotation. ----
-    # (a) Every query transitively CHANGED this round (verified by
-    # tools/query_hashes.py against the r13 close): exactly the 30
-    # streaming rows, all rehashed by the shared feed-staging cache
-    # (streaming/staging.py, VERDICT r13 item 1). The five event-source
-    # rows lead (they sat BELOW the r13 boundary, so they are also the
-    # stalest of the changed set — streaming_topk_window first, the
-    # six-round perf-watch row whose fix this change is).
-    "streaming_topk_window",
-    "streaming_event_window_counts",
-    "streaming_stateful_sessions",
-    "streaming_view_purchase_join",
-    "streaming_dedup_keys",
+    # ---- Bucketed-store rotation (after round 15). ----
+    # (a) Every query transitively CHANGED by the store's JVM-local
+    # empty-table read (plans/bucketed_state.local_frame): exactly
+    # these 23 streaming rows, verified by tools/query_hashes.py. They
+    # keep their round-14 relative order.
     "streaming_quantile_index",
     "streaming_theta_overlap",
     "streaming_mixture_ledger",
@@ -87,6 +79,19 @@ _DRIVER_WINDOW = [
     "streaming_heavy_hitters",
     "streaming_stratified_reservoir",
     "streaming_weighted_reservoir",
+    # ---- Round-14 rotation (remainder). ----
+    # (a) Every query transitively CHANGED in round 14 (verified by
+    # tools/query_hashes.py against the r13 close): the 30 streaming
+    # rows (23 of them now lead above), all rehashed by the shared
+    # feed-staging cache (streaming/staging.py, VERDICT r13 item 1). The
+    # five event-source rows lead (they sat BELOW the r13 boundary, so they are also the
+    # stalest of the changed set — streaming_topk_window first, the
+    # six-round perf-watch row whose fix this change is).
+    "streaming_topk_window",
+    "streaming_event_window_counts",
+    "streaming_stateful_sessions",
+    "streaming_view_purchase_join",
+    "streaming_dedup_keys",
     "streaming_cms_window_users",
     "streaming_hll_window_users",
     # (a continued) the r14 OPTIMIZATION round's own changed rows: the

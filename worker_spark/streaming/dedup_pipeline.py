@@ -52,6 +52,19 @@ from worker_spark.streaming.components_index import IncrementalComponentsIndex
 from worker_spark.streaming.exact_index import IncrementalExactIndex
 
 
+def _require_one_modulus(*stores: BucketedParquetStateStore) -> None:
+    """A pipeline hands one batch's bucket ids to every store it
+    maintains, which is only exact when they share one modulus. A store
+    keeps the modulus pinned at its creation, so a root whose stores
+    were created with different ``n_buckets`` fails here."""
+    moduli = sorted({s.n_buckets for s in stores})
+    if len(moduli) > 1:
+        raise ValueError(
+            f"pipeline stores have bucket moduli {moduli}; they must "
+            "share one modulus to reuse bucket ids"
+        )
+
+
 class StreamingDedupPipeline:
     """Two maintained structures composed behind one apply_batch."""
 
@@ -79,7 +92,7 @@ class StreamingDedupPipeline:
         # every sub-structure (r15 job-count discipline: the exact index
         # no longer re-reduces / re-derives them, and the components
         # index reuses the same bucket set — all stores share one
-        # modulus, asserted below). Checkpoints are lazy; the one
+        # modulus, checked below). Checkpoints are lazy; the one
         # doc_buckets collect materializes both.
         batch = last_wins(docs, [id_col]).localCheckpoint(eager=False)
         batch_ids = (
@@ -87,9 +100,7 @@ class StreamingDedupPipeline:
             .distinct()
             .localCheckpoint(eager=False)
         )
-        assert (
-            self.exact.store.n_buckets == self.components.store.n_buckets
-        ), "pipeline stores must share one bucket modulus to reuse bucket ids"
+        _require_one_modulus(self.exact.store, self.components.store)
         doc_buckets = self.exact.store.touched_buckets(batch_ids, "doc_id")
         self.exact.apply_batch(
             batch,
@@ -255,11 +266,9 @@ class StreamingNearDupPipeline:
         batch_ids = batch.select("doc_id").distinct().localCheckpoint(
             eager=False
         )
-        assert (
-            self.docstore.n_buckets
-            == self.minhash.store.n_buckets
-            == self.components.store.n_buckets
-        ), "pipeline stores must share one bucket modulus to reuse bucket ids"
+        _require_one_modulus(
+            self.docstore, self.minhash.store, self.components.store
+        )
         doc_buckets = self.docstore.touched_buckets(batch_ids, "doc_id")
         live = batch.filter(F.length(F.trim(F.col("text"))) > 0)
         # The text MERGE and the band/signature MERGE maintain DISJOINT
@@ -407,7 +416,7 @@ class StreamingSubstringPipeline:
         # discipline): one doc_buckets collect materializes batch and
         # batch_ids, and its bucket set serves the substring apply, the
         # manifest read-back AND the components relabel (one modulus
-        # across the pipeline's stores, asserted below)
+        # across the pipeline's stores, checked below)
         batch = last_wins(docs, [id_col]).select(
             F.col(id_col).cast("long").alias("doc_id"),
             F.col(text_col).alias("text"),
@@ -416,10 +425,7 @@ class StreamingSubstringPipeline:
             eager=False
         )
         st = self.substring.store
-        assert st.n_buckets == self.components.store.n_buckets, (
-            "pipeline stores must share one bucket modulus to reuse "
-            "bucket ids"
-        )
+        _require_one_modulus(st, self.components.store)
         fbuckets = st.touched_buckets(batch_ids, "doc_id")
         self.substring.apply_batch(
             batch,

@@ -75,7 +75,10 @@ from pyspark.sql.streaming import StreamingQuery
 
 from worker_spark.operators.retrieval import BM25_B, BM25_K1, bm25_term_score
 from worker_spark.operators.text import tokens
-from worker_spark.plans.bucketed_state import BucketedParquetStateStore
+from worker_spark.plans.bucketed_state import (
+    BucketedParquetStateStore,
+    local_frame,
+)
 
 POSTINGS_SCHEMA = T.StructType(
     [
@@ -91,6 +94,12 @@ DOCLEN_SCHEMA = T.StructType(
         # manifest: the distinct postings buckets this document's rows
         # occupy (sorted — deterministic state bytes)
         T.StructField("term_buckets", T.ArrayType(T.IntegerType()), False),
+    ]
+)
+QTERMS_SCHEMA = T.StructType(
+    [
+        T.StructField("query", T.StringType()),
+        T.StructField("term", T.StringType()),
     ]
 )
 
@@ -355,15 +364,13 @@ class IncrementalRetrievalIndex:
         because a term's posting rows all live in its one bucket."""
         from pyspark.sql import Window
 
-        qterms = self.spark.createDataFrame(
-            [
-                (q, t)
-                for q in queries
-                for t in dict.fromkeys(q.lower().split())
-            ],
-            "query string, term string",
-        )
-        qbuckets = self.store.touched_buckets(qterms, "term")
+        pairs = [
+            (q, t) for q in queries for t in dict.fromkeys(q.lower().split())
+        ]
+        # built in the JVM and bucketed on the driver: no probe job, and
+        # no Python-RDD scan for the scoring plan to re-run
+        qterms = local_frame(self.spark, pairs, QTERMS_SCHEMA)
+        qbuckets = sorted({self.store.bucket_of_str(t) for _, t in pairs})
         tf = self.postings(buckets=qbuckets)
         dl = self.doclen().select("doc_id", "dl")
         stats = dl.agg(
