@@ -1,8 +1,8 @@
 #!/usr/bin/env python3
 """Benchmark harness: runs the headline queries at $SPARK_GRAFT_SF_DIR
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE
-JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
-"calibration_s": ..., "queries": {name: sec, ...}, "sf": ...}.
+JSON line: {"queries": {name: sec, ...}, "metric": ..., "value": total_sec,
+"unit": "sec", "sf": ..., "calibration_s": ..., "queries_file": ...}.
 
 Each query is executed to completion (collect-to-count) after a shared
 session warmup; per-query wall time includes planning + execution.
@@ -1208,20 +1208,22 @@ def main() -> None:
     sf = os.path.basename(sf_dir.rstrip("/")).replace("sf", "")
     total = round(sum(timings.values()), 3)
     # The driver captures a bounded TAIL of stdout (the r3 record was once
-    # truncated mid-line by the per-anchor ratio dicts). Two rules: the
+    # truncated mid-line by the per-anchor ratio dicts). Three rules: the
     # stdout line carries the contract fields (metric/value/unit/queries/sf
     # — per-query times INCLUDED, per VERDICT r14 item 1) plus a few short
-    # summary scalars and is the LAST thing printed; the full record (every
-    # anchor's ratios, anchored totals, regression flags) goes to a file.
-    out = {
+    # summary scalars and is the LAST thing printed; the long per-query
+    # dict is serialized FIRST, so a truncated head never costs the
+    # contract scalars at the tail; the full record (every anchor's
+    # ratios, anchored totals, regression flags) goes to a file.
+    contract = {
         "metric": "headline_queries_total",
         "value": total,
         "unit": "sec",
-        "calibration_s": calibration_s,
-        "queries": timings,
         "sf": float(sf) if sf else None,
+        "calibration_s": calibration_s,
     }
-    full = dict(out)
+    out = {"queries": timings}
+    full = {"queries": timings, **contract}
     if abs((float(sf) if sf else 0) - 0.1) < 1e-9:
         # regression ratios vs prior-round anchors (only meaningful at the
         # anchor's scale factor); >1 = slower than that round. Compare
@@ -1295,7 +1297,7 @@ def main() -> None:
     for fname in (per_run, "BENCH_out.json"):
         with open(os.path.join(here, fname), "w") as f:
             json.dump(full, f, indent=1)
-    out["queries_file"] = per_run
+    out.update(contract, queries_file=per_run)
     line = json.dumps(out)
     # stop BEFORE the final print so no Spark shutdown chatter can land in
     # the driver's tail window after the JSON line

@@ -17,8 +17,8 @@ from worker_spark.operators.components import cluster_assignments
 from worker_spark.streaming.components_index import (
     FEED_SCHEMA,
     IncrementalComponentsIndex,
-    components_maintenance_stream,
 )
+from worker_spark.streaming.feed import file_feed_stream
 
 
 def _feed(spark, rows):
@@ -182,7 +182,7 @@ def test_stream_restart_resumes_from_checkpoint(spark, tmp_path):
     _stage_feed((b0,), str(feed_dir))
     idx = IncrementalComponentsIndex(spark, str(tmp_path / "x"))
     ckpt = str(tmp_path / "ckpt")
-    q = components_maintenance_stream(spark, str(feed_dir), idx, ckpt)
+    q = file_feed_stream(spark, str(feed_dir), idx, ckpt)
     assert q.awaitTermination(300)
     assert idx.labels().count() == 3
 
@@ -199,7 +199,7 @@ def test_stream_restart_resumes_from_checkpoint(spark, tmp_path):
         shutil.move(part, dst)
         shutil.rmtree(part_dir, ignore_errors=True)
         os.utime(dst, (now + i, now + i))
-    q2 = components_maintenance_stream(spark, str(feed_dir), idx, ckpt)
+    q2 = file_feed_stream(spark, str(feed_dir), idx, ckpt)
     assert q2.awaitTermination(300)
     assert _rows(idx.cluster_assignments()) == _rows(
         _batch_truth(spark, [(1, 2), (2, 3), (6, 7)])

@@ -307,9 +307,7 @@ def test_contamination_stream_restart_resumes_from_checkpoint(
     import os as _os
     import shutil
 
-    from worker_spark.streaming.contamination_index import (
-        contamination_maintenance_stream,
-    )
+    from worker_spark.streaming.feed import file_feed_stream
 
     ev, co = _fixture_split(spark, limit=120)
     feed = str(tmp_path / "feed")
@@ -335,13 +333,13 @@ def test_contamination_stream_restart_resumes_from_checkpoint(
         "b0",
     )
     scr = IncrementalContaminationScreen(spark, root, eval_docs=ev)
-    q = contamination_maintenance_stream(spark, feed, scr, ckpt)
+    q = file_feed_stream(spark, feed, scr, ckpt)
     assert q.awaitTermination(180)
 
     land(co.filter(F.col("doc_id") % 2 == 1), "b1")
     land(co.filter(stale & (F.col("doc_id") % 2 == 0)), "b2")
     reopened = IncrementalContaminationScreen(spark, root)
-    q2 = contamination_maintenance_stream(spark, feed, reopened, ckpt)
+    q2 = file_feed_stream(spark, feed, reopened, ckpt)
     assert q2.awaitTermination(180)
     assert _rows(reopened.decisions().select(
         "eval_id", "corpus_id", "n_shared", "contamination_rate"

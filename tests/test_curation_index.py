@@ -180,9 +180,7 @@ def test_curation_stream_restart_resumes_from_checkpoint(spark, tmp_path):
     import os as _os
     import shutil
 
-    from worker_spark.streaming.curation_index import (
-        curation_maintenance_stream,
-    )
+    from worker_spark.streaming.feed import file_feed_stream
 
     docs = _docs(spark).limit(240).localCheckpoint(eager=True)
     feed = str(tmp_path / "feed")
@@ -201,12 +199,12 @@ def test_curation_stream_restart_resumes_from_checkpoint(spark, tmp_path):
     idx = IncrementalCurationIndex(
         spark, root, lm_train_docs=docs, config=_cfg()
     )
-    q = curation_maintenance_stream(spark, feed, idx, ckpt)
+    q = file_feed_stream(spark, feed, idx, ckpt)
     assert q.awaitTermination(120)
 
     land(docs.filter(F.col("doc_id") % 2 == 1), "b1")
     reopened = IncrementalCurationIndex(spark, root)
-    q2 = curation_maintenance_stream(spark, feed, reopened, ckpt)
+    q2 = file_feed_stream(spark, feed, reopened, ckpt)
     assert q2.awaitTermination(120)
     assert _rows(reopened.decisions()) == _rows(idx.decide(docs))
 

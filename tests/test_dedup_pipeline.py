@@ -16,8 +16,8 @@ from worker_spark.streaming.dedup_pipeline import (
     StreamingDedupPipeline,
     StreamingNearDupPipeline,
     StreamingSubstringPipeline,
-    dedup_pipeline_stream,
 )
+from worker_spark.streaming.feed import file_feed_stream
 
 
 def _rows(df):
@@ -157,9 +157,7 @@ def test_pipeline_stream_end_to_end(spark, tmp_path):
     feed.mkdir()
     _stage_feed((b0, b1), str(feed))
     pipe = StreamingDedupPipeline(spark, str(tmp_path / "p"))
-    q = dedup_pipeline_stream(
-        spark, str(feed), pipe, str(tmp_path / "ckpt")
-    )
+    q = file_feed_stream(spark, str(feed), pipe, str(tmp_path / "ckpt"))
     assert q.awaitTermination(300)
     assert _rows(pipe.cluster_assignments()) == _rows(
         _exact_cluster_truth(spark, docs)

@@ -20,8 +20,8 @@ from worker_spark.sources import load_table
 from worker_spark.streaming.exact_index import (
     IncrementalExactIndex,
     _content_hashes,
-    exact_maintenance_stream,
 )
+from worker_spark.streaming.feed import file_feed_stream
 
 
 def _docs(spark):
@@ -192,7 +192,7 @@ def test_exact_stream_restart_resumes_from_checkpoint(spark, tmp_path):
     _stage_feed((b0,), str(feed))
     idx = IncrementalExactIndex(spark, str(tmp_path / "x"))
     ckpt = str(tmp_path / "ckpt")
-    q = exact_maintenance_stream(spark, str(feed), idx, ckpt)
+    q = file_feed_stream(spark, str(feed), idx, ckpt)
     assert q.awaitTermination(300)
     assert idx.fps().count() == b0.count()
 
@@ -209,7 +209,7 @@ def test_exact_stream_restart_resumes_from_checkpoint(spark, tmp_path):
         shutil.move(part, dst)
         shutil.rmtree(part_dir, ignore_errors=True)
         os.utime(dst, (now + i, now + i))
-    q2 = exact_maintenance_stream(spark, str(feed), idx, ckpt)
+    q2 = file_feed_stream(spark, str(feed), idx, ckpt)
     assert q2.awaitTermination(300)
     assert _rows(idx.fps()) == _rows(_content_hashes(docs))
 

@@ -15,10 +15,8 @@ from pyspark.sql import functions as F
 from tests.conftest import SF_ORACLE
 from worker_spark.operators.retrieval import bm25_topk, inverted_postings
 from worker_spark.sources import load_table
-from worker_spark.streaming.retrieval_index import (
-    IncrementalRetrievalIndex,
-    index_maintenance_stream,
-)
+from worker_spark.streaming.feed import file_feed_stream
+from worker_spark.streaming.retrieval_index import IncrementalRetrievalIndex
 
 QUERIES = ["hash join", "table scan fast", "sort merge"]
 
@@ -125,7 +123,7 @@ def test_merged_trigger_is_last_wins_through_the_stream(spark, tmp_path):
         shutil.rmtree(stage, ignore_errors=True)
         os.utime(dst, (now - 60 + i, now - 60 + i))
     idx = IncrementalRetrievalIndex(spark, str(tmp_path / "state"))
-    q = index_maintenance_stream(
+    q = file_feed_stream(
         spark,
         str(feed),
         idx,
@@ -214,10 +212,8 @@ def test_streamed_maintenance_matches_batch(spark, tmp_path):
     ):
         shutil.copy(part, f"{flat}/b{i}.parquet")
     idx = IncrementalRetrievalIndex(spark, str(tmp_path / "state"))
-    q = index_maintenance_stream(
-        spark, flat, idx, str(tmp_path / "ckpt"), available_now=True
-    )
-    q.awaitTermination(120)
+    q = file_feed_stream(spark, flat, idx, str(tmp_path / "ckpt"))
+    assert q.awaitTermination(120)
     assert _rows(idx.posting_lists(min_df=1)) == _rows(
         inverted_postings(docs, min_df=1)
     )
@@ -806,7 +802,7 @@ def test_stream_restart_resumes_from_checkpoint(spark, tmp_path):
     land(docs.filter(F.col("doc_id") % 2 == 0), "b0")
     idx = IncrementalRetrievalIndex(spark, str(tmp_path / "state"))
     ckpt = str(tmp_path / "ckpt")
-    q = index_maintenance_stream(spark, feed, idx, ckpt)
+    q = file_feed_stream(spark, feed, idx, ckpt)
     assert q.awaitTermination(120)
     n_after_first = idx.doclen().count()
     assert n_after_first == docs.filter(F.col("doc_id") % 2 == 0).count()
@@ -817,7 +813,7 @@ def test_stream_restart_resumes_from_checkpoint(spark, tmp_path):
     # but offsets make it cheap — assert the contract that matters:
     # exact convergence)
     land(docs.filter(F.col("doc_id") % 2 == 1), "b1")
-    q2 = index_maintenance_stream(spark, feed, idx, ckpt)
+    q2 = file_feed_stream(spark, feed, idx, ckpt)
     assert q2.awaitTermination(120)
     assert _rows(idx.posting_lists(min_df=1)) == _rows(
         inverted_postings(docs, min_df=1)

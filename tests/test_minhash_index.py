@@ -22,10 +22,10 @@ from worker_spark.operators.dedup import (
     minhash_signatures,
 )
 from worker_spark.sources import load_table
+from worker_spark.streaming.feed import file_feed_stream
 from worker_spark.streaming.minhash_index import (
     IncrementalMinHashIndex,
     _band_rows,
-    minhash_maintenance_stream,
 )
 
 
@@ -219,7 +219,7 @@ def test_minhash_stream_restart_resumes_from_checkpoint(spark, tmp_path):
     _stage_feed((b0,), str(feed))
     idx = IncrementalMinHashIndex(spark, str(tmp_path / "m"))
     ckpt = str(tmp_path / "ckpt")
-    q = minhash_maintenance_stream(spark, str(feed), idx, ckpt)
+    q = file_feed_stream(spark, str(feed), idx, ckpt)
     assert q.awaitTermination(300)
     assert idx.sigs().count() == b0.count()
 
@@ -238,7 +238,7 @@ def test_minhash_stream_restart_resumes_from_checkpoint(spark, tmp_path):
         shutil.move(part, dst)
         shutil.rmtree(part_dir, ignore_errors=True)
         os.utime(dst, (now + i, now + i))
-    q2 = minhash_maintenance_stream(spark, str(feed), idx, ckpt)
+    q2 = file_feed_stream(spark, str(feed), idx, ckpt)
     assert q2.awaitTermination(300)
     assert _rows(idx.sigs()) == _rows(_sig_frame(docs))
 

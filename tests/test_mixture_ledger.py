@@ -193,9 +193,7 @@ def test_mixture_stream_restart_resumes_from_checkpoint(spark, tmp_path):
     import os as _os
     import shutil
 
-    from worker_spark.streaming.mixture_ledger import (
-        mixture_maintenance_stream,
-    )
+    from worker_spark.streaming.feed import file_feed_stream
 
     docs = _docs(spark, limit=200)
     feed = str(tmp_path / "feed")
@@ -224,13 +222,13 @@ def test_mixture_stream_restart_resumes_from_checkpoint(spark, tmp_path):
     led = IncrementalMixtureLedger(
         spark, root, rates=_RATES, default_rate=_DEFAULT
     )
-    q = mixture_maintenance_stream(spark, feed, led, ckpt)
+    q = file_feed_stream(spark, feed, led, ckpt)
     assert q.awaitTermination(120)
 
     land(docs.filter(F.col("doc_id") % 2 == 1), "b1")
     land(docs.filter(stale & (F.col("doc_id") % 2 == 0)), "b2")
     reopened = IncrementalMixtureLedger(spark, root)
-    q2 = mixture_maintenance_stream(spark, feed, reopened, ckpt)
+    q2 = file_feed_stream(spark, feed, reopened, ckpt)
     assert q2.awaitTermination(120)
     assert _rows(reopened.report()) == _rows(_expected(docs))
     reopened.fsck()

@@ -193,9 +193,7 @@ def test_quantile_stream_restart_resumes_from_checkpoint(spark, tmp_path):
 
     from pyspark.sql import types as T
 
-    from worker_spark.streaming.quantile_index import (
-        quantile_maintenance_stream,
-    )
+    from worker_spark.streaming.feed import file_feed_stream
 
     e = _events(spark).limit(3000).localCheckpoint(eager=True)
     feed = str(tmp_path / "feed")
@@ -219,7 +217,7 @@ def test_quantile_stream_restart_resumes_from_checkpoint(spark, tmp_path):
     )
 
     def run_stream(idx):
-        return quantile_maintenance_stream(
+        return file_feed_stream(
             spark, feed, idx, ckpt, schema,
             group_col="event_type", key_col="event_id", value_col="value",
         )

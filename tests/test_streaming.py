@@ -6,6 +6,7 @@ from __future__ import annotations
 import datetime
 import json
 
+import pytest
 from pyspark.sql import functions as F
 
 from worker_spark.schemas import JOB_OUTBOX
@@ -44,7 +45,7 @@ def test_outbox_stream_incremental_consumption(spark, tmp_path):
         ckpt,
         available_now=True,
     )
-    q.awaitTermination(120)
+    assert q.awaitTermination(120)
     assert processed == [(1, "no:1")]  # batch_index row filtered out
 
     # second tick: only NEW files are consumed (checkpoint = offset cursor)
@@ -58,7 +59,7 @@ def test_outbox_stream_incremental_consumption(spark, tmp_path):
         ckpt,
         available_now=True,
     )
-    q2.awaitTermination(120)
+    assert q2.awaitTermination(120)
     assert processed == [(1, "no:1"), (3, "no:2")]
 
 
@@ -81,7 +82,7 @@ def test_queue_depth_stats_windowing(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    assert q.awaitTermination(120)
     rows = {
         (r["job_type"], r["window_start"]): r["n_jobs"]
         for r in spark.sql("select * from qdepth").collect()
@@ -185,7 +186,7 @@ def test_chained_fetch_store_stages(spark, tmp_path):
         ckpt,
         available_now=True,
     )
-    q.awaitTermination(180)
+    assert q.awaitTermination(180)
     assert store.read("articles").count() == 1
 
     # tick 2: a new job file; checkpoint skips the already-processed file,
@@ -205,7 +206,7 @@ def test_chained_fetch_store_stages(spark, tmp_path):
         ckpt,
         available_now=True,
     )
-    q2.awaitTermination(180)
+    assert q2.awaitTermination(180)
     got = {r["id"]: r["sync_status"] for r in store.read("articles").collect()}
     assert got == {1: "pending_index", 2: "pending_index"}
 
@@ -265,3 +266,71 @@ def test_stateful_session_timeout_flushes_idle_user(spark, tmp_path):
     }
     # user 1's session was flushed by TIMEOUT (no closing event ever came)
     assert (1, 2, 3.0) in rows
+
+
+def test_feed_schemas_keep_replay_column_order():
+    """feed.last_wins fingerprints to_json(struct(*cols)), so the column
+    order of each structure's FEED_SCHEMA is part of its replay
+    contract: a reorder would elect different winners on replay."""
+    from worker_spark.streaming.components_index import IncrementalComponentsIndex
+    from worker_spark.streaming.contamination_index import (
+        IncrementalContaminationScreen,
+    )
+    from worker_spark.streaming.curation_index import IncrementalCurationIndex
+    from worker_spark.streaming.dedup_index import IncrementalDedupIndex
+    from worker_spark.streaming.dedup_pipeline import (
+        StreamingDedupPipeline,
+        StreamingNearDupPipeline,
+        StreamingSubstringPipeline,
+    )
+    from worker_spark.streaming.exact_index import IncrementalExactIndex
+    from worker_spark.streaming.heavy_hitters import StreamingHeavyHitters
+    from worker_spark.streaming.ingest_gate import StreamingIngestGate
+    from worker_spark.streaming.minhash_index import IncrementalMinHashIndex
+    from worker_spark.streaming.mixture_ledger import IncrementalMixtureLedger
+    from worker_spark.streaming.reservoir import (
+        StreamingReservoir,
+        StreamingStratifiedReservoir,
+    )
+    from worker_spark.streaming.retrieval_index import IncrementalRetrievalIndex
+    from worker_spark.streaming.substring_index import IncrementalSubstringIndex
+    from worker_spark.streaming.vector_index import IncrementalVectorIndex
+
+    doc = ["doc_id:bigint", "text:string"]
+    expected = {
+        IncrementalComponentsIndex: ["doc_id:bigint", "nbr:bigint"],
+        IncrementalContaminationScreen: doc,
+        IncrementalCurationIndex: doc,
+        IncrementalDedupIndex: doc,
+        StreamingDedupPipeline: doc,
+        StreamingNearDupPipeline: doc,
+        StreamingSubstringPipeline: doc,
+        IncrementalExactIndex: doc,
+        StreamingHeavyHitters: doc,
+        StreamingIngestGate: doc,
+        IncrementalMinHashIndex: doc,
+        IncrementalMixtureLedger: [
+            "doc_id:bigint", "stratum:string", "text:string"
+        ],
+        StreamingReservoir: doc,
+        StreamingStratifiedReservoir: [
+            "doc_id:bigint", "text:string", "stratum:string"
+        ],
+        IncrementalRetrievalIndex: doc,
+        IncrementalSubstringIndex: doc,
+        IncrementalVectorIndex: ["vec_id:bigint", "embedding:array<float>"],
+    }
+    for cls, cols in expected.items():
+        got = [f"{f.name}:{f.dataType.simpleString()}" for f in cls.FEED_SCHEMA]
+        assert got == cols, cls.__name__
+
+
+def test_file_feed_stream_needs_a_schema_for_caller_named_columns():
+    """Quantile, theta and z-order read caller-named columns, so they
+    carry no FEED_SCHEMA and the stream refuses to start without one."""
+    from worker_spark.streaming.feed import file_feed_stream
+    from worker_spark.streaming.quantile_index import IncrementalQuantileIndex
+
+    idx = IncrementalQuantileIndex.__new__(IncrementalQuantileIndex)
+    with pytest.raises(ValueError, match="FEED_SCHEMA"):
+        file_feed_stream(None, "feed", idx, "ckpt")

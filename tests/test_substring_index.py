@@ -23,10 +23,8 @@ from worker_spark.operators.substrings import (
     winnow_fingerprints,
 )
 from worker_spark.sources import load_table
-from worker_spark.streaming.substring_index import (
-    IncrementalSubstringIndex,
-    substring_maintenance_stream,
-)
+from worker_spark.streaming.feed import file_feed_stream
+from worker_spark.streaming.substring_index import IncrementalSubstringIndex
 
 
 def _docs(spark):
@@ -229,7 +227,7 @@ def test_substring_stream_restart_resumes_from_checkpoint(spark, tmp_path):
     _stage_feed((b0,), str(feed))
     idx = IncrementalSubstringIndex(spark, str(tmp_path / "x"))
     ckpt = str(tmp_path / "ckpt")
-    q = substring_maintenance_stream(spark, str(feed), idx, ckpt)
+    q = file_feed_stream(spark, str(feed), idx, ckpt)
     assert q.awaitTermination(300)
     assert idx.doclens().count() == b0.count()
 
@@ -246,7 +244,7 @@ def test_substring_stream_restart_resumes_from_checkpoint(spark, tmp_path):
         shutil.move(part, dst)
         shutil.rmtree(part_dir, ignore_errors=True)
         os.utime(dst, (now + i, now + i))
-    q2 = substring_maintenance_stream(spark, str(feed), idx, ckpt)
+    q2 = file_feed_stream(spark, str(feed), idx, ckpt)
     assert q2.awaitTermination(300)
     assert _rows(idx.fps().select("doc_id", "fhash", "pos")) == _rows(
         winnow_fingerprints(docs).select("doc_id", "fhash", "pos")

@@ -152,7 +152,7 @@ def test_theta_stream_restart_resumes_from_checkpoint(spark, tmp_path):
 
     from pyspark.sql import types as T
 
-    from worker_spark.streaming.theta_index import theta_maintenance_stream
+    from worker_spark.streaming.feed import file_feed_stream
 
     e = _events(spark).limit(4000).localCheckpoint(eager=True)
     feed = str(tmp_path / "feed")
@@ -175,7 +175,7 @@ def test_theta_stream_restart_resumes_from_checkpoint(spark, tmp_path):
     )
 
     def run_stream(idx):
-        return theta_maintenance_stream(
+        return file_feed_stream(
             spark, feed, idx, ckpt, schema,
             group_col="event_type", value_col="user_id",
         )

@@ -281,9 +281,7 @@ def test_vector_stream_restart_resumes_from_checkpoint(spark, tmp_path):
     import glob
     import shutil
 
-    from worker_spark.streaming.vector_index import (
-        vector_maintenance_stream,
-    )
+    from worker_spark.streaming.feed import file_feed_stream
 
     emb = _emb(spark).limit(240).localCheckpoint(eager=True)
     cents = emb.filter(F.col("vec_id") % 50 == 0)
@@ -300,11 +298,11 @@ def test_vector_stream_restart_resumes_from_checkpoint(spark, tmp_path):
     land(emb.filter(F.col("vec_id") % 2 == 0), "b0")
     idx = IncrementalVectorIndex(spark, str(tmp_path / "v"), centroids=cents)
     ckpt = str(tmp_path / "ckpt")
-    q = vector_maintenance_stream(spark, feed, idx, ckpt)
+    q = file_feed_stream(spark, feed, idx, ckpt)
     assert q.awaitTermination(120)
 
     land(emb.filter(F.col("vec_id") % 2 == 1), "b1")
-    q2 = vector_maintenance_stream(spark, feed, idx, ckpt)
+    q2 = file_feed_stream(spark, feed, idx, ckpt)
     assert q2.awaitTermination(120)
     assert _rows(idx.cells().select("vec_id", "cell_id")) == _rows(
         ivf_assign(emb, cents)

@@ -181,7 +181,7 @@ def test_zorder_stream_restart_resumes_from_checkpoint(spark, tmp_path):
 
     from pyspark.sql import types as T
 
-    from worker_spark.streaming.zorder_index import zorder_maintenance_stream
+    from worker_spark.streaming.feed import file_feed_stream
 
     e = _events(spark, limit=3000)
     feed = str(tmp_path / "feed")
@@ -207,7 +207,7 @@ def test_zorder_stream_restart_resumes_from_checkpoint(spark, tmp_path):
     )
 
     def run_stream(idx):
-        return zorder_maintenance_stream(
+        return file_feed_stream(
             spark, feed, idx, ckpt, schema,
             id_col="event_id", v1_col="v1", v2_col="v2",
         )

@@ -14,6 +14,7 @@ from __future__ import annotations
 import os
 import tempfile
 import uuid
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -797,6 +798,36 @@ def _stage_feed(batches, feed_dir: str) -> None:
         os.utime(dst, (now - 180 + 60 * i, now - 180 + 60 * i))
 
 
+@contextmanager
+def _maintained(spark, row: str, feed: str, build, **stream_kwargs):
+    """The one drive path of the maintained-structure rows: make the
+    structure with ``build(state_root)``, drain ``feed`` into it through
+    feed.file_feed_stream (``stream_kwargs``: schema and apply_batch
+    column names), and hand the drained structure to the block.
+    Checkpoint and state share one scratch dir, removed on exit, so the
+    block must ``localCheckpoint(eager=True)`` what it serves. A row
+    whose lifecycle needs a second root (recluster, retrain) puts it
+    beside the state root, in the same scratch dir."""
+    import shutil
+
+    from worker_spark.streaming.feed import file_feed_stream
+
+    scratch = tempfile.mkdtemp(prefix=f"{row}_")
+    try:
+        state = os.path.join(scratch, "state")
+        os.mkdir(state)
+        structure = build(state)
+        q = file_feed_stream(
+            spark, feed, structure, os.path.join(scratch, "ckpt"), **stream_kwargs
+        )
+        if not q.awaitTermination(300):
+            q.stop()
+            raise TimeoutError(f"{row}: availableNow drain exceeded 300s")
+        yield structure
+    finally:
+        shutil.rmtree(scratch, ignore_errors=True)
+
+
 # the literal query strings this row scores over the streamed v1
 # documents corpus (previously retrievalq._BM25_QUERIES; the batch v1
 # BM25 row was retired in r9, so the constant lives with its one
@@ -832,13 +863,7 @@ def _index_bm25_oracle() -> str:
     "update path replaced every stale posting.",
 )
 def q_streaming_index_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import shutil
-
-    from worker_spark.streaming.retrieval_index import (
-        IncrementalRetrievalIndex,
-        index_maintenance_stream,
-    )
+    from worker_spark.streaming.retrieval_index import IncrementalRetrievalIndex
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     # Two-file feed (corrections ride in the second file — see
@@ -862,25 +887,18 @@ def q_streaming_index_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
     feed = staged_dir(
         sf_dir, "docs_s10", lambda d: _stage_feed((b0, b1.unionByName(b2)), d)
     )
-    ckpt = tempfile.mkdtemp(prefix="idx_ckpt_")
-    state = tempfile.mkdtemp(prefix="idx_state_")
-    try:
-        idx = IncrementalRetrievalIndex(spark, state)
-        q = index_maintenance_stream(spark, feed, idx, ckpt)
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError(
-                "streaming_index_bm25: availableNow drain exceeded 300s"
-            )
+    with _maintained(
+        spark,
+        "streaming_index_bm25",
+        feed,
+        lambda state: IncrementalRetrievalIndex(spark, state),
+    ) as idx:
         return idx.bm25_topk(list(_INDEX_QUERIES), k=10).localCheckpoint(
             eager=True
         )
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
-        shutil.rmtree(state, ignore_errors=True)
 
 
-def _ivf_maintained_index(spark, emb, sf_dir: str, ckpt: str, state: str, row_name: str):
+def _ivf_maintained_index(spark, emb, sf_dir: str, row_name: str):
     """Build the maintained IVF index through the shared two-file
     stale-negated feed — batch 0 the even vectors with NEGATED drafts
     for vec_id%10==0 (same cell geometry flipped, a genuinely different
@@ -889,11 +907,9 @@ def _ivf_maintained_index(spark, emb, sf_dir: str, ckpt: str, state: str, row_na
     definition of the recipe for the streaming_ivf_ann,
     streaming_ivf_recluster and streaming_semdedup_prune rows (review
     finding: verbatim copies; the _stage_feed extraction set the
-    precedent) — which also means one SHARED staged feed (emb_ivf)."""
-    from worker_spark.streaming.vector_index import (
-        IncrementalVectorIndex,
-        vector_maintenance_stream,
-    )
+    precedent) — which also means one SHARED staged feed (emb_ivf).
+    Returns the _maintained context that yields the drained index."""
+    from worker_spark.streaming.vector_index import IncrementalVectorIndex
 
     stale = F.col("vec_id") % 10 == 0
     negated = F.expr("transform(embedding, x -> cast(-x as float))")
@@ -906,14 +922,14 @@ def _ivf_maintained_index(spark, emb, sf_dir: str, ckpt: str, state: str, row_na
     feed = staged_dir(
         sf_dir, "emb_ivf", lambda d: _stage_feed((b0, b1.unionByName(b2)), d)
     )
-    idx = IncrementalVectorIndex(
-        spark, state, centroids=emb.filter(F.col("vec_id") % 100 == 0)
+    return _maintained(
+        spark,
+        row_name,
+        feed,
+        lambda state: IncrementalVectorIndex(
+            spark, state, centroids=emb.filter(F.col("vec_id") % 100 == 0)
+        ),
     )
-    q = vector_maintenance_stream(spark, feed, idx, ckpt)
-    if not q.awaitTermination(300):
-        q.stop()
-        raise TimeoutError(f"{row_name}: availableNow drain exceeded 300s")
-    return idx
 
 
 def _streaming_ivf_oracle() -> str:
@@ -945,24 +961,14 @@ def _streaming_ivf_oracle() -> str:
     "streaming_index_bm25.",
 )
 def q_streaming_ivf_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", "embedding"
     )
-    ckpt = tempfile.mkdtemp(prefix="vidx_ckpt_")
-    state = tempfile.mkdtemp(prefix="vidx_state_")
-    try:
-        idx = _ivf_maintained_index(
-            spark, emb, sf_dir, ckpt, state, "streaming_ivf_ann"
-        )
+    with _ivf_maintained_index(spark, emb, sf_dir, "streaming_ivf_ann") as idx:
         queries = emb.filter(F.col("vec_id") % 20 == 0)
         return idx.ann_topk(queries, nprobe=2, top_k=5).localCheckpoint(
             eager=True
         )
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
-        shutil.rmtree(state, ignore_errors=True)
 
 
 def _streaming_ivf_recluster_oracle() -> str:
@@ -992,38 +998,28 @@ def _streaming_ivf_recluster_oracle() -> str:
     "oracle at the new stride — retrain equals rebuild, bit for bit.",
 )
 def q_streaming_ivf_recluster(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import shutil
-
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", "embedding"
     )
-    ckpt = tempfile.mkdtemp(prefix="rcl_ckpt_")
-    state = tempfile.mkdtemp(prefix="rcl_state_")
-    state2 = tempfile.mkdtemp(prefix="rcl_state2_")
-    try:
-        idx = _ivf_maintained_index(
-            spark, emb, sf_dir, ckpt, state, "streaming_ivf_recluster"
-        )
+    with _ivf_maintained_index(
+        spark, emb, sf_dir, "streaming_ivf_recluster"
+    ) as idx:
         # retrain: medoids drawn from the MAINTAINED state at half the
         # stride (recluster refuses a non-empty target root, so give it
-        # a fresh dir under the pre-made tempdir)
+        # a fresh dir beside the maintained root)
         new_cents = (
             idx.cells()
             .select("vec_id", "embedding")
             .filter(F.col("vec_id") % 50 == 0)
         )
         new_idx = idx.recluster(
-            os.path.join(state2, "root"), new_centroids=new_cents
+            os.path.join(os.path.dirname(idx.store.root), "reclustered"),
+            new_centroids=new_cents,
         )
         queries = emb.filter(F.col("vec_id") % 20 == 0)
         return new_idx.ann_topk(queries, nprobe=2, top_k=5).localCheckpoint(
             eager=True
         )
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
-        shutil.rmtree(state, ignore_errors=True)
-        shutil.rmtree(state2, ignore_errors=True)
 
 
 def _streaming_dedup_oracle() -> str:
@@ -1055,13 +1051,7 @@ def _streaming_dedup_oracle() -> str:
     "fingerprint index).",
 )
 def q_streaming_dedup_index(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import shutil
-
-    from worker_spark.streaming.dedup_index import (
-        IncrementalDedupIndex,
-        dedup_maintenance_stream,
-    )
+    from worker_spark.streaming.dedup_index import IncrementalDedupIndex
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     hist = docs.filter(F.col("doc_id") % 10 < 8)
@@ -1087,23 +1077,16 @@ def q_streaming_dedup_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         "docs_hist_s7",
         lambda d: _stage_feed((b0, b1.unionByName(b2)), d),
     )
-    ckpt = tempfile.mkdtemp(prefix="didx_ckpt_")
-    state = tempfile.mkdtemp(prefix="didx_state_")
-    try:
-        idx = IncrementalDedupIndex(spark, state)
-        q = dedup_maintenance_stream(spark, feed, idx, ckpt)
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError(
-                "streaming_dedup_index: availableNow drain exceeded 300s"
-            )
+    with _maintained(
+        spark,
+        "streaming_dedup_index",
+        feed,
+        lambda state: IncrementalDedupIndex(spark, state),
+    ) as idx:
         new = docs.filter(F.col("doc_id") % 10 >= 8)
         return idx.screen_batch(new, max_hamming=3).localCheckpoint(
             eager=True
         )
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
-        shutil.rmtree(state, ignore_errors=True)
 
 
 def _streaming_exact_oracle() -> str:
@@ -1136,12 +1119,7 @@ def _streaming_exact_oracle() -> str:
     "SimHash + MinHash).",
 )
 def q_streaming_exact_index(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-
-    from worker_spark.streaming.exact_index import (
-        IncrementalExactIndex,
-        exact_maintenance_stream,
-    )
+    from worker_spark.streaming.exact_index import IncrementalExactIndex
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     # Two-file feed (corrections ride in the second file — see
@@ -1166,20 +1144,13 @@ def q_streaming_exact_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     feed = staged_dir(
         sf_dir, "docs_s7", lambda d: _stage_feed((b0, b1.unionByName(b2)), d)
     )
-    ckpt = tempfile.mkdtemp(prefix="xidx_ckpt_")
-    state = tempfile.mkdtemp(prefix="xidx_state_")
-    try:
-        idx = IncrementalExactIndex(spark, state)
-        q = exact_maintenance_stream(spark, feed, idx, ckpt)
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError(
-                "streaming_exact_index: availableNow drain exceeded 300s"
-            )
+    with _maintained(
+        spark,
+        "streaming_exact_index",
+        feed,
+        lambda state: IncrementalExactIndex(spark, state),
+    ) as idx:
         return idx.dedup_clusters().localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
-        shutil.rmtree(state, ignore_errors=True)
 
 
 def _streaming_minhash_oracle() -> str:
@@ -1216,12 +1187,7 @@ def _streaming_minhash_oracle() -> str:
     "streaming_dedup_index.",
 )
 def q_streaming_minhash_index(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-
-    from worker_spark.streaming.minhash_index import (
-        IncrementalMinHashIndex,
-        minhash_maintenance_stream,
-    )
+    from worker_spark.streaming.minhash_index import IncrementalMinHashIndex
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     # Two-file feed (corrections ride in the second file — see
@@ -1246,22 +1212,15 @@ def q_streaming_minhash_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     feed = staged_dir(
         sf_dir, "docs_s7", lambda d: _stage_feed((b0, b1.unionByName(b2)), d)
     )
-    ckpt = tempfile.mkdtemp(prefix="midx_ckpt_")
-    state = tempfile.mkdtemp(prefix="midx_state_")
-    try:
-        idx = IncrementalMinHashIndex(spark, state)
-        q = minhash_maintenance_stream(spark, feed, idx, ckpt)
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError(
-                "streaming_minhash_index: availableNow drain exceeded 300s"
-            )
+    with _maintained(
+        spark,
+        "streaming_minhash_index",
+        feed,
+        lambda state: IncrementalMinHashIndex(spark, state),
+    ) as idx:
         return idx.dedup_pairs(docs, threshold=0.5).localCheckpoint(
             eager=True
         )
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
-        shutil.rmtree(state, ignore_errors=True)
 
 
 def _streaming_curation_oracle() -> str:
@@ -1294,8 +1253,6 @@ def _streaming_curation_oracle() -> str:
     "exactly.",
 )
 def q_streaming_curation_index(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-
     from worker_spark.queries.textops import (
         _GOPHER_MIN_WORDS,
         _GOPHER_SW,
@@ -1310,7 +1267,6 @@ def q_streaming_curation_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     from worker_spark.streaming.curation_index import (
         CurationConfig,
         IncrementalCurationIndex,
-        curation_maintenance_stream,
     )
 
     d = documents_v2_lang(spark, sf_dir)
@@ -1337,10 +1293,11 @@ def q_streaming_curation_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         "docsv2lang_s10",
         lambda d: _stage_feed((b0, b1.unionByName(b2)), d),
     )
-    ckpt = tempfile.mkdtemp(prefix="cidx_ckpt_")
-    state = tempfile.mkdtemp(prefix="cidx_state_")
-    try:
-        idx = IncrementalCurationIndex(
+    with _maintained(
+        spark,
+        "streaming_curation_index",
+        feed,
+        lambda state: IncrementalCurationIndex(
             spark,
             state,
             lm_train_docs=docs,  # the offline LM-training corpus
@@ -1354,13 +1311,8 @@ def q_streaming_curation_index(spark: SparkSession, sf_dir: str) -> DataFrame:
                 gopher_stopwords=_GOPHER_SW,
                 gopher_min_sw_hits=GOPHER_MIN_STOPWORD_HITS,
             ),
-        )
-        q = curation_maintenance_stream(spark, feed, idx, ckpt)
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError(
-                "streaming_curation_index: availableNow drain exceeded 300s"
-            )
+        ),
+    ) as idx:
         # true_lang is fixture metadata (not text-derived state) — the
         # serve-side enrichment join that makes the batch oracle apply
         # verbatim
@@ -1381,9 +1333,6 @@ def q_streaming_curation_index(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
-        shutil.rmtree(state, ignore_errors=True)
 
 
 def _streaming_reservoir_oracle() -> str:
@@ -1413,12 +1362,7 @@ def _streaming_reservoir_oracle() -> str:
     "the streamed reservoir must equal the batch sample exactly.",
 )
 def q_streaming_weighted_reservoir(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-
-    from worker_spark.streaming.reservoir import (
-        StreamingReservoir,
-        reservoir_maintenance_stream,
-    )
+    from worker_spark.streaming.reservoir import StreamingReservoir
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     # Two-file feed (corrections ride in the second file — see
@@ -1441,21 +1385,13 @@ def q_streaming_weighted_reservoir(spark: SparkSession, sf_dir: str) -> DataFram
     feed = staged_dir(
         sf_dir, "docs_s10", lambda d: _stage_feed((b0, b1.unionByName(b2)), d)
     )
-    ckpt = tempfile.mkdtemp(prefix="resv_ckpt_")
-    state = tempfile.mkdtemp(prefix="resv_state_")
-    try:
-        res = StreamingReservoir(spark, state)
-        q = reservoir_maintenance_stream(spark, feed, res, ckpt)
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError(
-                "streaming_weighted_reservoir: availableNow drain "
-                "exceeded 300s"
-            )
+    with _maintained(
+        spark,
+        "streaming_weighted_reservoir",
+        feed,
+        lambda state: StreamingReservoir(spark, state),
+    ) as res:
         return res.reservoir().localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
-        shutil.rmtree(state, ignore_errors=True)
 
 
 def _mg_heavy_hitters_oracle() -> str:
@@ -1525,12 +1461,7 @@ def _mg_heavy_hitters_oracle() -> str:
     "would need evicted history; corrections are a rebuild.",
 )
 def q_streaming_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-
-    from worker_spark.streaming.heavy_hitters import (
-        StreamingHeavyHitters,
-        heavy_hitter_maintenance_stream,
-    )
+    from worker_spark.streaming.heavy_hitters import StreamingHeavyHitters
 
     from worker_spark.sources.synth_corpus import documents_v2
 
@@ -1540,20 +1471,13 @@ def q_streaming_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     feed = staged_dir(
         sf_dir, "docsv2_evenodd", lambda d: _stage_feed((b0, b1), d)
     )
-    ckpt = tempfile.mkdtemp(prefix="mg_ckpt_")
-    state = tempfile.mkdtemp(prefix="mg_state_")
-    try:
-        hh = StreamingHeavyHitters(spark, state)
-        q = heavy_hitter_maintenance_stream(spark, feed, hh, ckpt)
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError(
-                "streaming_heavy_hitters: availableNow drain exceeded 300s"
-            )
+    with _maintained(
+        spark,
+        "streaming_heavy_hitters",
+        feed,
+        lambda state: StreamingHeavyHitters(spark, state),
+    ) as hh:
         return hh.counters().localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
-        shutil.rmtree(state, ignore_errors=True)
 
 
 def _strat_reservoir_oracle() -> str:
@@ -1603,12 +1527,7 @@ def _strat_reservoir_oracle() -> str:
 def q_streaming_stratified_reservoir(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    import shutil
-
-    from worker_spark.streaming.reservoir import (
-        StreamingStratifiedReservoir,
-        stratified_reservoir_maintenance_stream,
-    )
+    from worker_spark.streaming.reservoir import StreamingStratifiedReservoir
 
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "text", F.col("lang").alias("stratum")
@@ -1628,21 +1547,13 @@ def q_streaming_stratified_reservoir(
         "docs_strat_s10",
         lambda d: _stage_feed((b0, b1.unionByName(b2)), d),
     )
-    ckpt = tempfile.mkdtemp(prefix="sresv_ckpt_")
-    state = tempfile.mkdtemp(prefix="sresv_state_")
-    try:
-        res = StreamingStratifiedReservoir(spark, state, k=20)
-        q = stratified_reservoir_maintenance_stream(spark, feed, res, ckpt)
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError(
-                "streaming_stratified_reservoir: availableNow drain "
-                "exceeded 300s"
-            )
+    with _maintained(
+        spark,
+        "streaming_stratified_reservoir",
+        feed,
+        lambda state: StreamingStratifiedReservoir(spark, state, k=20),
+    ) as res:
         return res.reservoirs().localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
-        shutil.rmtree(state, ignore_errors=True)
 
 
 def _streaming_substring_oracle() -> str:
@@ -1677,13 +1588,8 @@ def _streaming_substring_oracle() -> str:
     "oracle (doc_substring_dedup_report_v2).",
 )
 def q_streaming_substring_index(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-
     from worker_spark.sources.synth_corpus import documents_v2_substr
-    from worker_spark.streaming.substring_index import (
-        IncrementalSubstringIndex,
-        substring_maintenance_stream,
-    )
+    from worker_spark.streaming.substring_index import IncrementalSubstringIndex
 
     docs = documents_v2_substr(spark, sf_dir).select("doc_id", "text")
     # Two-file feed (corrections ride in the second file — see
@@ -1711,20 +1617,13 @@ def q_streaming_substring_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         "docsv2substr_s7",
         lambda d: _stage_feed((b0, b1.unionByName(b2)), d),
     )
-    ckpt = tempfile.mkdtemp(prefix="subidx_ckpt_")
-    state = tempfile.mkdtemp(prefix="subidx_state_")
-    try:
-        idx = IncrementalSubstringIndex(spark, state)
-        q = substring_maintenance_stream(spark, feed, idx, ckpt)
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError(
-                "streaming_substring_index: availableNow drain exceeded 300s"
-            )
+    with _maintained(
+        spark,
+        "streaming_substring_index",
+        feed,
+        lambda state: IncrementalSubstringIndex(spark, state),
+    ) as idx:
         return idx.dedup_report().localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
-        shutil.rmtree(state, ignore_errors=True)
 
 
 def _streaming_components_oracle() -> str:
@@ -1759,17 +1658,12 @@ def _streaming_components_oracle() -> str:
     "dedup_cluster_components_v2 oracle.",
 )
 def q_streaming_components_index(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-
     from pyspark.sql import Window
 
     from worker_spark.operators import dedup as D
     from worker_spark.queries.dedupq import _NGRAM_DF_CAP
     from worker_spark.sources.synth_corpus import documents_v2_dupes
-    from worker_spark.streaming.components_index import (
-        IncrementalComponentsIndex,
-        components_maintenance_stream,
-    )
+    from worker_spark.streaming.components_index import IncrementalComponentsIndex
 
     def _build(d: str) -> None:
         # the candidate-pair generation (the screening indexes' output
@@ -1851,20 +1745,13 @@ def q_streaming_components_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         _stage_feed((b0, b1.unionByName(b2)), d)
 
     feed = staged_dir(sf_dir, "comp_pairs_s7", _build)
-    ckpt = tempfile.mkdtemp(prefix="cidx_ckpt_")
-    state = tempfile.mkdtemp(prefix="cidx_state_")
-    try:
-        idx = IncrementalComponentsIndex(spark, state)
-        q = components_maintenance_stream(spark, feed, idx, ckpt)
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError(
-                "streaming_components_index: availableNow drain exceeded 300s"
-            )
+    with _maintained(
+        spark,
+        "streaming_components_index",
+        feed,
+        lambda state: IncrementalComponentsIndex(spark, state),
+    ) as idx:
         return idx.cluster_assignments().localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
-        shutil.rmtree(state, ignore_errors=True)
 
 
 def _streaming_pipeline_oracle() -> str:
@@ -1914,13 +1801,8 @@ def _streaming_pipeline_oracle() -> str:
     "(SimHash/MinHash/substring) plugs into the same seam.",
 )
 def q_streaming_dedup_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-
     from worker_spark.sources.synth_corpus import documents_v2_dupes
-    from worker_spark.streaming.dedup_pipeline import (
-        StreamingDedupPipeline,
-        dedup_pipeline_stream,
-    )
+    from worker_spark.streaming.dedup_pipeline import StreamingDedupPipeline
 
     docs = documents_v2_dupes(spark, sf_dir, exact=True).select(
         "doc_id", "text"
@@ -1939,20 +1821,13 @@ def q_streaming_dedup_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         "docsv2dupes_exact_s7",
         lambda d: _stage_feed((b0, b1.unionByName(b2)), d),
     )
-    ckpt = tempfile.mkdtemp(prefix="dpipe_ckpt_")
-    state = tempfile.mkdtemp(prefix="dpipe_state_")
-    try:
-        pipe = StreamingDedupPipeline(spark, state)
-        q = dedup_pipeline_stream(spark, feed, pipe, ckpt)
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError(
-                "streaming_dedup_pipeline: availableNow drain exceeded 300s"
-            )
+    with _maintained(
+        spark,
+        "streaming_dedup_pipeline",
+        feed,
+        lambda state: StreamingDedupPipeline(spark, state),
+    ) as pipe:
         return pipe.cluster_assignments().localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
-        shutil.rmtree(state, ignore_errors=True)
 
 
 def _streaming_neardup_oracle() -> str:
@@ -2028,13 +1903,8 @@ def _streaming_neardup_oracle() -> str:
     "near-dup corpus.",
 )
 def q_streaming_neardup_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-
     from worker_spark.sources.synth_corpus import documents_v2_dupes
-    from worker_spark.streaming.dedup_pipeline import (
-        StreamingNearDupPipeline,
-        dedup_pipeline_stream,
-    )
+    from worker_spark.streaming.dedup_pipeline import StreamingNearDupPipeline
 
     docs = documents_v2_dupes(spark, sf_dir, exact=False).select(
         "doc_id", "text"
@@ -2053,22 +1923,13 @@ def q_streaming_neardup_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         "docsv2dupes_near_s7",
         lambda d: _stage_feed((b0, b1.unionByName(b2)), d),
     )
-    ckpt = tempfile.mkdtemp(prefix="ndpipe_ckpt_")
-    state = tempfile.mkdtemp(prefix="ndpipe_state_")
-    try:
-        pipe = StreamingNearDupPipeline(spark, state, threshold=0.5)
-        q = dedup_pipeline_stream(
-            spark, feed, pipe, ckpt, checkpoint_name="ndpipe"
-        )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError(
-                "streaming_neardup_pipeline: availableNow drain exceeded 300s"
-            )
+    with _maintained(
+        spark,
+        "streaming_neardup_pipeline",
+        feed,
+        lambda state: StreamingNearDupPipeline(spark, state, threshold=0.5),
+    ) as pipe:
         return pipe.cluster_assignments().localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
-        shutil.rmtree(state, ignore_errors=True)
 
 
 def _streaming_semdedup_oracle() -> str:
@@ -2098,25 +1959,17 @@ def _streaming_semdedup_oracle() -> str:
     "maintain -> monitor -> retrain -> serve lifecycle.",
 )
 def q_streaming_semdedup_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-
     from worker_spark.operators import similarity as S
 
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", "embedding"
     )
-    ckpt = tempfile.mkdtemp(prefix="sdp_ckpt_")
-    state = tempfile.mkdtemp(prefix="sdp_state_")
-    try:
-        idx = _ivf_maintained_index(
-            spark, emb, sf_dir, ckpt, state, "streaming_semdedup_prune"
-        )
+    with _ivf_maintained_index(
+        spark, emb, sf_dir, "streaming_semdedup_prune"
+    ) as idx:
         return idx.semdedup_prune(emb, tau=S.SEMDEDUP_TAU).localCheckpoint(
             eager=True
         )
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
-        shutil.rmtree(state, ignore_errors=True)
 
 
 def _streaming_substrpipe_oracle() -> str:
@@ -2188,13 +2041,8 @@ def _streaming_substrpipe_oracle() -> str:
     "recursive closure over the planted shared-block corpus.",
 )
 def q_streaming_substring_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-
     from worker_spark.sources.synth_corpus import documents_v2_substr
-    from worker_spark.streaming.dedup_pipeline import (
-        StreamingSubstringPipeline,
-        dedup_pipeline_stream,
-    )
+    from worker_spark.streaming.dedup_pipeline import StreamingSubstringPipeline
 
     docs = documents_v2_substr(spark, sf_dir).select("doc_id", "text")
     stale = F.col("doc_id") % 7 == 0
@@ -2212,23 +2060,13 @@ def q_streaming_substring_pipeline(spark: SparkSession, sf_dir: str) -> DataFram
         "docsv2substr_s7",
         lambda d: _stage_feed((b0, b1.unionByName(b2)), d),
     )
-    ckpt = tempfile.mkdtemp(prefix="sspipe_ckpt_")
-    state = tempfile.mkdtemp(prefix="sspipe_state_")
-    try:
-        pipe = StreamingSubstringPipeline(spark, state)
-        q = dedup_pipeline_stream(
-            spark, feed, pipe, ckpt, checkpoint_name="sspipe"
-        )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError(
-                "streaming_substring_pipeline: availableNow drain "
-                "exceeded 300s"
-            )
+    with _maintained(
+        spark,
+        "streaming_substring_pipeline",
+        feed,
+        lambda state: StreamingSubstringPipeline(spark, state),
+    ) as pipe:
         return pipe.cluster_assignments().localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
-        shutil.rmtree(state, ignore_errors=True)
 
 
 def _streaming_contamination_oracle() -> str:
@@ -2260,11 +2098,8 @@ def _streaming_contamination_oracle() -> str:
     "against the batch benchmark_contamination oracle.",
 )
 def q_streaming_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-
     from worker_spark.streaming.contamination_index import (
         IncrementalContaminationScreen,
-        contamination_maintenance_stream,
     )
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
@@ -2291,20 +2126,13 @@ def q_streaming_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
         "docs_ctm_s7",
         lambda d: _stage_feed((b0, b1.unionByName(b2)), d),
     )
-    ckpt = tempfile.mkdtemp(prefix="ctm_ckpt_")
-    state = tempfile.mkdtemp(prefix="ctm_state_")
-    try:
-        screen = IncrementalContaminationScreen(spark, state, eval_docs=ev)
-        q = contamination_maintenance_stream(spark, feed, screen, ckpt)
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError(
-                "streaming_contamination: availableNow drain exceeded 300s"
-            )
+    with _maintained(
+        spark,
+        "streaming_contamination",
+        feed,
+        lambda state: IncrementalContaminationScreen(spark, state, eval_docs=ev),
+    ) as screen:
         return screen.decisions().localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
-        shutil.rmtree(state, ignore_errors=True)
 
 
 def _streaming_quantile_oracle() -> str:
@@ -2342,14 +2170,9 @@ def _streaming_quantile_oracle() -> str:
     "streamed sample equal the batch sample exactly.",
 )
 def q_streaming_quantile_index(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-
     from pyspark.sql import types as T
 
-    from worker_spark.streaming.quantile_index import (
-        IncrementalQuantileIndex,
-        quantile_maintenance_stream,
-    )
+    from worker_spark.streaming.quantile_index import IncrementalQuantileIndex
 
     e = load_table(spark, sf_dir, "events").select(
         "event_type", "event_id", "value"
@@ -2365,32 +2188,23 @@ def q_streaming_quantile_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     feed = staged_dir(
         sf_dir, "events_quant", lambda d: _stage_feed((b0, b1), d)
     )
-    ckpt = tempfile.mkdtemp(prefix="qidx_ckpt_")
-    state = tempfile.mkdtemp(prefix="qidx_state_")
-    try:
-        idx = IncrementalQuantileIndex(spark, state)
-        schema = T.StructType(
-            [
-                T.StructField("event_type", T.StringType(), True),
-                T.StructField("event_id", T.LongType(), True),
-                T.StructField("value", T.DoubleType(), True),
-            ]
-        )
-        q = quantile_maintenance_stream(
-            spark,
-            feed,
-            idx,
-            ckpt,
-            schema,
-            group_col="event_type",
-            key_col="event_id",
-            value_col="value",
-        )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError(
-                "streaming_quantile_index: availableNow drain exceeded 300s"
-            )
+    schema = T.StructType(
+        [
+            T.StructField("event_type", T.StringType(), True),
+            T.StructField("event_id", T.LongType(), True),
+            T.StructField("value", T.DoubleType(), True),
+        ]
+    )
+    with _maintained(
+        spark,
+        "streaming_quantile_index",
+        feed,
+        lambda state: IncrementalQuantileIndex(spark, state),
+        schema=schema,
+        group_col="event_type",
+        key_col="event_id",
+        value_col="value",
+    ) as idx:
         return (
             idx.estimates()
             .select(
@@ -2402,9 +2216,6 @@ def q_streaming_quantile_index(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
-        shutil.rmtree(state, ignore_errors=True)
 
 
 def _streaming_curation_retrain_oracle() -> str:
@@ -2436,8 +2247,6 @@ def _streaming_curation_retrain_oracle() -> str:
     "whose LM trains inline on the same corpus.",
 )
 def q_streaming_curation_retrain(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-
     from worker_spark.queries.textops import (
         _GOPHER_MIN_WORDS,
         _GOPHER_SW,
@@ -2452,7 +2261,6 @@ def q_streaming_curation_retrain(spark: SparkSession, sf_dir: str) -> DataFrame:
     from worker_spark.streaming.curation_index import (
         CurationConfig,
         IncrementalCurationIndex,
-        curation_maintenance_stream,
     )
 
     d = documents_v2_lang(spark, sf_dir)
@@ -2473,11 +2281,11 @@ def q_streaming_curation_retrain(spark: SparkSession, sf_dir: str) -> DataFrame:
             d,
         ),
     )
-    ckpt = tempfile.mkdtemp(prefix="crt_ckpt_")
-    state = tempfile.mkdtemp(prefix="crt_state_")
-    state2 = tempfile.mkdtemp(prefix="crt_state2_") + "/fresh"
-    try:
-        idx = IncrementalCurationIndex(
+    with _maintained(
+        spark,
+        "streaming_curation_retrain",
+        feed,
+        lambda state: IncrementalCurationIndex(
             spark,
             state,
             lm_train_docs=junk,
@@ -2491,20 +2299,16 @@ def q_streaming_curation_retrain(spark: SparkSession, sf_dir: str) -> DataFrame:
                 gopher_stopwords=_GOPHER_SW,
                 gopher_min_sw_hits=GOPHER_MIN_STOPWORD_HITS,
             ),
-        )
-        q = curation_maintenance_stream(spark, feed, idx, ckpt)
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError(
-                "streaming_curation_retrain: availableNow drain exceeded 300s"
-            )
+        ),
+    ) as idx:
         advice = idx.retrain_advice()
         if not advice["needs_retrain"]:
             raise AssertionError(
                 "streaming_curation_retrain: the drifted-LM root must "
                 f"flag retrain; got {advice}"
             )
-        fresh = idx.retrain(state2)
+        # retrain refuses a non-empty target: a fresh dir beside the root
+        fresh = idx.retrain(os.path.join(os.path.dirname(idx.root), "fresh"))
         return (
             fresh.decisions()
             .join(d.select("doc_id", "true_lang"), "doc_id")
@@ -2522,10 +2326,6 @@ def q_streaming_curation_retrain(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
-        shutil.rmtree(state, ignore_errors=True)
-        shutil.rmtree(os.path.dirname(state2), ignore_errors=True)
 
 
 def _ingest_gate_oracle() -> str:
@@ -2599,8 +2399,6 @@ def _ingest_gate_oracle() -> str:
     "restricted to the corpus side of the eval split.",
 )
 def q_streaming_ingest_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-
     from worker_spark.operators.text import GOPHER_MIN_STOPWORD_HITS
     from worker_spark.queries.textops import (
         _GOPHER_MIN_WORDS,
@@ -2611,10 +2409,7 @@ def q_streaming_ingest_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         CURATION_MIN_TTR,
     )
     from worker_spark.streaming.curation_index import CurationConfig
-    from worker_spark.streaming.ingest_gate import (
-        StreamingIngestGate,
-        ingest_gate_stream,
-    )
+    from worker_spark.streaming.ingest_gate import StreamingIngestGate
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     ev = docs.filter(F.col("doc_id") % 5 == 0)
@@ -2633,10 +2428,11 @@ def q_streaming_ingest_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     feed = staged_dir(
         sf_dir, "docs_gate_s10m6", lambda d: _stage_feed((b0, b1), d)
     )
-    ckpt = tempfile.mkdtemp(prefix="gate_ckpt_")
-    state = tempfile.mkdtemp(prefix="gate_state_")
-    try:
-        gate = StreamingIngestGate(
+    with _maintained(
+        spark,
+        "streaming_ingest_gate",
+        feed,
+        lambda state: StreamingIngestGate(
             spark,
             state,
             eval_docs=ev,
@@ -2652,17 +2448,9 @@ def q_streaming_ingest_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
                 gopher_stopwords=_GOPHER_SW,
                 gopher_min_sw_hits=GOPHER_MIN_STOPWORD_HITS,
             ),
-        )
-        q = ingest_gate_stream(spark, feed, gate, ckpt)
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError(
-                "streaming_ingest_gate: availableNow drain exceeded 300s"
-            )
+        ),
+    ) as gate:
         return gate.admissions().localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
-        shutil.rmtree(state, ignore_errors=True)
 
 
 def _streaming_theta_oracle() -> str:
@@ -2701,14 +2489,9 @@ def _streaming_theta_oracle() -> str:
     "oracle's estimate block verbatim.",
 )
 def q_streaming_theta_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-
     from pyspark.sql import types as T
 
-    from worker_spark.streaming.theta_index import (
-        IncrementalThetaIndex,
-        theta_maintenance_stream,
-    )
+    from worker_spark.streaming.theta_index import IncrementalThetaIndex
 
     e = load_table(spark, sf_dir, "events").select("event_type", "user_id")
     # Two-file feed: batch 0 the even event rows (by user), batch 1 the
@@ -2721,34 +2504,22 @@ def q_streaming_theta_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     feed = staged_dir(
         sf_dir, "events_theta", lambda d: _stage_feed((b0, b1), d)
     )
-    ckpt = tempfile.mkdtemp(prefix="thidx_ckpt_")
-    state = tempfile.mkdtemp(prefix="thidx_state_")
-    try:
-        idx = IncrementalThetaIndex(spark, state)
-        schema = T.StructType(
-            [
-                T.StructField("event_type", T.StringType(), True),
-                T.StructField("user_id", T.LongType(), True),
-            ]
-        )
-        q = theta_maintenance_stream(
-            spark,
-            feed,
-            idx,
-            ckpt,
-            schema,
-            group_col="event_type",
-            value_col="user_id",
-        )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError(
-                "streaming_theta_overlap: availableNow drain exceeded 300s"
-            )
+    schema = T.StructType(
+        [
+            T.StructField("event_type", T.StringType(), True),
+            T.StructField("user_id", T.LongType(), True),
+        ]
+    )
+    with _maintained(
+        spark,
+        "streaming_theta_overlap",
+        feed,
+        lambda state: IncrementalThetaIndex(spark, state),
+        schema=schema,
+        group_col="event_type",
+        value_col="user_id",
+    ) as idx:
         return idx.overlaps().localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
-        shutil.rmtree(state, ignore_errors=True)
 
 
 def _streaming_mixture_oracle() -> str:
@@ -2783,13 +2554,8 @@ def _streaming_mixture_oracle() -> str:
     "Hash-checked against the batch mixture oracle verbatim.",
 )
 def q_streaming_mixture_ledger(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-
     from worker_spark.queries.sampleq import _DEFAULT, _RATES
-    from worker_spark.streaming.mixture_ledger import (
-        IncrementalMixtureLedger,
-        mixture_maintenance_stream,
-    )
+    from worker_spark.streaming.mixture_ledger import IncrementalMixtureLedger
 
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", F.col("lang").alias("stratum"), "text"
@@ -2819,22 +2585,15 @@ def q_streaming_mixture_ledger(spark: SparkSession, sf_dir: str) -> DataFrame:
     feed = staged_dir(
         sf_dir, "docs_mixture", lambda d: _stage_feed((b0, b1), d)
     )
-    ckpt = tempfile.mkdtemp(prefix="mxl_ckpt_")
-    state = tempfile.mkdtemp(prefix="mxl_state_")
-    try:
-        led = IncrementalMixtureLedger(
+    with _maintained(
+        spark,
+        "streaming_mixture_ledger",
+        feed,
+        lambda state: IncrementalMixtureLedger(
             spark, state, rates=_RATES, default_rate=_DEFAULT
-        )
-        q = mixture_maintenance_stream(spark, feed, led, ckpt)
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError(
-                "streaming_mixture_ledger: availableNow drain exceeded 300s"
-            )
+        ),
+    ) as led:
         return led.report().localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
-        shutil.rmtree(state, ignore_errors=True)
 
 
 # the registered 2-D box (user_id x epoch seconds): one January week,
@@ -2881,14 +2640,9 @@ def _streaming_zorder_oracle() -> str:
     "back.",
 )
 def q_streaming_zorder_index(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-
     from pyspark.sql import types as T
 
-    from worker_spark.streaming.zorder_index import (
-        IncrementalZOrderIndex,
-        zorder_maintenance_stream,
-    )
+    from worker_spark.streaming.zorder_index import IncrementalZOrderIndex
 
     e = load_table(spark, sf_dir, "events").select(
         "event_id",
@@ -2909,28 +2663,27 @@ def q_streaming_zorder_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     feed = staged_dir(
         sf_dir, "events_zorder", lambda d: _stage_feed((b0, b1), d)
     )
-    ckpt = tempfile.mkdtemp(prefix="zidx_ckpt_")
-    state = tempfile.mkdtemp(prefix="zidx_state_")
-    try:
-        idx = IncrementalZOrderIndex(spark, state, bounds=bounds, n_buckets=64)
-        schema = T.StructType(
-            [
-                T.StructField("event_id", T.LongType(), True),
-                T.StructField("v1", T.LongType(), True),
-                T.StructField("v2", T.LongType(), True),
-                T.StructField("event_type", T.StringType(), True),
-                T.StructField("value", T.DoubleType(), True),
-            ]
-        )
-        q = zorder_maintenance_stream(
-            spark, feed, idx, ckpt, schema,
-            id_col="event_id", v1_col="v1", v2_col="v2",
-        )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError(
-                "streaming_zorder_index: availableNow drain exceeded 300s"
-            )
+    schema = T.StructType(
+        [
+            T.StructField("event_id", T.LongType(), True),
+            T.StructField("v1", T.LongType(), True),
+            T.StructField("v2", T.LongType(), True),
+            T.StructField("event_type", T.StringType(), True),
+            T.StructField("value", T.DoubleType(), True),
+        ]
+    )
+    with _maintained(
+        spark,
+        "streaming_zorder_index",
+        feed,
+        lambda state: IncrementalZOrderIndex(
+            spark, state, bounds=bounds, n_buckets=64
+        ),
+        schema=schema,
+        id_col="event_id",
+        v1_col="v1",
+        v2_col="v2",
+    ) as idx:
         return (
             idx.box_query(*_ZBOX)
             .select(
@@ -2942,6 +2695,3 @@ def q_streaming_zorder_index(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
-        shutil.rmtree(state, ignore_errors=True)

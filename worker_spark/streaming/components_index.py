@@ -67,7 +67,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.streaming import StreamingQuery
 
 from worker_spark.plans.bucketed_state import BucketedParquetStateStore
 
@@ -119,6 +118,8 @@ JOURNAL_SCHEMA = T.StructType(
 class IncrementalComponentsIndex:
     """Cluster-label state with per-batch component-scoped recompute and
     a cluster_assignments read side served from labels alone."""
+
+    FEED_SCHEMA = FEED_SCHEMA
 
     ADJ = "adj"
     MEMBERS = "members"
@@ -460,31 +461,3 @@ class IncrementalComponentsIndex:
                 (F.col("doc_id") == F.col("cluster_id")).alias("is_survivor"),
             )
         )
-
-
-def components_maintenance_stream(
-    spark: SparkSession,
-    feed_dir: str,
-    index: IncrementalComponentsIndex,
-    checkpoint_dir: str,
-    available_now: bool = True,
-    max_files_per_trigger: int | None = 1,
-) -> StreamingQuery:
-    """Wire an edge-feed directory as the change stream — the same
-    foreachBatch shape as the other incremental indexes. Feed rows are
-    (doc_id, nbr) per the module contract; within-trigger multi-file
-    coalescing is safe because apply_batch unions announcements and
-    edges set-wise (no last-wins needed — the feed is declarative, not
-    versioned)."""
-    from worker_spark.streaming.feed import file_feed_stream
-
-    return file_feed_stream(
-        spark,
-        feed_dir,
-        lambda batch, bid: index.apply_batch(batch, batch_id=bid),
-        checkpoint_dir,
-        FEED_SCHEMA,
-        "cidx",
-        available_now=available_now,
-        max_files_per_trigger=max_files_per_trigger,
-    )

@@ -87,9 +87,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.streaming import StreamingQuery
 
 from worker_spark.plans.bucketed_state import BucketedParquetStateStore
+from worker_spark.streaming.feed import DOC_FEED_SCHEMA
 
 EVG_SCHEMA = T.StructType(
     [
@@ -169,6 +169,8 @@ class IncrementalContaminationScreen:
     """Materialized eval-overlap decisions with per-batch bucket-scoped
     MERGE maintenance and a decisions() read side equal to the batch
     benchmark_contamination exactly."""
+
+    FEED_SCHEMA = DOC_FEED_SCHEMA
 
     EVG = "evg"
     EVMAN = "evman"
@@ -661,35 +663,3 @@ class IncrementalContaminationScreen:
                 f"{hdrift} shingles — reseed or replay"
             )
         return counts
-
-
-def contamination_maintenance_stream(
-    spark: SparkSession,
-    docs_dir: str,
-    screen: IncrementalContaminationScreen,
-    checkpoint_dir: str,
-    schema: T.StructType | None = None,
-    available_now: bool = True,
-    max_files_per_trigger: int | None = 1,
-) -> StreamingQuery:
-    """Wire a document directory as the change feed — the same
-    foreachBatch shape as the other incremental indexes."""
-    from worker_spark.streaming.feed import file_feed_stream
-
-    if schema is None:
-        schema = T.StructType(
-            [
-                T.StructField("doc_id", T.LongType(), True),
-                T.StructField("text", T.StringType(), True),
-            ]
-        )
-    return file_feed_stream(
-        spark,
-        docs_dir,
-        lambda batch, bid: screen.apply_batch(batch, batch_id=bid),
-        checkpoint_dir,
-        schema,
-        "ctm",
-        available_now=available_now,
-        max_files_per_trigger=max_files_per_trigger,
-    )

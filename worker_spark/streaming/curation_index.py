@@ -47,7 +47,6 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.streaming import StreamingQuery
 
 from worker_spark.operators.text import (
     curation_reason,
@@ -58,6 +57,7 @@ from worker_spark.operators.text import (
     with_quality_score,
 )
 from worker_spark.plans.bucketed_state import BucketedParquetStateStore
+from worker_spark.streaming.feed import DOC_FEED_SCHEMA
 
 LM_SCHEMA = T.StructType(
     [
@@ -129,6 +129,8 @@ class IncrementalCurationIndex:
     """Materialized curation decisions with per-batch bucket-scoped
     MERGE maintenance: map-only gates over the batch, LM scoring
     against the pinned model, decisions replaced by doc_id."""
+
+    FEED_SCHEMA = DOC_FEED_SCHEMA
 
     DECISIONS = "decisions"
     TEXTS = "texts"
@@ -494,35 +496,3 @@ class IncrementalCurationIndex:
         return self.decisions().groupBy("reject_reason").agg(
             F.count(F.lit(1)).alias("n_docs")
         )
-
-
-def curation_maintenance_stream(
-    spark: SparkSession,
-    docs_dir: str,
-    index: IncrementalCurationIndex,
-    checkpoint_dir: str,
-    schema: T.StructType | None = None,
-    available_now: bool = True,
-    max_files_per_trigger: int | None = 1,
-) -> StreamingQuery:
-    """Wire a document directory as the change feed — the same
-    foreachBatch shape as the other five incremental indexes."""
-    from worker_spark.streaming.feed import file_feed_stream
-
-    if schema is None:
-        schema = T.StructType(
-            [
-                T.StructField("doc_id", T.LongType(), True),
-                T.StructField("text", T.StringType(), True),
-            ]
-        )
-    return file_feed_stream(
-        spark,
-        docs_dir,
-        lambda batch, bid: index.apply_batch(batch, batch_id=bid),
-        checkpoint_dir,
-        schema,
-        "cidx",
-        available_now=available_now,
-        max_files_per_trigger=max_files_per_trigger,
-    )

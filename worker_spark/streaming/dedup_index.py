@@ -46,7 +46,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.streaming import StreamingQuery
 
 from worker_spark.operators.dedup import (
     SIMHASH_BAND_BITS,
@@ -54,6 +53,7 @@ from worker_spark.operators.dedup import (
     simhash,
 )
 from worker_spark.plans.bucketed_state import BucketedParquetStateStore
+from worker_spark.streaming.feed import DOC_FEED_SCHEMA
 
 N_BANDS = 4
 
@@ -108,6 +108,8 @@ def _band_rows(fps: DataFrame, id_col: str = "doc_id") -> DataFrame:
 class IncrementalDedupIndex:
     """Banded SimHash fingerprint state with per-batch bucket-scoped
     MERGE maintenance and an ingest-screening read side."""
+
+    FEED_SCHEMA = DOC_FEED_SCHEMA
 
     BANDS = "bands"
     FPS = "fps"
@@ -275,35 +277,3 @@ class IncrementalDedupIndex:
                 "new_id", "corpus_id", F.col("hamming").cast("int").alias("hamming")
             )
         )
-
-
-def dedup_maintenance_stream(
-    spark: SparkSession,
-    docs_dir: str,
-    index: IncrementalDedupIndex,
-    checkpoint_dir: str,
-    schema: T.StructType | None = None,
-    available_now: bool = True,
-    max_files_per_trigger: int | None = 1,
-) -> StreamingQuery:
-    """Wire a document directory as the change feed — the same
-    foreachBatch shape as the other two incremental indexes."""
-    from worker_spark.streaming.feed import file_feed_stream
-
-    if schema is None:
-        schema = T.StructType(
-            [
-                T.StructField("doc_id", T.LongType(), True),
-                T.StructField("text", T.StringType(), True),
-            ]
-        )
-    return file_feed_stream(
-        spark,
-        docs_dir,
-        lambda batch, bid: index.apply_batch(batch, batch_id=bid),
-        checkpoint_dir,
-        schema,
-        "didx",
-        available_now=available_now,
-        max_files_per_trigger=max_files_per_trigger,
-    )

@@ -45,11 +45,11 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.streaming import StreamingQuery
 
 from worker_spark.plans.bucketed_state import BucketedParquetStateStore
 from worker_spark.streaming.components_index import IncrementalComponentsIndex
 from worker_spark.streaming.exact_index import IncrementalExactIndex
+from worker_spark.streaming.feed import DOC_FEED_SCHEMA
 
 
 def _require_one_modulus(*stores: BucketedParquetStateStore) -> None:
@@ -67,6 +67,8 @@ def _require_one_modulus(*stores: BucketedParquetStateStore) -> None:
 
 class StreamingDedupPipeline:
     """Two maintained structures composed behind one apply_batch."""
+
+    FEED_SCHEMA = DOC_FEED_SCHEMA
 
     def __init__(self, spark: SparkSession, root: str, n_buckets: int = 16):
         self.spark = spark
@@ -179,6 +181,8 @@ class StreamingNearDupPipeline:
     with the update — the served labels equal the batch
     cluster_assignments(minhash_lsh_dedup_pairs(live corpus)) exactly.
     """
+
+    FEED_SCHEMA = DOC_FEED_SCHEMA
 
     def __init__(
         self,
@@ -389,6 +393,8 @@ class StreamingSubstringPipeline:
     probes only those fingerprints' fprows buckets.
     """
 
+    FEED_SCHEMA = DOC_FEED_SCHEMA
+
     def __init__(self, spark: SparkSession, root: str, n_buckets: int = 16):
         from worker_spark.streaming.substring_index import (
             IncrementalSubstringIndex,
@@ -471,41 +477,3 @@ class StreamingSubstringPipeline:
 
     def cluster_assignments(self) -> DataFrame:
         return self.components.cluster_assignments()
-
-
-def dedup_pipeline_stream(
-    spark: SparkSession,
-    docs_dir: str,
-    pipeline: (
-        "StreamingDedupPipeline | StreamingNearDupPipeline"
-        " | StreamingSubstringPipeline"
-    ),
-    checkpoint_dir: str,
-    schema: T.StructType | None = None,
-    available_now: bool = True,
-    max_files_per_trigger: int | None = 1,
-    checkpoint_name: str = "dpipe",
-) -> StreamingQuery:
-    """Wire a document directory as the change feed — one stream drives
-    ALL of a composed pipeline's maintained structures through its
-    apply_batch (works for either pipeline; give each its own
-    checkpoint_name when both run under one checkpoint dir)."""
-    from worker_spark.streaming.feed import file_feed_stream
-
-    if schema is None:
-        schema = T.StructType(
-            [
-                T.StructField("doc_id", T.LongType(), True),
-                T.StructField("text", T.StringType(), True),
-            ]
-        )
-    return file_feed_stream(
-        spark,
-        docs_dir,
-        lambda batch, bid: pipeline.apply_batch(batch, batch_id=bid),
-        checkpoint_dir,
-        schema,
-        checkpoint_name,
-        available_now=available_now,
-        max_files_per_trigger=max_files_per_trigger,
-    )

@@ -39,9 +39,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.streaming import StreamingQuery
 
 from worker_spark.plans.bucketed_state import BucketedParquetStateStore
+from worker_spark.streaming.feed import DOC_FEED_SCHEMA
 
 HASHES_SCHEMA = T.StructType(
     [
@@ -74,6 +74,8 @@ def _content_hashes(
 class IncrementalExactIndex:
     """Content-hash state with per-batch bucket-scoped MERGE maintenance
     and cluster/screening read sides served without corpus text."""
+
+    FEED_SCHEMA = DOC_FEED_SCHEMA
 
     HASHES = "hashes"
     FPS = "fps"
@@ -250,35 +252,3 @@ class IncrementalExactIndex:
                 F.col("a.content_hash").alias("content_hash"),
             )
         )
-
-
-def exact_maintenance_stream(
-    spark: SparkSession,
-    docs_dir: str,
-    index: IncrementalExactIndex,
-    checkpoint_dir: str,
-    schema: T.StructType | None = None,
-    available_now: bool = True,
-    max_files_per_trigger: int | None = 1,
-) -> StreamingQuery:
-    """Wire a document directory as the change feed — the same
-    foreachBatch shape as the other four incremental indexes."""
-    from worker_spark.streaming.feed import file_feed_stream
-
-    if schema is None:
-        schema = T.StructType(
-            [
-                T.StructField("doc_id", T.LongType(), True),
-                T.StructField("text", T.StringType(), True),
-            ]
-        )
-    return file_feed_stream(
-        spark,
-        docs_dir,
-        lambda batch, bid: index.apply_batch(batch, batch_id=bid),
-        checkpoint_dir,
-        schema,
-        "xidx",
-        available_now=available_now,
-        max_files_per_trigger=max_files_per_trigger,
-    )

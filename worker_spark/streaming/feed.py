@@ -1,17 +1,25 @@
-"""Shared plumbing for the incremental-index maintenance streams (the
-inverted index, the IVF vector index and the SimHash dedup index are
-one dataflow shape: a parquet file directory as the change feed, a
-foreachBatch MERGE as the consumer)."""
+"""The one drive path of every maintained structure: a parquet file
+directory as the change feed, the structure's ``apply_batch`` as the
+foreachBatch consumer. ``file_feed_stream`` wires any structure that
+has ``apply_batch(df, batch_id=None, ...)``, reading the feed with the
+structure's ``FEED_SCHEMA`` class attribute unless the caller passes a
+schema. ``last_wins`` is the within-batch version rule the structures
+apply to what the stream hands them."""
 
 from __future__ import annotations
-
-import os
-from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
+
+# the (doc_id, text) document feed most structures maintain from
+DOC_FEED_SCHEMA = T.StructType(
+    [
+        T.StructField("doc_id", T.LongType(), True),
+        T.StructField("text", T.StringType(), True),
+    ]
+)
 
 
 def _refuse_map_columns(schema: T.DataType, path: str = "") -> None:
@@ -88,28 +96,42 @@ def last_wins(df: DataFrame, key_cols: list[str]) -> DataFrame:
 def file_feed_stream(
     spark: SparkSession,
     feed_dir: str,
-    apply_batch: Callable[[DataFrame, int], None],
+    structure,
     checkpoint_dir: str,
-    schema: T.StructType,
-    checkpoint_name: str,
-    available_now: bool = True,
+    schema: T.StructType | None = None,
     max_files_per_trigger: int | None = 1,
+    **apply_kwargs,
 ) -> StreamingQuery:
-    """ONE definition of the feed topology (review finding: three
-    near-identical wrappers): each new parquet file under ``feed_dir``
-    is a micro-batch, drained into ``apply_batch`` with a checkpointed
-    source offset so restarts resume instead of reprocessing."""
+    """ONE definition of the feed topology, for every maintained
+    structure: each new parquet file under ``feed_dir`` is a
+    micro-batch, drained with an availableNow trigger into
+    ``structure.apply_batch(batch, batch_id=..., **apply_kwargs)``, with
+    the source offsets checkpointed in ``checkpoint_dir`` so a restart
+    resumes instead of reprocessing.
+
+    ``schema`` defaults to the structure's ``FEED_SCHEMA``. Its column
+    order is part of the replay contract (last_wins fingerprints
+    ``to_json(struct(*cols))``). Structures whose feed columns are
+    caller-named (quantile, theta, z-order) define none and need
+    ``schema`` plus the column-name ``apply_kwargs``."""
+    if schema is None:
+        schema = getattr(structure, "FEED_SCHEMA", None)
+        if schema is None:
+            raise ValueError(
+                f"{type(structure).__name__} has no FEED_SCHEMA: pass schema="
+            )
     reader = spark.readStream.schema(schema)
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(feed_dir)
-    writer = (
-        stream.writeStream.outputMode("update")
-        .option(
-            "checkpointLocation", os.path.join(checkpoint_dir, checkpoint_name)
+    return (
+        reader.parquet(feed_dir)
+        .writeStream.outputMode("update")
+        .option("checkpointLocation", checkpoint_dir)
+        .foreachBatch(
+            lambda batch, bid: structure.apply_batch(
+                batch, batch_id=bid, **apply_kwargs
+            )
         )
-        .foreachBatch(apply_batch)
+        .trigger(availableNow=True)
+        .start()
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

@@ -64,9 +64,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.streaming import StreamingQuery
 
 from worker_spark.plans.bucketed_state import BucketedParquetStateStore
+from worker_spark.streaming.feed import DOC_FEED_SCHEMA
 
 # counter rows (token non-empty) + ONE sentinel meta row (token = "")
 # carrying the scalars — a single-table, single-swap atomic commit of
@@ -104,6 +104,8 @@ def batch_token_counts(docs: DataFrame, text_col: str = "text") -> DataFrame:
 class StreamingHeavyHitters:
     """Misra-Gries summary maintained per micro-batch: bounded k-row
     state, deterministic estimates with the accumulated-offset bound."""
+
+    FEED_SCHEMA = DOC_FEED_SCHEMA
 
     TABLE = "summary"
 
@@ -222,35 +224,3 @@ class StreamingHeavyHitters:
         the summary (-1 before the first batch; direct calls keep it
         unchanged)."""
         return self._meta("batch_id", -1)
-
-
-def heavy_hitter_maintenance_stream(
-    spark: SparkSession,
-    docs_dir: str,
-    hh: StreamingHeavyHitters,
-    checkpoint_dir: str,
-    schema: T.StructType | None = None,
-    available_now: bool = True,
-    max_files_per_trigger: int | None = 1,
-) -> StreamingQuery:
-    """Wire a document directory as the change feed — the same
-    foreachBatch shape as the rest of the maintained-structure family."""
-    from worker_spark.streaming.feed import file_feed_stream
-
-    if schema is None:
-        schema = T.StructType(
-            [
-                T.StructField("doc_id", T.LongType(), True),
-                T.StructField("text", T.StringType(), True),
-            ]
-        )
-    return file_feed_stream(
-        spark,
-        docs_dir,
-        lambda batch, bid: hh.apply_batch(batch, batch_id=bid),
-        checkpoint_dir,
-        schema,
-        "mghh",
-        available_now=available_now,
-        max_files_per_trigger=max_files_per_trigger,
-    )

@@ -45,8 +45,6 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-from pyspark.sql.streaming import StreamingQuery
 
 from worker_spark.streaming.contamination_index import (
     IncrementalContaminationScreen,
@@ -55,11 +53,14 @@ from worker_spark.streaming.curation_index import (
     CurationConfig,
     IncrementalCurationIndex,
 )
+from worker_spark.streaming.feed import DOC_FEED_SCHEMA
 
 
 class StreamingIngestGate:
     """Curation + decontamination composed behind one apply_batch; the
     admission table served from the two maintained states."""
+
+    FEED_SCHEMA = DOC_FEED_SCHEMA
 
     def __init__(
         self,
@@ -198,35 +199,3 @@ class StreamingIngestGate:
             {f"screen.{k}": v for k, v in self.screen.fsck().items()}
         )
         return counts
-
-
-def ingest_gate_stream(
-    spark: SparkSession,
-    docs_dir: str,
-    gate: StreamingIngestGate,
-    checkpoint_dir: str,
-    schema: T.StructType | None = None,
-    available_now: bool = True,
-    max_files_per_trigger: int | None = 1,
-) -> StreamingQuery:
-    """Wire a document directory as the change feed — the same
-    foreachBatch shape as the other composed pipelines."""
-    from worker_spark.streaming.feed import file_feed_stream
-
-    if schema is None:
-        schema = T.StructType(
-            [
-                T.StructField("doc_id", T.LongType(), True),
-                T.StructField("text", T.StringType(), True),
-            ]
-        )
-    return file_feed_stream(
-        spark,
-        docs_dir,
-        lambda batch, bid: gate.apply_batch(batch, batch_id=bid),
-        checkpoint_dir,
-        schema,
-        "gate",
-        available_now=available_now,
-        max_files_per_trigger=max_files_per_trigger,
-    )

@@ -54,7 +54,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.streaming import StreamingQuery
 
 from worker_spark.operators.dedup import (
     N_BANDS,
@@ -65,6 +64,7 @@ from worker_spark.operators.dedup import (
     word_shingles,
 )
 from worker_spark.plans.bucketed_state import BucketedParquetStateStore
+from worker_spark.streaming.feed import DOC_FEED_SCHEMA
 
 BANDS_SCHEMA = T.StructType(
     [
@@ -117,6 +117,8 @@ class IncrementalMinHashIndex:
     """Banded MinHash signature state with per-batch bucket-scoped
     MERGE maintenance, and candidate/verify read sides that never
     re-fingerprint the corpus."""
+
+    FEED_SCHEMA = DOC_FEED_SCHEMA
 
     BANDS = "bands"
     SIGS = "sigs"
@@ -408,35 +410,3 @@ class IncrementalMinHashIndex:
             F.col("id_b").alias("corpus_id"),
             "jaccard",
         )
-
-
-def minhash_maintenance_stream(
-    spark: SparkSession,
-    docs_dir: str,
-    index: IncrementalMinHashIndex,
-    checkpoint_dir: str,
-    schema: T.StructType | None = None,
-    available_now: bool = True,
-    max_files_per_trigger: int | None = 1,
-) -> StreamingQuery:
-    """Wire a document directory as the change feed — the same
-    foreachBatch shape as the other three incremental indexes."""
-    from worker_spark.streaming.feed import file_feed_stream
-
-    if schema is None:
-        schema = T.StructType(
-            [
-                T.StructField("doc_id", T.LongType(), True),
-                T.StructField("text", T.StringType(), True),
-            ]
-        )
-    return file_feed_stream(
-        spark,
-        docs_dir,
-        lambda batch, bid: index.apply_batch(batch, batch_id=bid),
-        checkpoint_dir,
-        schema,
-        "midx",
-        available_now=available_now,
-        max_files_per_trigger=max_files_per_trigger,
-    )

@@ -66,7 +66,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.streaming import StreamingQuery
 
 from worker_spark.operators.sampling import (
     _threshold_col,
@@ -110,6 +109,15 @@ CONFIG_SCHEMA = T.StructType(
 class IncrementalMixtureLedger:
     """Materialized per-stratum mixture audit with journaled-delta,
     watermark-fenced exactly-once maintenance."""
+
+    # column order is part of the replay contract (feed.last_wins)
+    FEED_SCHEMA = T.StructType(
+        [
+            T.StructField("doc_id", T.LongType(), True),
+            T.StructField("stratum", T.StringType(), True),
+            T.StructField("text", T.StringType(), True),
+        ]
+    )
 
     MEM = "mem"
     LED = "led"
@@ -401,36 +409,3 @@ class IncrementalMixtureLedger:
                 f"aggregate by {drift} stratum rows — reseed or replay"
             )
         return counts
-
-
-def mixture_maintenance_stream(
-    spark: SparkSession,
-    docs_dir: str,
-    ledger: IncrementalMixtureLedger,
-    checkpoint_dir: str,
-    schema: T.StructType | None = None,
-    available_now: bool = True,
-    max_files_per_trigger: int | None = 1,
-) -> StreamingQuery:
-    """Wire a document directory as the change feed — the same
-    foreachBatch shape as the other incremental indexes."""
-    from worker_spark.streaming.feed import file_feed_stream
-
-    if schema is None:
-        schema = T.StructType(
-            [
-                T.StructField("doc_id", T.LongType(), True),
-                T.StructField("stratum", T.StringType(), True),
-                T.StructField("text", T.StringType(), True),
-            ]
-        )
-    return file_feed_stream(
-        spark,
-        docs_dir,
-        lambda batch, bid: ledger.apply_batch(batch, batch_id=bid),
-        checkpoint_dir,
-        schema,
-        "mxl",
-        available_now=available_now,
-        max_files_per_trigger=max_files_per_trigger,
-    )

@@ -62,7 +62,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.streaming import StreamingQuery
 
 from worker_spark.operators.sketches import (
     QSK_K,
@@ -239,37 +238,3 @@ class IncrementalQuantileIndex:
                 f"{r['n_keys']}, k={self.k}) — reseed or replay"
             )
         return counts
-
-
-def quantile_maintenance_stream(
-    spark: SparkSession,
-    feed_dir: str,
-    index: IncrementalQuantileIndex,
-    checkpoint_dir: str,
-    schema: T.StructType,
-    group_col: str,
-    key_col: str,
-    value_col: str,
-    available_now: bool = True,
-    max_files_per_trigger: int | None = 1,
-) -> StreamingQuery:
-    """Wire a parquet directory as the append-only feed — the same
-    foreachBatch shape as the other incremental indexes."""
-    from worker_spark.streaming.feed import file_feed_stream
-
-    return file_feed_stream(
-        spark,
-        feed_dir,
-        lambda batch, bid: index.apply_batch(
-            batch,
-            batch_id=bid,
-            group_col=group_col,
-            key_col=key_col,
-            value_col=value_col,
-        ),
-        checkpoint_dir,
-        schema,
-        "qidx",
-        available_now=available_now,
-        max_files_per_trigger=max_files_per_trigger,
-    )

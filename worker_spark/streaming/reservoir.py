@@ -39,10 +39,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.streaming import StreamingQuery
 
 from worker_spark.operators.sampling import WEIGHTED_SAMPLE_K, aes_scored
 from worker_spark.plans.bucketed_state import BucketedParquetStateStore
+from worker_spark.streaming.feed import DOC_FEED_SCHEMA
 
 RESERVOIR_SCHEMA = T.StructType(
     [
@@ -56,6 +56,8 @@ RESERVOIR_SCHEMA = T.StructType(
 class StreamingReservoir:
     """A-ES weighted reservoir maintained per micro-batch: bounded O(k)
     state, exact ppswor sample of everything ever streamed through."""
+
+    FEED_SCHEMA = DOC_FEED_SCHEMA
 
     TABLE = "reservoir"
 
@@ -120,38 +122,6 @@ class StreamingReservoir:
         return self.store.read(self.TABLE, RESERVOIR_SCHEMA)
 
 
-def reservoir_maintenance_stream(
-    spark: SparkSession,
-    docs_dir: str,
-    res: StreamingReservoir,
-    checkpoint_dir: str,
-    schema: T.StructType | None = None,
-    available_now: bool = True,
-    max_files_per_trigger: int | None = 1,
-) -> StreamingQuery:
-    """Wire a document directory as the change feed — the same
-    foreachBatch shape as the six incremental indexes."""
-    from worker_spark.streaming.feed import file_feed_stream
-
-    if schema is None:
-        schema = T.StructType(
-            [
-                T.StructField("doc_id", T.LongType(), True),
-                T.StructField("text", T.StringType(), True),
-            ]
-        )
-    return file_feed_stream(
-        spark,
-        docs_dir,
-        lambda batch, bid: res.apply_batch(batch, batch_id=bid),
-        checkpoint_dir,
-        schema,
-        "resv",
-        available_now=available_now,
-        max_files_per_trigger=max_files_per_trigger,
-    )
-
-
 STRAT_RESERVOIR_SCHEMA = T.StructType(
     [
         T.StructField("stratum", T.StringType(), False),
@@ -175,6 +145,15 @@ class StreamingStratifiedReservoir:
     docstring warns about). sampling.grouped_topk runs the reduction in
     two balanced stages (salted local top-k, then top-k over the
     <= salts*k survivors), exact by construction."""
+
+    # column order is part of the replay contract (feed.last_wins)
+    FEED_SCHEMA = T.StructType(
+        [
+            T.StructField("doc_id", T.LongType(), True),
+            T.StructField("text", T.StringType(), True),
+            T.StructField("stratum", T.StringType(), True),
+        ]
+    )
 
     TABLE = "strat_reservoir"
 
@@ -246,36 +225,3 @@ class StreamingStratifiedReservoir:
         if not self.store.exists(self.TABLE):
             return self.spark.createDataFrame([], STRAT_RESERVOIR_SCHEMA)
         return self.store.read(self.TABLE, STRAT_RESERVOIR_SCHEMA)
-
-
-def stratified_reservoir_maintenance_stream(
-    spark: SparkSession,
-    docs_dir: str,
-    res: StreamingStratifiedReservoir,
-    checkpoint_dir: str,
-    schema: T.StructType | None = None,
-    available_now: bool = True,
-    max_files_per_trigger: int | None = 1,
-) -> StreamingQuery:
-    """Wire a document directory as the change feed — the family's
-    foreachBatch shape, with the stratum column along for the ride."""
-    from worker_spark.streaming.feed import file_feed_stream
-
-    if schema is None:
-        schema = T.StructType(
-            [
-                T.StructField("doc_id", T.LongType(), True),
-                T.StructField("text", T.StringType(), True),
-                T.StructField("stratum", T.StringType(), True),
-            ]
-        )
-    return file_feed_stream(
-        spark,
-        docs_dir,
-        lambda batch, bid: res.apply_batch(batch, batch_id=bid),
-        checkpoint_dir,
-        schema,
-        "sresv",
-        available_now=available_now,
-        max_files_per_trigger=max_files_per_trigger,
-    )

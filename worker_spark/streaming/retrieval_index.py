@@ -71,7 +71,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.streaming import StreamingQuery
 
 from worker_spark.operators.retrieval import BM25_B, BM25_K1, bm25_term_score
 from worker_spark.operators.text import tokens
@@ -79,6 +78,7 @@ from worker_spark.plans.bucketed_state import (
     BucketedParquetStateStore,
     local_frame,
 )
+from worker_spark.streaming.feed import DOC_FEED_SCHEMA
 
 POSTINGS_SCHEMA = T.StructType(
     [
@@ -107,6 +107,8 @@ QTERMS_SCHEMA = T.StructType(
 class IncrementalRetrievalIndex:
     """Postings + doclen state with per-batch bucket-scoped MERGE
     maintenance and a BM25 scorer over the maintained state."""
+
+    FEED_SCHEMA = DOC_FEED_SCHEMA
 
     POSTINGS = "postings"
     DOCLEN = "doclen"
@@ -403,40 +405,3 @@ class IncrementalRetrievalIndex:
                 F.col("rnk").cast("int").alias("rnk"),
             )
         )
-
-
-def index_maintenance_stream(
-    spark: SparkSession,
-    docs_dir: str,
-    index: IncrementalRetrievalIndex,
-    checkpoint_dir: str,
-    schema: T.StructType | None = None,
-    available_now: bool = True,
-    max_files_per_trigger: int | None = 1,
-    fields: dict[str, int] | None = None,
-) -> StreamingQuery:
-    """Wire a document directory as the change feed: each new parquet
-    file under ``docs_dir`` is a batch of added/updated documents, and
-    each micro-batch is MERGEd into the index by apply_batch (the outbox
-    pipeline's foreachBatch shape, streaming/pipeline.run_stage).
-    ``fields`` (column -> integer weight) streams a MULTI-FIELD index —
-    the schema must then carry those columns."""
-    from worker_spark.streaming.feed import file_feed_stream
-
-    if schema is None:
-        schema = T.StructType(
-            [
-                T.StructField("doc_id", T.LongType(), True),
-                T.StructField("text", T.StringType(), True),
-            ]
-        )
-    return file_feed_stream(
-        spark,
-        docs_dir,
-        lambda batch, bid: index.apply_batch(batch, batch_id=bid, fields=fields),
-        checkpoint_dir,
-        schema,
-        "idx",
-        available_now=available_now,
-        max_files_per_trigger=max_files_per_trigger,
-    )

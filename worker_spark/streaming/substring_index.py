@@ -55,10 +55,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.streaming import StreamingQuery
 
 from worker_spark.operators import substrings as SUB
 from worker_spark.plans.bucketed_state import BucketedParquetStateStore
+from worker_spark.streaming.feed import DOC_FEED_SCHEMA
 
 FPROWS_SCHEMA = T.StructType(
     [
@@ -99,6 +99,8 @@ class IncrementalSubstringIndex:
     """Winnowing-fingerprint state with per-batch bucket-scoped MERGE
     maintenance and span/report/screening read sides served without
     corpus text."""
+
+    FEED_SCHEMA = DOC_FEED_SCHEMA
 
     FPROWS = "fprows"
     FPS = "fps"
@@ -365,35 +367,3 @@ class IncrementalSubstringIndex:
                 F.col("a.fhash").alias("fhash"),
             )
         )
-
-
-def substring_maintenance_stream(
-    spark: SparkSession,
-    docs_dir: str,
-    index: IncrementalSubstringIndex,
-    checkpoint_dir: str,
-    schema: T.StructType | None = None,
-    available_now: bool = True,
-    max_files_per_trigger: int | None = 1,
-) -> StreamingQuery:
-    """Wire a document directory as the change feed — the same
-    foreachBatch shape as the other incremental indexes."""
-    from worker_spark.streaming.feed import file_feed_stream
-
-    if schema is None:
-        schema = T.StructType(
-            [
-                T.StructField("doc_id", T.LongType(), True),
-                T.StructField("text", T.StringType(), True),
-            ]
-        )
-    return file_feed_stream(
-        spark,
-        docs_dir,
-        lambda batch, bid: index.apply_batch(batch, batch_id=bid),
-        checkpoint_dir,
-        schema,
-        "subidx",
-        available_now=available_now,
-        max_files_per_trigger=max_files_per_trigger,
-    )

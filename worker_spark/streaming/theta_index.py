@@ -46,7 +46,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.streaming import StreamingQuery
 
 from worker_spark.operators.sketches import (
     KMV_K,
@@ -210,35 +209,3 @@ class IncrementalThetaIndex:
                 f"{r['n_hashes']}, k={self.k}) — reseed or replay"
             )
         return counts
-
-
-def theta_maintenance_stream(
-    spark: SparkSession,
-    feed_dir: str,
-    index: IncrementalThetaIndex,
-    checkpoint_dir: str,
-    schema: T.StructType,
-    group_col: str,
-    value_col: str,
-    available_now: bool = True,
-    max_files_per_trigger: int | None = 1,
-) -> StreamingQuery:
-    """Wire a parquet directory as the insert-only membership feed —
-    the same foreachBatch shape as the other incremental indexes."""
-    from worker_spark.streaming.feed import file_feed_stream
-
-    return file_feed_stream(
-        spark,
-        feed_dir,
-        lambda batch, bid: index.apply_batch(
-            batch,
-            batch_id=bid,
-            group_col=group_col,
-            value_col=value_col,
-        ),
-        checkpoint_dir,
-        schema,
-        "thidx",
-        available_now=available_now,
-        max_files_per_trigger=max_files_per_trigger,
-    )

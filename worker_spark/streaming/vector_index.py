@@ -58,7 +58,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.streaming import StreamingQuery
 
 from worker_spark.operators.similarity import (
     _dot,
@@ -101,6 +100,14 @@ CENTROIDS_SCHEMA = T.StructType(
 class IncrementalVectorIndex:
     """IVF cell lists + per-vector manifest with per-batch bucket-scoped
     MERGE maintenance, and an ANN scorer over the maintained state."""
+
+    # column order is part of the replay contract (feed.last_wins)
+    FEED_SCHEMA = T.StructType(
+        [
+            T.StructField("vec_id", T.LongType(), True),
+            T.StructField("embedding", T.ArrayType(T.FloatType()), True),
+        ]
+    )
 
     CELLS = "cells"
     VECMAP = "vecmap"
@@ -791,39 +798,3 @@ class IncrementalVectorIndex:
                 F.col("rnk").cast("int").alias("rnk"),
             )
         )
-
-
-def vector_maintenance_stream(
-    spark: SparkSession,
-    vectors_dir: str,
-    index: IncrementalVectorIndex,
-    checkpoint_dir: str,
-    schema: T.StructType | None = None,
-    available_now: bool = True,
-    max_files_per_trigger: int | None = 1,
-) -> StreamingQuery:
-    """Wire a vector directory as the change feed: each new parquet file
-    under ``vectors_dir`` is a batch of added/updated/deleted vectors,
-    MERGEd into the index by apply_batch (the same foreachBatch shape
-    as index_maintenance_stream)."""
-    from worker_spark.streaming.feed import file_feed_stream
-
-    if schema is None:
-        schema = T.StructType(
-            [
-                T.StructField("vec_id", T.LongType(), True),
-                T.StructField(
-                    "embedding", T.ArrayType(T.FloatType()), True
-                ),
-            ]
-        )
-    return file_feed_stream(
-        spark,
-        vectors_dir,
-        lambda batch, bid: index.apply_batch(batch, batch_id=bid),
-        checkpoint_dir,
-        schema,
-        "vidx",
-        available_now=available_now,
-        max_files_per_trigger=max_files_per_trigger,
-    )

@@ -61,7 +61,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.streaming import StreamingQuery
 
 from worker_spark.plans.bucketed_state import BucketedParquetStateStore
 
@@ -377,33 +376,3 @@ class IncrementalZOrderIndex:
                 "bounds derivation — reseed or replay"
             )
         return counts
-
-
-def zorder_maintenance_stream(
-    spark: SparkSession,
-    feed_dir: str,
-    index: IncrementalZOrderIndex,
-    checkpoint_dir: str,
-    schema: T.StructType,
-    id_col: str,
-    v1_col: str,
-    v2_col: str,
-    available_now: bool = True,
-    max_files_per_trigger: int | None = 1,
-) -> StreamingQuery:
-    """Wire a parquet directory as the append-only feed — the same
-    foreachBatch shape as the other incremental indexes."""
-    from worker_spark.streaming.feed import file_feed_stream
-
-    return file_feed_stream(
-        spark,
-        feed_dir,
-        lambda batch, bid: index.apply_batch(
-            batch, batch_id=bid, id_col=id_col, v1_col=v1_col, v2_col=v2_col
-        ),
-        checkpoint_dir,
-        schema,
-        "zidx",
-        available_now=available_now,
-        max_files_per_trigger=max_files_per_trigger,
-    )
