@@ -244,6 +244,13 @@ def test_settledness_gate():
     assert gate.check(True, "c2", now=231) is True       # 121s stable
     assert gate.check(False, "c2", now=232) is False     # work appeared -> reset
     assert gate.check(True, "c2", now=233) is False
+    # content_cursor is None while every content table is empty
+    fresh = S.SettlednessGate(settle_seconds=0)
+    assert fresh.check(True, None, now=0) is False       # starts settling
+    assert fresh.check(True, None, now=0) is True
+    assert gate.check(False, None, now=300) is False     # reset
+    assert gate.check(True, None, now=301) is False
+    assert gate.check(True, None, now=421) is True
 
 
 def test_snapshot_publish_and_retention(spark, tmp_path):

@@ -32,6 +32,19 @@ at-least-once + idempotent-apply contract (plans/state.py module
 docstring) already covers: replaying the same batch re-applies the same
 per-bucket MERGEs, each of which is idempotent.
 
+Manifest crash order (``reindex``): a DERIVED table bucketed by one key
+but replaced by another (postings by term, replaced by doc_id) cannot
+find a batch document's old rows from the batch alone, so an id-keyed
+MANIFEST table records where they live. ``reindex`` swaps the derived
+table FIRST and the manifest LAST. A crash between the two leaves the
+STALE manifest, and the replayed batch's touched set is again
+stale-manifest ∪ new-row buckets — a superset of everywhere the batch
+ids' derived rows can be, so the replay converges. The reverse order
+would commit the new manifest first, and a crash would then strand the
+old derived rows in buckets the replay no longer visits. Every
+maintained index with a manifest writes through ``reindex``; its
+module docstring names the pair.
+
 Sizing rule (the scale contract): a touched bucket's rewrite costs one
 bucket of bytes, so choose ``n_buckets`` to hold BUCKET BYTES near a
 file-compaction target (state_bytes / ~256 MB at cluster scale). Then a
@@ -61,6 +74,7 @@ import os
 import shutil
 import time
 import uuid
+from collections.abc import Callable
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -243,8 +257,16 @@ class BucketedParquetStateStore:
     def touched_buckets(self, df: DataFrame, *cols: Column | str) -> list[int]:
         """Distinct bucket ids present in df's key column(s) — a driver
         collect bounded by n_buckets."""
-        rows = df.select(self.bucket_of(*cols).alias("b")).distinct().collect()
-        return sorted(r["b"] for r in rows)
+        return self._collect_buckets(df.select(self.bucket_of(*cols).alias("b")))
+
+    @staticmethod
+    def _collect_buckets(first: DataFrame, *more: DataFrame) -> list[int]:
+        """The ONE touched-bucket collect: distinct ``b`` over the union
+        of one-column bucket-id frames, as one job however many frames
+        contribute."""
+        for df in more:
+            first = first.unionByName(df)
+        return sorted(r["b"] for r in first.distinct().collect())
 
     def bucket_of_long(self, value: int) -> int:
         """``bucket_of`` for one literal long key, computed host-side —
@@ -709,13 +731,14 @@ class BucketedParquetStateStore:
         set is derived here; when it is a DIFFERENT column (postings are
         bucketed by term but replaced by doc_id), the caller must pass
         ``touched`` covering every bucket that holds a doomed row — the
-        manifest contract retrieval_index documents (an insert landing
+        manifest contract ``reindex`` implements (an insert landing
         outside ``touched`` fails loudly in _write_buckets rather than
-        being silently dropped). ``existing`` lets a caller that already
-        read the touched buckets (e.g. for its manifest) hand the frame
-        over instead of paying a second read — it MUST be exactly
-        read(table, schema, buckets=touched) and still lazy over the
-        pre-swap files."""
+        being silently dropped). A derived touched set is ONE collect
+        over both sides' buckets, each hashed in its own column type.
+        ``existing`` lets ``reindex``, which already read the manifest's
+        touched buckets, hand the frame over instead of paying a second
+        read — it MUST be exactly read(table, schema, buckets=touched)
+        and still lazy over the pre-swap files."""
         self._validate_keys(table, [bucket_col])
         delete_on = delete_on or bucket_col
         if touched is None:
@@ -724,9 +747,9 @@ class BucketedParquetStateStore:
                     "delete_on differs from bucket_col: caller must "
                     "supply the touched-bucket set (manifest)"
                 )
-            touched = sorted(
-                set(self.touched_buckets(delete_keys, delete_on))
-                | set(self.touched_buckets(inserts, bucket_col))
+            touched = self._collect_buckets(
+                delete_keys.select(self.bucket_of(delete_on).alias("b")),
+                inserts.select(self.bucket_of(bucket_col).alias("b")),
             )
         if not touched:
             return
@@ -737,6 +760,60 @@ class BucketedParquetStateStore:
         )
         merged = kept.unionByName(inserts.select(*existing.columns))
         self._write_buckets(table, merged, [bucket_col], touched)
+
+    def reindex(
+        self,
+        ids: DataFrame,
+        manifest: str,
+        manifest_schema: T.StructType,
+        manifest_rows: DataFrame,
+        derived: str,
+        derived_schema: T.StructType,
+        derived_rows: DataFrame,
+        derived_key: str,
+        old_buckets: Callable[[DataFrame], DataFrame],
+        id_buckets: list[int] | None = None,
+    ) -> None:
+        """Replace the batch ids' rows of a DERIVED table (bucketed by
+        ``derived_key``, replaced by id) and of its MANIFEST (bucketed by
+        the one column of ``ids``): derived first, manifest last — the
+        crash order of the module docstring. ``old_buckets`` maps the
+        ids' OLD manifest rows to a one-column frame of every derived
+        bucket their rows can be in. ``id_buckets`` hands over the ids'
+        buckets when a composed caller already collected them. The
+        id-bucket collect and ONE old ∪ new derived-bucket collect run
+        before the first swap, so they materialize every lazy checkpoint
+        the batch frames carry; nothing touched writes nothing."""
+        (id_col,) = ids.columns
+        if id_buckets is None:
+            id_buckets = self.touched_buckets(ids, id_col)
+        old = self.read(manifest, manifest_schema, buckets=id_buckets)
+        touched = self._collect_buckets(
+            old_buckets(old.join(ids, id_col, "left_semi")).toDF("b"),
+            derived_rows.select(self.bucket_of(derived_key).alias("b")),
+        )
+        if not touched:
+            return
+        self.delete_then_insert(
+            derived,
+            ids,
+            derived_rows,
+            derived_schema,
+            bucket_col=derived_key,
+            delete_on=id_col,
+            touched=touched,
+        )
+        self.delete_then_insert(
+            manifest,
+            ids,
+            manifest_rows,
+            manifest_schema,
+            bucket_col=id_col,
+            touched=id_buckets,
+            # read above for the old buckets; still lazy over the
+            # pre-swap files — only the derived table swapped since
+            existing=old,
+        )
 
     def upsert(
         self,

@@ -401,11 +401,13 @@ class SettlednessGate:
             self._stable_cursor = None
             self._stable_since = None
             return False
-        if cursor != self._stable_cursor:
+        # _stable_since is None until a cursor is observed: content_cursor
+        # returns None for empty content tables, so a None cursor cannot
+        # mean "not yet observed"
+        if self._stable_since is None or cursor != self._stable_cursor:
             self._stable_cursor = cursor
             self._stable_since = now
             return False
-        assert self._stable_since is not None
         return (now - self._stable_since) >= self.settle_seconds
 
 

@@ -53,9 +53,11 @@ def register(name: str, oracle: Optional[str], doc: str = ""):
 _DRIVER_WINDOW = [
     # ---- Bucketed-store rotation (after round 15). ----
     # (a) Every query transitively CHANGED by the store's JVM-local
-    # empty-table read (plans/bucketed_state.local_frame): exactly
-    # these 23 streaming rows, verified by tools/query_hashes.py. They
-    # keep their round-14 relative order.
+    # empty-table read (plans/bucketed_state.local_frame), and again by
+    # its one manifest write (BucketedParquetStateStore.reindex) and
+    # one-collect delete_then_insert: exactly these 23 streaming rows
+    # both times, verified by tools/query_hashes.py. They keep their
+    # round-14 relative order.
     "streaming_quantile_index",
     "streaming_theta_overlap",
     "streaming_mixture_ledger",

@@ -305,7 +305,7 @@ class IncrementalCurationIndex:
         A batch carrying several versions of one doc_id is reduced to
         one row per key FIRST (feed.last_wins); an empty-text row is a
         delete."""
-        from worker_spark.streaming.feed import last_wins
+        from worker_spark.streaming.feed import batch_doc_ids, last_wins
 
         store = self.store
         batch = last_wins(
@@ -328,13 +328,7 @@ class IncrementalCurationIndex:
             .localCheckpoint(eager=False)
         )
         rows = self.decide(live).localCheckpoint(eager=False)
-        # batch_ids from the RAW batch: the key set is dedup-invariant,
-        # and deriving it from the deduped frame would run the agg twice
-        batch_ids = (
-            docs.select(F.col(id_col).cast("long").alias("doc_id"))
-            .distinct()
-            .localCheckpoint(eager=False)
-        )
+        batch_ids = batch_doc_ids(docs, id_col)
         # ONE touched-bucket collect serves both MERGEs (r15): both
         # tables bucket on doc_id and both delete exactly the batch ids,
         # so the touched set is the batch ids' buckets for each (insert

@@ -22,9 +22,9 @@ tables current —
   the stored fingerprint, so no separate bucket list is materialized
   (simpler than the inverted index's term_buckets array).
 
-Crash-order invariant (same argument as retrieval_index): bands swap
-BEFORE fps, so a torn batch replays against the STALE fingerprint and
-touches a superset of everywhere the document's band rows can be.
+Both tables are written by ``BucketedParquetStateStore.reindex``:
+bands (derived) before fps (manifest), the crash order its module
+docstring argues.
 
 Screening a new ingest batch against the maintained index is then the
 scale shape the operator docstring promises: fingerprint the batch
@@ -139,58 +139,26 @@ class IncrementalDedupIndex:
         per key FIRST — last-wins (feed.last_wins); without it
         ``simhash`` silently merged both versions' shingles into one
         fingerprint that matches neither (round-9 advice)."""
-        from worker_spark.streaming.feed import last_wins
+        from worker_spark.streaming.feed import batch_doc_ids, last_wins
 
         store = self.store
-        # lazy checkpoints (r15 job-count discipline): new_fps is
-        # materialized by the touched-band-bucket collect, batch_ids by
-        # the doc_buckets collect — both before either table's swap
+        # lazy (r15 job-count discipline): reindex's bucket collect
+        # materializes it before either table's swap
         new_fps = (
             simhash(last_wins(docs, [id_col]), id_col=id_col, text_col=text_col)
             .select(F.col("id").cast("long").alias("doc_id"), "simhash")
             .localCheckpoint(eager=False)
         )
-        # batch_ids from the RAW batch: the key set is identical before
-        # and after last_wins, and deriving it from the deduped frame
-        # would run the dedup agg a second time
-        batch_ids = (
-            docs.select(F.col(id_col).cast("long").alias("doc_id"))
-            .distinct()
-            .localCheckpoint(eager=False)
-        )
-
-        doc_buckets = store.touched_buckets(batch_ids, "doc_id")
-        old_fps = store.read(self.FPS, FPS_SCHEMA, buckets=doc_buckets)
-        old_bk = _band_rows(
-            old_fps.join(batch_ids, "doc_id", "left_semi")
-        ).select(store.bucket_of(F.col("bk")).alias("b"))
-        new_banded = _band_rows(new_fps)
-        new_bk = new_banded.select(store.bucket_of(F.col("bk")).alias("b"))
-        touched_band_buckets = sorted(
-            r["b"] for r in old_bk.unionByName(new_bk).distinct().collect()
-        )
-        if not touched_band_buckets:
-            return  # nothing fingerprinted and nothing to delete
-
-        # bands FIRST (crash-order invariant, module docstring)
-        store.delete_then_insert(
-            self.BANDS,
-            delete_keys=batch_ids,
-            inserts=new_banded,
-            schema=BANDS_SCHEMA,
-            bucket_col="bk",
-            delete_on="doc_id",
-            touched=touched_band_buckets,
-        )
-        store.delete_then_insert(
+        store.reindex(
+            batch_doc_ids(docs, id_col),
             self.FPS,
-            delete_keys=batch_ids,
-            inserts=new_fps,
-            schema=FPS_SCHEMA,
-            bucket_col="doc_id",
-            touched=doc_buckets,
-            existing=old_fps,  # read above for the manifest; still valid —
-            # only BANDS buckets were swapped since
+            FPS_SCHEMA,
+            new_fps,
+            self.BANDS,
+            BANDS_SCHEMA,
+            _band_rows(new_fps),
+            "bk",
+            lambda old: _band_rows(old).select(store.bucket_of("bk")),
         )
 
     def fsck(self) -> dict[str, int]:

@@ -86,7 +86,7 @@ class StreamingDedupPipeline:
         id_col: str = "doc_id",
         text_col: str = "text",
     ) -> None:
-        from worker_spark.streaming.feed import last_wins
+        from worker_spark.streaming.feed import batch_doc_ids, last_wins
 
         # one winner per key BEFORE screening: screening a superseded
         # draft would emit the loser version's edges. The batch, its id
@@ -97,11 +97,7 @@ class StreamingDedupPipeline:
         # modulus, checked below). Checkpoints are lazy; the one
         # doc_buckets collect materializes both.
         batch = last_wins(docs, [id_col]).localCheckpoint(eager=False)
-        batch_ids = (
-            batch.select(F.col(id_col).cast("long").alias("doc_id"))
-            .distinct()
-            .localCheckpoint(eager=False)
-        )
+        batch_ids = batch_doc_ids(batch, id_col)
         _require_one_modulus(self.exact.store, self.components.store)
         doc_buckets = self.exact.store.touched_buckets(batch_ids, "doc_id")
         self.exact.apply_batch(

@@ -16,9 +16,9 @@ Two state tables, same layout contract as the SimHash/MinHash indexes:
   an updated document's old hash row lives in the bucket of its OLD
   content hash, recoverable only from stored state.
 
-Crash-order invariant (same argument as the other indexes): hashes
-swap BEFORE fps, so a torn batch replays against the STALE manifest
-and touches a superset of everywhere the document's hash rows can be.
+Both tables are written by ``BucketedParquetStateStore.reindex``:
+hashes (derived) before fps (manifest), the crash order its module
+docstring argues.
 
 Delete semantics: a batch document with empty/whitespace-only text has
 no content — its rows are removed and nothing is re-inserted.
@@ -114,9 +114,9 @@ class IncrementalExactIndex:
         job count. ``batch_ids`` / ``doc_buckets`` likewise hand over
         the id frame / its bucket ids (same-modulus stores only) a
         composed caller already derived. Checkpoints are LAZY (r15
-        job-count discipline): each is materialized by the touched-
-        bucket collects below, which run before either table's swap."""
-        from worker_spark.streaming.feed import last_wins
+        job-count discipline): each is materialized by reindex's
+        bucket collects, which run before either table's swap."""
+        from worker_spark.streaming.feed import batch_doc_ids, last_wins
 
         store = self.store
         reduced = docs if pre_reduced else last_wins(docs, [id_col])
@@ -124,51 +124,19 @@ class IncrementalExactIndex:
             reduced, id_col=id_col, text_col=text_col
         ).localCheckpoint(eager=False)
         if batch_ids is None:
-            # batch_ids from the RAW batch: the key set is dedup-
-            # invariant, and deriving it from the deduped frame would
-            # run the agg twice
-            batch_ids = (
-                docs.select(F.col(id_col).cast("long").alias("doc_id"))
-                .distinct()
-                .localCheckpoint(eager=False)
-            )
-
-        if doc_buckets is None:
-            doc_buckets = store.touched_buckets(batch_ids, "doc_id")
-        old_fps = store.read(self.FPS, FPS_SCHEMA, buckets=doc_buckets)
+            batch_ids = batch_doc_ids(docs, id_col)
         inserts = new_fps.filter(F.col("content_hash").isNotNull())
-        old_b = (
-            old_fps.join(batch_ids, "doc_id", "left_semi")
-            .select(store.bucket_of(F.col("content_hash")).alias("b"))
-        )
-        new_b = inserts.select(
-            store.bucket_of(F.col("content_hash")).alias("b")
-        )
-        touched_hash_buckets = sorted(
-            r["b"] for r in old_b.unionByName(new_b).distinct().collect()
-        )
-        if not touched_hash_buckets:
-            return  # nothing hashed and nothing to delete
-
-        # hashes FIRST (crash-order invariant, module docstring)
-        self.store.delete_then_insert(
-            self.HASHES,
-            delete_keys=batch_ids,
-            inserts=inserts.select("content_hash", "doc_id"),
-            schema=HASHES_SCHEMA,
-            bucket_col="content_hash",
-            delete_on="doc_id",
-            touched=touched_hash_buckets,
-        )
-        self.store.delete_then_insert(
+        store.reindex(
+            batch_ids,
             self.FPS,
-            delete_keys=batch_ids,
-            inserts=inserts.select("doc_id", "content_hash"),
-            schema=FPS_SCHEMA,
-            bucket_col="doc_id",
-            touched=doc_buckets,
-            existing=old_fps,  # read above for the manifest; still valid —
-            # only HASHES buckets were swapped since
+            FPS_SCHEMA,
+            inserts.select("doc_id", "content_hash"),
+            self.HASHES,
+            HASHES_SCHEMA,
+            inserts.select("content_hash", "doc_id"),
+            "content_hash",
+            lambda old: old.select(store.bucket_of("content_hash")),
+            id_buckets=doc_buckets,
         )
 
     def fsck(self) -> dict[str, int]:

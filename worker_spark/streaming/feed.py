@@ -93,6 +93,20 @@ def last_wins(df: DataFrame, key_cols: list[str]) -> DataFrame:
     )
 
 
+def batch_doc_ids(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
+    """The batch's distinct ids as one long ``doc_id`` column, lazily
+    checkpointed (r15 job-count discipline: the caller's first bucket
+    collect materializes it, before any swap). Pass the raw batch or an
+    already-checkpointed reduced one: the key set is the same before and
+    after ``last_wins``, and deriving it from an unmaterialized reduced
+    frame would run the reduction twice."""
+    return (
+        docs.select(F.col(id_col).cast("long").alias("doc_id"))
+        .distinct()
+        .localCheckpoint(eager=False)
+    )
+
+
 def file_feed_stream(
     spark: SparkSession,
     feed_dir: str,

@@ -23,9 +23,9 @@ signature state: document batches arrive as a stream, and a
   math over the stored signature array (the fps-table trick of the
   SimHash index, applied to signatures).
 
-Crash-order invariant (same argument as the other two indexes): bands
-swap BEFORE sigs, so a torn batch replays against the STALE signature
-and touches a superset of everywhere the document's band rows can be.
+Both tables are written by ``BucketedParquetStateStore.reindex``:
+bands (derived) before sigs (manifest), the crash order its module
+docstring argues.
 
 Verification is where MinHash differs from SimHash: SimHash verifies
 by Hamming distance over the STORED fingerprints, but MinHash-LSH's
@@ -166,59 +166,28 @@ class IncrementalMinHashIndex:
         nothing but the job count. ``batch_ids`` / ``doc_buckets``
         likewise hand over the id frame / its bucket ids (same-modulus
         stores only) a composed caller already derived."""
-        from worker_spark.streaming.feed import last_wins
+        from worker_spark.streaming.feed import batch_doc_ids, last_wins
 
         store = self.store
         reduced = docs if pre_reduced else last_wins(docs, [id_col])
-        # lazy: materialized by the touched-band-bucket collect below,
-        # which runs before either table's swap
+        # lazy: materialized by reindex's bucket collects, which run
+        # before either table's swap
         new_sigs = self._signatures(reduced, id_col, text_col).localCheckpoint(
             eager=False
         )
         if batch_ids is None:
-            # batch_ids from the RAW batch: the key set is identical
-            # before and after last_wins, and deriving it from the
-            # deduped frame would run the dedup agg a second time.
-            # Lazy: materialized by the doc_buckets collect below.
-            batch_ids = (
-                docs.select(F.col(id_col).cast("long").alias("doc_id"))
-                .distinct()
-                .localCheckpoint(eager=False)
-            )
-
-        if doc_buckets is None:
-            doc_buckets = store.touched_buckets(batch_ids, "doc_id")
-        old_sigs = store.read(self.SIGS, SIGS_SCHEMA, buckets=doc_buckets)
-        old_bk = _band_rows(
-            old_sigs.join(batch_ids, "doc_id", "left_semi")
-        ).select(store.bucket_of(F.col("bk")).alias("b"))
-        new_banded = _band_rows(new_sigs)
-        new_bk = new_banded.select(store.bucket_of(F.col("bk")).alias("b"))
-        touched_band_buckets = sorted(
-            r["b"] for r in old_bk.unionByName(new_bk).distinct().collect()
-        )
-        if not touched_band_buckets:
-            return  # nothing signed and nothing to delete
-
-        # bands FIRST (crash-order invariant, module docstring)
-        store.delete_then_insert(
-            self.BANDS,
-            delete_keys=batch_ids,
-            inserts=new_banded,
-            schema=BANDS_SCHEMA,
-            bucket_col="bk",
-            delete_on="doc_id",
-            touched=touched_band_buckets,
-        )
-        store.delete_then_insert(
+            batch_ids = batch_doc_ids(docs, id_col)
+        store.reindex(
+            batch_ids,
             self.SIGS,
-            delete_keys=batch_ids,
-            inserts=new_sigs,
-            schema=SIGS_SCHEMA,
-            bucket_col="doc_id",
-            touched=doc_buckets,
-            existing=old_sigs,  # read above for the manifest; still valid —
-            # only BANDS buckets were swapped since
+            SIGS_SCHEMA,
+            new_sigs,
+            self.BANDS,
+            BANDS_SCHEMA,
+            _band_rows(new_sigs),
+            "bk",
+            lambda old: _band_rows(old).select(store.bucket_of("bk")),
+            id_buckets=doc_buckets,
         )
 
     def fsck(self) -> dict[str, int]:

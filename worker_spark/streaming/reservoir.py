@@ -84,7 +84,7 @@ class StreamingReservoir:
         old entry is dropped first — last write wins across batches,
         feed.last_wins within one), keep the global top-k. A replayed
         batch re-derives identical keys, so replays are no-ops."""
-        from worker_spark.streaming.feed import last_wins
+        from worker_spark.streaming.feed import batch_doc_ids, last_wins
 
         batch = last_wins(
             docs.select(
@@ -96,11 +96,7 @@ class StreamingReservoir:
         # lazy (r15 job-count discipline): both are materialized by
         # the write's touched-bucket collect, before the one swap
         scored = aes_scored(batch).localCheckpoint(eager=False)
-        batch_ids = (
-            docs.select(F.col(id_col).cast("long").alias("doc_id"))
-            .distinct()
-            .localCheckpoint(eager=False)
-        )
+        batch_ids = batch_doc_ids(docs, id_col)
         state = self.reservoir().join(batch_ids, "doc_id", "left_anti")
         merged = state.withColumn(
             "_r",
@@ -183,7 +179,7 @@ class StreamingStratifiedReservoir:
         Replays are no-ops (the flat reservoir's argument per
         stratum)."""
         from worker_spark.operators.sampling import grouped_topk
-        from worker_spark.streaming.feed import last_wins
+        from worker_spark.streaming.feed import batch_doc_ids, last_wins
 
         batch = last_wins(
             docs.select(
@@ -200,11 +196,7 @@ class StreamingStratifiedReservoir:
             .join(batch.select("doc_id", "stratum"), "doc_id")
             .localCheckpoint(eager=False)
         )
-        batch_ids = (
-            docs.select(F.col(id_col).cast("long").alias("doc_id"))
-            .distinct()
-            .localCheckpoint(eager=False)
-        )
+        batch_ids = batch_doc_ids(docs, id_col)
         state = self.reservoirs().join(batch_ids, "doc_id", "left_anti")
         merged = state.withColumn(
             "_r",

@@ -40,13 +40,9 @@ doc_id, the batch's natural key) therefore records each document's
 current term-bucket set; a batch's touched postings buckets are
 old-manifest ∪ new-term buckets — exact and bounded.
 
-Crash-order invariant: postings swap BEFORE doclen. A crash between the
-two leaves a STALE manifest (the pre-batch term buckets), and the
-streaming checkpoint replays the identical batch, whose touched set is
-again stale-manifest ∪ same-new-term buckets — a superset of everywhere
-the document's rows can be, so the replay converges. The reverse order
-would replace the manifest with the new buckets first; a crash then
-strands the document's old rows in buckets the replay no longer visits.
+Both tables are written by ``BucketedParquetStateStore.reindex``:
+postings (derived) before doclen (manifest), the crash order its module
+docstring argues.
 
 Query-time scoring reuses the SAME rounding scheme as
 operators/retrieval._bm25_scores via the shared ``bm25_term_score``
@@ -185,76 +181,39 @@ class IncrementalRetrievalIndex:
         per key FIRST — last-wins (feed.last_wins); without it
         _batch_delta summed BOTH versions' term frequencies into one
         posting row (round-9 advice)."""
-        from worker_spark.streaming.feed import last_wins
+        from worker_spark.streaming.feed import batch_doc_ids, last_wins
 
         store = self.store
-        # batch_ids from the RAW batch: the key set is identical before
-        # and after last_wins, and deriving it from the deduped frame
-        # would run the dedup agg a second time
-        batch_ids = docs.select(
-            F.col(id_col).cast("long").alias("doc_id")
-        ).distinct()
         tf = self._batch_delta(last_wins(docs, [id_col]), id_col, text_col, fields)
         # localCheckpoint: the bucket swaps invalidate lazy frames derived
         # from pre-swap files (BucketedParquetStateStore caution), and
         # tf must also not re-read the streaming batch after the
         # foreachBatch call returns. Lazy (r15 job-count discipline):
-        # tf is materialized by the touched-term-bucket collect and
-        # batch_ids by the doc_buckets collect — both run before either
+        # reindex's bucket collects materialize it before either
         # table's swap, so the caution's ordering requirement holds
         tf = tf.localCheckpoint(eager=False)
-        batch_ids = batch_ids.localCheckpoint(eager=False)
         # dl = sum(tf) per doc — derived from the CHECKPOINTED tf, so the
         # batch is tokenized exactly once (was twice: a separate dl agg
         # over a second explode of the raw text); stays lazy, the doclen
         # staging job below is its only consumer
         dl = tf.groupBy("doc_id").agg(F.sum("tf").cast("long").alias("dl"))
 
-        # touched postings buckets = old manifest (pruned doclen read by
-        # the batch docs' own buckets) UNION the new terms' buckets
-        doc_buckets = store.touched_buckets(batch_ids, "doc_id")
-        old_dl = store.read(self.DOCLEN, DOCLEN_SCHEMA, buckets=doc_buckets)
-        old_tb = old_dl.join(batch_ids, "doc_id", "left_semi").select(
-            F.explode("term_buckets").alias("b")
-        )
-        new_tb = tf.select(store.bucket_of(F.col("term")).alias("b"))
-        touched_term_buckets = sorted(
-            r["b"] for r in old_tb.unionByName(new_tb).distinct().collect()
-        )
-
-        # postings FIRST (crash-order invariant, module docstring)
-        store.delete_then_insert(
-            self.POSTINGS,
-            delete_keys=batch_ids,
-            inserts=tf,
-            schema=POSTINGS_SCHEMA,
-            bucket_col="term",
-            delete_on="doc_id",
-            touched=touched_term_buckets,
-        )
-        # doclen with the refreshed manifest
+        # the refreshed manifest: each document's term-bucket set
         manifest = tf.groupBy("doc_id").agg(
             F.sort_array(
                 F.collect_set(store.bucket_of(F.col("term")))
             ).alias("term_buckets")
         )
-        new_dl = dl.join(manifest, "doc_id").select(
-            "doc_id", "dl", "term_buckets"
-        )
-        store.delete_then_insert(
+        store.reindex(
+            batch_doc_ids(docs, id_col),
             self.DOCLEN,
-            delete_keys=batch_ids,
-            inserts=new_dl,
-            schema=DOCLEN_SCHEMA,
-            bucket_col="doc_id",
-            # already computed/read above for the old-manifest step;
-            # inserts are a subset of the batch docs, so touched is
-            # exact, and handing old_dl over skips a second read()+
-            # recover of the same doc buckets (review finding) — old_dl
-            # stays valid here because only POSTINGS buckets were
-            # swapped since it was created
-            touched=doc_buckets,
-            existing=old_dl,
+            DOCLEN_SCHEMA,
+            dl.join(manifest, "doc_id").select("doc_id", "dl", "term_buckets"),
+            self.POSTINGS,
+            POSTINGS_SCHEMA,
+            tf,
+            "term",
+            lambda old: old.select(F.explode("term_buckets")),
         )
 
     def clone_rebucketed(

@@ -24,10 +24,10 @@ multi-row-per-document fingerprint set):
   dup_frac denominator (a document shorter than the K-gram width has
   NO fingerprints but still owns a report row).
 
-Crash-order invariant (the exact-index argument verbatim): fprows swaps
-BEFORE fps, so a torn batch replays against the STALE manifest and
-touches a superset of everywhere the document's fingerprint rows can
-be; doclen swaps last and is idempotent under replay.
+fprows (derived) and fps (manifest) are written by
+``BucketedParquetStateStore.reindex``, derived first — the crash order
+its module docstring argues; doclen swaps last and is idempotent under
+replay.
 
 Delete semantics: a batch document with empty/whitespace-only text is a
 removal — its fingerprint rows, manifest rows, and length row all go,
@@ -139,7 +139,7 @@ class IncrementalSubstringIndex:
         values are unchanged. Checkpoints are LAZY (r15 job-count
         discipline), each materialized by the first count/collect that
         consumes it, before any bucket swap."""
-        from worker_spark.streaming.feed import last_wins
+        from worker_spark.streaming.feed import batch_doc_ids, last_wins
 
         store = self.store
         reduced = docs if pre_reduced else last_wins(docs, [id_col])
@@ -148,16 +148,9 @@ class IncrementalSubstringIndex:
         ).localCheckpoint(eager=False)
         new_fp = SUB.winnow_fingerprints(live).localCheckpoint(eager=False)
         if batch_ids is None:
-            # batch_ids from the RAW batch: the key set is dedup-invariant
-            batch_ids = (
-                docs.select(F.col(id_col).cast("long").alias("doc_id"))
-                .distinct()
-                .localCheckpoint(eager=False)
-            )
-
+            batch_ids = batch_doc_ids(docs, id_col)
         if doc_buckets is None:
             doc_buckets = store.touched_buckets(batch_ids, "doc_id")
-        old_fps = store.read(self.FPS, FPS_SCHEMA, buckets=doc_buckets)
         # a batch that only deletes docs the index never saw must be a
         # clean no-op; a doc shorter than the K-gram width has NO
         # fingerprints but DOES own a doclen row, so the no-op check
@@ -173,35 +166,18 @@ class IncrementalSubstringIndex:
             .count()
             > 0
         )
-        old_b = old_fps.join(batch_ids, "doc_id", "left_semi").select(
-            store.bucket_of(F.col("fhash")).alias("b")
+        store.reindex(
+            batch_ids,
+            self.FPS,
+            FPS_SCHEMA,
+            new_fp.select("doc_id", "fhash", "pos"),
+            self.FPROWS,
+            FPROWS_SCHEMA,
+            new_fp.select("fhash", "doc_id", "pos"),
+            "fhash",
+            lambda old: old.select(store.bucket_of("fhash")),
+            id_buckets=doc_buckets,
         )
-        new_b = new_fp.select(store.bucket_of(F.col("fhash")).alias("b"))
-        touched_hash_buckets = sorted(
-            r["b"] for r in old_b.unionByName(new_b).distinct().collect()
-        )
-
-        # fprows FIRST (crash-order invariant, module docstring)
-        if touched_hash_buckets:
-            store.delete_then_insert(
-                self.FPROWS,
-                delete_keys=batch_ids,
-                inserts=new_fp.select("fhash", "doc_id", "pos"),
-                schema=FPROWS_SCHEMA,
-                bucket_col="fhash",
-                delete_on="doc_id",
-                touched=touched_hash_buckets,
-            )
-            store.delete_then_insert(
-                self.FPS,
-                delete_keys=batch_ids,
-                inserts=new_fp.select("doc_id", "fhash", "pos"),
-                schema=FPS_SCHEMA,
-                bucket_col="doc_id",
-                touched=doc_buckets,
-                existing=old_fps,  # read above for the manifest; still
-                # valid — only FPROWS buckets were swapped since
-            )
         # doclen LAST: a short-but-live document (len < K) has no
         # fingerprints yet still owns a zero-filled report row, so its
         # length row must land even when no hash bucket was touched —

@@ -22,9 +22,9 @@ Why the manifest: an UPDATED vector can move to a different cell, so
 its old row lives in a bucket that is — by definition — absent from the
 new assignment's bucket set; touched = old-manifest ∪ new-assignment
 buckets is exact and bounded (the identical argument to the dropped-term
-manifest in retrieval_index.py). Crash-order invariant mirrors it too:
-cells swap BEFORE vecmap, so a replay after a torn batch still visits a
-superset of everywhere the vector's rows can be.
+manifest in retrieval_index.py). Both tables are written by
+``BucketedParquetStateStore.reindex``: cells (derived) before vecmap
+(manifest), the crash order its module docstring argues.
 
 Centroids are PINNED at index creation (stored in the state root):
 incremental maintenance can only converge to the batch build if every
@@ -269,9 +269,9 @@ class IncrementalVectorIndex:
             assign = assign.withColumn(
                 "code", F.lit(None).cast(T.ArrayType(T.LongType()))
             )
-        # lazy checkpoints (r15 job-count discipline): assign is
-        # materialized by the touched-cell-bucket collect, batch_ids by
-        # the vec_buckets collect — both before either table's swap
+        # lazy checkpoints (r15 job-count discipline): reindex's two
+        # bucket collects materialize batch_ids and assign before
+        # either table's swap
         assign = assign.select(
             "vec_id", "cell_id", "embedding", "code"
         ).localCheckpoint(eager=False)
@@ -282,43 +282,19 @@ class IncrementalVectorIndex:
             raw.select("vec_id").distinct().localCheckpoint(eager=False)
         )
 
-        # touched cells buckets = old manifest (pruned vecmap read by the
-        # batch's own vec buckets) UNION the new assignments' buckets
-        vec_buckets = store.touched_buckets(batch_ids, "vec_id")
-        old_map = store.read(self.VECMAP, VECMAP_SCHEMA, buckets=vec_buckets)
-        old_cb = old_map.join(batch_ids, "vec_id", "left_semi").select(
-            F.col("cell_bucket").alias("b")
-        )
-        new_cb = assign.select(store.bucket_of(F.col("cell_id")).alias("b"))
-        touched_cell_buckets = sorted(
-            r["b"] for r in old_cb.unionByName(new_cb).distinct().collect()
-        )
-        if not touched_cell_buckets:
-            return  # nothing indexed and nothing to delete
-
-        # cells FIRST (crash-order invariant, module docstring)
-        store.delete_then_insert(
-            self.CELLS,
-            delete_keys=batch_ids,
-            inserts=assign,
-            schema=CELLS_SCHEMA,
-            bucket_col="cell_id",
-            delete_on="vec_id",
-            touched=touched_cell_buckets,
-        )
-        new_map = assign.select(
-            "vec_id",
-            store.bucket_of(F.col("cell_id")).cast("int").alias("cell_bucket"),
-        )
-        store.delete_then_insert(
+        store.reindex(
+            batch_ids,
             self.VECMAP,
-            delete_keys=batch_ids,
-            inserts=new_map,
-            schema=VECMAP_SCHEMA,
-            bucket_col="vec_id",
-            touched=vec_buckets,
-            existing=old_map,  # read above for the manifest; still valid —
-            # only CELLS buckets were swapped since
+            VECMAP_SCHEMA,
+            assign.select(
+                "vec_id",
+                store.bucket_of("cell_id").alias("cell_bucket"),
+            ),
+            self.CELLS,
+            CELLS_SCHEMA,
+            assign,
+            "cell_id",
+            lambda old: old.select("cell_bucket"),
         )
 
     def clone_rebucketed(
