@@ -7,16 +7,14 @@ after each stage, replaying the reference's dataflow end to end."""
 from __future__ import annotations
 
 import datetime
-import json
 
-import pytest
 from pyspark.sql import functions as F
 
 from worker_spark import fixtures as FX
 from worker_spark.plans import outbox as OB
 from worker_spark.plans import sync as S
+from worker_spark.plans.bucketed_state import BucketedParquetStateStore
 from worker_spark.plans.search_documents import build_search_documents
-from worker_spark.plans.state import ParquetStateStore
 from worker_spark.schemas import (
     ARTICLE_BIBLIOGRAPHY,
     ARTICLE_DATA,
@@ -37,19 +35,11 @@ UPSTREAM = {
 }
 
 
-@pytest.mark.parametrize("store_kind", ["flat", "bucketed"])
-def test_full_sync_lifecycle(spark, tmp_path, store_kind):
-    """The lifecycle must run IDENTICALLY on both state stores — the flat
-    whole-directory-swap ParquetStateStore and the scale-safe
-    BucketedParquetStateStore (touched-bucket MERGEs). The bucketed run
-    is the store migration the r8 roadmap called for: same call sites,
-    keys declared at first write."""
-    if store_kind == "flat":
-        store = ParquetStateStore(spark, str(tmp_path / "state"))
-    else:
-        from worker_spark.plans.bucketed_state import BucketedParquetStateStore
-
-        store = BucketedParquetStateStore(spark, str(tmp_path / "state"), n_buckets=4)
+def test_full_sync_lifecycle(spark, tmp_path):
+    """The lifecycle on the bucketed state store (touched-bucket
+    MERGEs): the MERGE-maintained tables declare their keys at first
+    write."""
+    store = BucketedParquetStateStore(spark, str(tmp_path / "state"), n_buckets=4)
 
     # seed: article no:2 already stored at revision 1; upstream has moved it
     # to revision 2; no:1 and bm:3 are new upstream; no:9 was deleted upstream
@@ -225,7 +215,6 @@ def test_full_sync_lifecycle(spark, tmp_path, store_kind):
     assert gate.check(True, "c", now=1) is True
 
     sid = S.snapshot_publish(
-        str(tmp_path / "state"),
         str(tmp_path / "snaps"),
         {"articles": store.read("articles"), "docs": docs},
         "2026-01-02T00:00:00",

@@ -683,14 +683,13 @@ def test_bucketed_store_upsert_and_recovery(spark, tmp_path):
 
 
 def test_bucketed_store_rejects_legacy_flat_layout(spark, tmp_path):
-    """A table dir holding parquet files directly (the ParquetStateStore
+    """A table dir holding parquet files directly (the pre-bucketing
     flat layout, no bucket subdirs) must FAIL a bucketed read, not be
     silently treated as empty — a restarted streaming state root would
     otherwise reset the index with no way to replay (ADVICE r8)."""
     from pyspark.sql import types as T
 
     from worker_spark.plans.bucketed_state import BucketedParquetStateStore
-    from worker_spark.plans.state import ParquetStateStore
 
     schema = T.StructType(
         [
@@ -699,8 +698,7 @@ def test_bucketed_store_rejects_legacy_flat_layout(spark, tmp_path):
         ]
     )
     root = str(tmp_path / "legacy")
-    flat = ParquetStateStore(spark, root)
-    flat.write("t", spark.createDataFrame([(1, "a")], schema))
+    spark.createDataFrame([(1, "a")], schema).write.parquet(os.path.join(root, "t"))
 
     store = BucketedParquetStateStore(spark, root, n_buckets=4)
     with pytest.raises(RuntimeError, match="legacy flat"):

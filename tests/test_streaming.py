@@ -43,7 +43,6 @@ def test_outbox_stream_incremental_consumption(spark, tmp_path):
         "fetch_article",
         process,
         ckpt,
-        available_now=True,
     )
     assert q.awaitTermination(120)
     assert processed == [(1, "no:1")]  # batch_index row filtered out
@@ -57,7 +56,6 @@ def test_outbox_stream_incremental_consumption(spark, tmp_path):
         "fetch_article",
         process,
         ckpt,
-        available_now=True,
     )
     assert q2.awaitTermination(120)
     assert processed == [(1, "no:1"), (3, "no:2")]
@@ -149,19 +147,23 @@ def test_chained_fetch_store_stages(spark, tmp_path):
     the idempotent store job per micro-batch; a second tick with new jobs
     resumes from the checkpoint and upserts incrementally."""
     from worker_spark import fixtures as FX
-    from worker_spark.plans.state import ParquetStateStore
+    from worker_spark.plans.bucketed_state import BucketedParquetStateStore
     from worker_spark.schemas import ARTICLE_DATA
     from worker_spark.sources.fetch_sim import fetch_articles
     from pyspark.sql import functions as F
 
     outbox_dir = str(tmp_path / "outbox")
     ckpt = str(tmp_path / "ckpt")
-    store = ParquetStateStore(spark, str(tmp_path / "state"))
+    store = BucketedParquetStateStore(spark, str(tmp_path / "state"), n_buckets=4)
     arts_schema = (
         f"dictionary: string, id: bigint, data: {ARTICLE_DATA.simpleString()}, "
         "sync_status: string"
     )
-    store.write("articles", spark.createDataFrame([], schema=arts_schema))
+    store.write(
+        "articles",
+        spark.createDataFrame([], schema=arts_schema),
+        keys=["dictionary", "id"],
+    )
     corpus = {("no", 1): FX.DEEP_ARTICLE, ("no", 2): FX.DIALECT_SHOW_FILTER}
 
     def store_batch(batch_df, epoch_id):
@@ -184,7 +186,6 @@ def test_chained_fetch_store_stages(spark, tmp_path):
         "fetch_article",
         store_batch,
         ckpt,
-        available_now=True,
     )
     assert q.awaitTermination(180)
     assert store.read("articles").count() == 1
@@ -204,7 +205,6 @@ def test_chained_fetch_store_stages(spark, tmp_path):
         "fetch_article",
         store_batch,
         ckpt,
-        available_now=True,
     )
     assert q2.awaitTermination(180)
     got = {r["id"]: r["sync_status"] for r in store.read("articles").collect()}
@@ -334,3 +334,39 @@ def test_file_feed_stream_needs_a_schema_for_caller_named_columns():
     idx = IncrementalQuantileIndex.__new__(IncrementalQuantileIndex)
     with pytest.raises(ValueError, match="FEED_SCHEMA"):
         file_feed_stream(None, "feed", idx, "ckpt")
+
+
+def test_drained_drops_sink_and_checkpoint(spark, tmp_path, monkeypatch):
+    """The memory-sink rows' one drive path hands the drained sink to
+    the block, then drops the sink's view and removes the checkpoint
+    dir, both on a normal exit and when the block raises."""
+    import os
+    import tempfile
+
+    from worker_spark.queries.streamq import _drained
+
+    feed = str(tmp_path / "feed")
+    rows = spark.createDataFrame([(1, "a"), (2, "b"), (3, "a")], "k long, v string")
+    rows.coalesce(1).write.parquet(feed)
+    scratch = tmp_path / "scratch"
+    scratch.mkdir()
+    monkeypatch.setattr(tempfile, "tempdir", str(scratch))
+
+    def sinks():
+        return [t.name for t in spark.catalog.listTables() if t.name.startswith("drain_probe_")]
+
+    def counts():
+        stream = spark.readStream.schema("k long, v string").parquet(feed)
+        return stream.groupBy("v").count()
+
+    with _drained(spark, "drain_probe", counts(), "complete") as out:
+        assert len(sinks()) == 1 and len(os.listdir(scratch)) == 1
+        got = {r["v"]: r["count"] for r in out.collect()}
+    assert got == {"a": 2, "b": 1}
+    assert sinks() == [] and os.listdir(scratch) == []
+
+    with pytest.raises(ValueError, match="block failed"):
+        with _drained(spark, "drain_probe", counts(), "complete") as out:
+            assert out.count() == 2
+            raise ValueError("block failed")
+    assert sinks() == [] and os.listdir(scratch) == []

@@ -13,7 +13,7 @@ from pyspark.sql import functions as F
 from worker_spark import fixtures as FX
 from worker_spark.plans import outbox as OB
 from worker_spark.plans import sync as S
-from worker_spark.plans.state import ParquetStateStore
+from worker_spark.plans.bucketed_state import BucketedParquetStateStore
 from worker_spark.schemas import (
     ARTICLE_BIBLIOGRAPHY,
     ARTICLE_DATA,
@@ -254,11 +254,12 @@ def test_settledness_gate():
 
 
 def test_snapshot_publish_and_retention(spark, tmp_path):
+    import os
+
     out = str(tmp_path / "snaps")
     df = spark.range(5)
     for cursor in ["2026-01-01T00:00:00", "2026-01-02T00:00:00", "2026-01-03T00:00:00", "2026-01-04T00:00:00"]:
-        sid = S.snapshot_publish(str(tmp_path), out, {"t": df}, cursor, retention=3)
-    import os
+        sid = S.snapshot_publish(out, {"t": df}, cursor, retention=3)
 
     snaps = sorted(d for d in os.listdir(out) if d != "latest")
     assert len(snaps) == 3  # oldest pruned
@@ -269,11 +270,41 @@ def test_snapshot_publish_and_retention(spark, tmp_path):
     restored = spark.read.parquet(os.path.join(out, snaps[-1], "t"))
     assert restored.count() == 5
 
+    # republishing the committed cursor (a polling publisher whose gate
+    # stays open) returns its id and leaves the snapshot as it was
+    again = S.snapshot_publish(out, {"t": spark.range(7)}, "2026-01-04T00:00:00", retention=3)
+    assert again == sid
+    assert spark.read.parquet(os.path.join(out, sid, "t")).count() == 5
+    assert json.load(open(os.path.join(out, sid, "manifest.json"))) == manifest
+    S.verify_snapshot(spark, out, sid)
+
+    # a torn publish (a dir with no manifest) is not a snapshot:
+    # retention keeps the two newest COMMITTED ones around it
+    out2 = str(tmp_path / "snaps2")
+
+    def committed():
+        return sorted(
+            d for d in os.listdir(out2) if os.path.exists(os.path.join(out2, d, "manifest.json"))
+        )
+
+    S.snapshot_publish(out2, {"t": df}, "2026-02-01T00:00:00", retention=2)
+    torn = os.path.join(out2, "2026-02-02T00-00-00")
+    df.write.parquet(os.path.join(torn, "t"))
+    S.snapshot_publish(out2, {"t": df}, "2026-02-03T00:00:00", retention=2)
+    assert committed() == ["2026-02-01T00-00-00", "2026-02-03T00-00-00"]
+    # publishing the torn id replaces the torn dir with a committed one
+    S.snapshot_publish(out2, {"t": df}, "2026-02-02T00:00:00", retention=2)
+    assert committed() == ["2026-02-02T00-00-00", "2026-02-03T00-00-00"]
+    S.verify_snapshot(spark, out2, "2026-02-02T00-00-00")
+
 
 def test_state_store_upsert(spark, tmp_path):
-    store = ParquetStateStore(spark, str(tmp_path / "state"))
+    """S7 composite-key MERGE: (dictionary, id) is the key, declared at
+    first write so updated rows land in the bucket of the rows they
+    replace."""
+    store = BucketedParquetStateStore(spark, str(tmp_path / "state"), n_buckets=4)
     a1 = _articles(spark, [("no", 1, 1, "t1", "idle"), ("no", 2, 1, "t2", "idle")])
-    store.write("articles", a1)
+    store.write("articles", a1, keys=["dictionary", "id"])
     upd = _articles(spark, [("no", 2, 5, "t9", "pending_index"), ("no", 3, 1, "t3", "idle")])
     store.upsert("articles", upd, keys=["dictionary", "id"])
     got = {r["id"]: (r["revision"], r["sync_status"]) for r in store.read("articles").collect()}
@@ -281,27 +312,29 @@ def test_state_store_upsert(spark, tmp_path):
 
 
 def test_state_store_recovers_lost_swap(spark, tmp_path):
-    """A crash between write()'s two renames leaves the table dir missing
-    but its contents under .old-*. read()/exists() must restore it rather
-    than silently returning an empty (reset) table; an orphaned .tmp-* is
-    an uncommitted write and is rolled back."""
+    """A crash between a bucket swap's two renames leaves the bucket dir
+    missing but its contents under .old-*. read()/exists() must restore
+    it rather than silently returning an empty (reset) table; an
+    orphaned .tmp-* is an uncommitted write and is rolled back. One
+    bucket makes that bucket the whole table."""
     import os as _os
     import shutil as _shutil
 
     root = str(tmp_path / "state")
-    store = ParquetStateStore(spark, root)
+    store = BucketedParquetStateStore(spark, root, n_buckets=1)
     a1 = _articles(spark, [("no", 1, 1, "t1", "idle"), ("no", 2, 1, "t2", "idle")])
-    store.write("articles", a1)
+    store.write("articles", a1, keys=["dictionary", "id"])
 
     # simulate the crash window: final renamed away, tmp never moved in
-    final = _os.path.join(root, "articles")
+    tdir = _os.path.join(root, "articles")
+    final = _os.path.join(tdir, "b00000")
     _os.rename(final, final + ".old-deadbeef")
     _shutil.copytree(final + ".old-deadbeef", final + ".tmp-cafe0000")
 
     assert store.exists("articles")  # recovery ran
     got = {r["id"] for r in store.read("articles").collect()}
     assert got == {1, 2}
-    leftovers = [n for n in _os.listdir(root) if ".old-" in n or ".tmp-" in n]
+    leftovers = [n for n in _os.listdir(tdir) if ".old-" in n or ".tmp-" in n]
     assert leftovers == []
 
     # a table that never existed still reads empty (no false recovery)
@@ -390,7 +423,7 @@ def test_snapshot_fingerprint_verification(spark, tmp_path):
     snapshot is tampered with."""
     out = str(tmp_path / "fsnaps")
     df = spark.range(100).withColumn("v", F.col("id") * 2)
-    sid = S.snapshot_publish(str(tmp_path), out, {"t": df}, "2026-02-01T00:00:00")
+    sid = S.snapshot_publish(out, {"t": df}, "2026-02-01T00:00:00")
     S.verify_snapshot(spark, out, sid)  # intact -> passes
 
     # fingerprint is order-insensitive: same content reshuffled matches

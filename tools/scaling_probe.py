@@ -466,10 +466,10 @@ def state_probe() -> None:
       with n_buckets scaled to hold BUCKET BYTES constant (the sizing
       rule in plans/bucketed_state.py): per-batch wall and rewritten
       bytes should stay ~flat as state grows 10x.
-    * full-rewrite — ParquetStateStore.upsert of the same batch's
-      posting rows into the same-size postings table: rewritten bytes
-      ARE the state (the pre-r8 behavior the verdict graded weak),
-      growing linearly.
+    * full-rewrite — a one-bucket BucketedParquetStateStore.upsert of
+      the same batch's posting rows into the same-size postings table:
+      one bucket is the whole table, so rewritten bytes ARE the state
+      (the pre-r8 behavior the verdict graded weak), growing linearly.
 
     The dedup (SimHash), minhash (LSH) and vector (IVF) indexes share
     the same store and delete-then-insert shape; their rows MEASURE
@@ -484,8 +484,11 @@ def state_probe() -> None:
 
     from pyspark.sql import functions as F
 
-    from worker_spark.plans.bucketed_state import rewritten_bytes, tree_bytes
-    from worker_spark.plans.state import ParquetStateStore
+    from worker_spark.plans.bucketed_state import (
+        BucketedParquetStateStore,
+        rewritten_bytes,
+        tree_bytes,
+    )
     from worker_spark.session import get_spark
     from worker_spark.streaming.retrieval_index import (
         POSTINGS_SCHEMA,
@@ -528,8 +531,10 @@ def state_probe() -> None:
                 snap, tree_bytes(os.path.join(work, "idx"))
             ) / 1e6
 
-            full = ParquetStateStore(spark, os.path.join(work, "full"))
-            full.write("postings", idx.postings())
+            full = BucketedParquetStateStore(
+                spark, os.path.join(work, "full"), n_buckets=1
+            )
+            full.write("postings", idx.postings(), keys=["term", "doc_id"])
             batch_tf = idx._batch_delta(batch, "doc_id", "text")
             snap = tree_bytes(os.path.join(work, "full"))
             t0 = time.perf_counter()

@@ -1,36 +1,41 @@
-"""Hash-bucketed parquet state: per-batch MERGEs rewrite only touched
-buckets.
+"""Hash-bucketed parquet state: the one state store. Per-batch MERGEs
+rewrite only touched buckets.
 
-``ParquetStateStore`` (plans/state.py) swaps a table's WHOLE directory
-per write — correct and crash-safe, but O(state) write bytes per batch:
-at 100 TB a micro-batch MERGE into a large postings table would rewrite
-the full table every trigger, a structural scale defect for any
-frequently-maintained state. This store fixes the write amplification in
-plain parquet, no transactional table format needed: a table is
-``n_buckets`` fixed sibling directories (``b00000``..), every row lives
-in the bucket of its BUCKET KEY (``pmod(xxhash64(key), n_buckets)``),
-and a MERGE reads and rewrites ONLY the buckets its batch touches —
-O(batch + touched buckets) I/O; untouched buckets' files are never
-opened, listed into a job, or rewritten (asserted by
-tests/test_incremental_retrieval.py over before/after file snapshots).
+Delivery contract: the reference keeps state in Postgres with row-level
+upserts and transactional outbox writes (src/storage.rs:118-245,
+668-688). Without a transactional table format in this environment,
+state tables are plain parquet directories updated by read-merge-
+overwrite with atomic directory swaps, and every job is idempotent
+(MERGE semantics re-applied on replay). That is the §7.5-5 documented
+relaxation: exactly-once handoff becomes at-least-once + idempotent
+apply — the same guarantee the reference's consumers already assume
+(src/sync_service.rs:198-220).
+
+Layout: a table is ``n_buckets`` fixed sibling directories
+(``b00000``..), every row lives in the bucket of its BUCKET KEY
+(``pmod(xxhash64(key), n_buckets)``), and a MERGE reads and rewrites
+ONLY the buckets its batch touches — O(batch + touched buckets) I/O;
+untouched buckets' files are never opened, listed into a job, or
+rewritten (asserted by tests/test_incremental_retrieval.py over
+before/after file snapshots). A one-bucket root is the whole-table
+store: every MERGE rewrites the full table, O(state) write bytes per
+batch (tools/scaling_probe.py --state uses it as the full-rewrite
+baseline).
 
 Reference semantics carried over: S8 delete-then-insert link replace
 (src/storage.rs:150-167) and S7 upsert (src/storage.rs:118-245), scoped
 to buckets. At cluster scale the layout maps 1:1 onto a Delta/Iceberg
 table bucketed by the same key, with MERGE INTO + dynamic file pruning
-replacing the directory swaps; the API is deliberately the same shape
-as ParquetStateStore so the backend can be swapped without touching
-consumers.
+replacing the directory swaps.
 
-Crash safety is per-bucket: each bucket directory swaps through the same
-``.tmp-*`` / ``.old-*`` rename discipline as ParquetStateStore (recovery
-heals a mid-swap crash; a bucket emptied by a MERGE becomes an empty
-directory rather than a removed one, so "missing + .old present" always
-means a torn swap, never a legitimate delete). A crash BETWEEN bucket
-swaps of one batch leaves the batch partially applied, which the
-at-least-once + idempotent-apply contract (plans/state.py module
-docstring) already covers: replaying the same batch re-applies the same
-per-bucket MERGEs, each of which is idempotent.
+Crash safety is per-bucket: each bucket directory swaps through a
+``.tmp-*`` / ``.old-*`` rename pair (recovery heals a mid-swap crash; a
+bucket emptied by a MERGE becomes an empty directory rather than a
+removed one, so "missing + .old present" always means a torn swap,
+never a legitimate delete). A crash BETWEEN bucket swaps of one batch
+leaves the batch partially applied, which the delivery contract above
+already covers: replaying the same batch re-applies the same per-bucket
+MERGEs, each of which is idempotent.
 
 Manifest crash order (``reindex``): a DERIVED table bucketed by one key
 but replaced by another (postings by term, replaced by doc_id) cannot
@@ -52,9 +57,9 @@ batch's MERGE cost is O(batch keys x target bytes) — independent of
 total state size, the same granularity contract as Delta/Iceberg
 file-level MERGE. With n_buckets held fixed while state grows, cost
 degrades gracefully to (touched/n_buckets) of a full rewrite — still
-16x+ better than ParquetStateStore's whole-table swap, but the constant
-is the knob, not the law. tools/scaling_probe.py --state measures both
-regimes.
+16x+ better than a one-bucket root's whole-table rewrite, but the
+constant is the knob, not the law. tools/scaling_probe.py --state
+measures both regimes.
 
 Control plane: the touched-bucket id set is collect()ed to the driver to
 drive the directory swaps — bounded by ``n_buckets``, never by data
@@ -62,9 +67,9 @@ volume (and by the batch's key count when that is smaller).
 ``n_buckets`` is pinned in a meta file on first write so every later
 session buckets rows identically.
 
-Single-writer assumption (same as ParquetStateStore): one maintenance
-process per state root; readers are safe concurrently with recovery but
-not with an in-flight swap of the bucket they read.
+Single-writer assumption: one maintenance process per state root;
+readers are safe concurrently with recovery but not with an in-flight
+swap of the bucket they read.
 """
 
 from __future__ import annotations
@@ -76,11 +81,9 @@ import time
 import uuid
 from collections.abc import Callable
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-
-from worker_spark.plans.state import _merge_latest
 
 DEFAULT_N_BUCKETS = 16
 _META = "_n_buckets"
@@ -221,9 +224,9 @@ def rewritten_bytes(
 
 class BucketedParquetStateStore:
     """Directory-of-buckets parquet state with touched-bucket-only
-    copy-on-write MERGEs (the scale-safe sibling of ParquetStateStore).
+    copy-on-write MERGEs.
 
-    CAUTION (inherited): a bucket swap invalidates lazy DataFrames
+    CAUTION: a bucket swap invalidates lazy DataFrames
     derived from the pre-swap files of that bucket — re-read after a
     write, or localCheckpoint(eager=True) inputs that must survive it.
     """
@@ -341,17 +344,21 @@ class BucketedParquetStateStore:
         return f"b{b:05d}"
 
     def _recover(self, table: str) -> None:
-        """Heal torn per-bucket swaps (the ParquetStateStore._recover
-        logic applied per bucket) and sweep orphaned staging dirs.
+        """Heal torn per-bucket swaps and sweep orphaned staging dirs. A
+        bucket dir missing while a ``.old-*`` sibling exists is a swap
+        lost between its two renames: the displaced copy is restored,
+        never read as an empty (reset) bucket. Once a live dir exists,
+        stale ``.old-*``/``.tmp-*`` siblings are cleared (an orphan
+        ``.tmp-*`` is an uncommitted write and is rolled back).
 
         Refuses a LEGACY FLAT LAYOUT: a table dir holding parquet data
-        files directly (the ParquetStateStore layout — no bNNNNN bucket
-        subdirs) must not be silently read as an empty bucketed table; a
+        files directly (no bNNNNN bucket subdirs: the pre-bucketing
+        layout) must not be silently read as an empty bucketed table; a
         pre-existing state root restarted after the layout change would
         otherwise reset to empty, and a streaming checkpoint prevents
         replaying old batches to rebuild it. Migrate explicitly: read
-        the old root with ParquetStateStore and upsert into a fresh
-        bucketed root."""
+        the flat table with ``spark.read.parquet`` and ``write`` it into
+        a fresh bucketed root."""
         tdir = self._table_dir(table)
         if not os.path.isdir(tdir):
             return
@@ -366,8 +373,8 @@ class BucketedParquetStateStore:
             raise RuntimeError(
                 f"{tdir}: found data files outside bucket subdirectories "
                 f"(e.g. {sorted(flat)[:3]}) — this looks like a legacy "
-                "flat ParquetStateStore table, which this store would "
-                "silently ignore; migrate it into a bucketed root first"
+                "flat-layout table, which this store would silently "
+                "ignore; migrate it into a bucketed root first"
             )
         bases = {n.split(".")[0] for n in names if n.startswith("b")}
         for base in bases:
@@ -383,8 +390,7 @@ class BucketedParquetStateStore:
             elif not olds:
                 # crash before a NEVER-populated bucket's first commit:
                 # no final, no displaced .old- — the orphan .tmp- is an
-                # uncommitted write and is correctly rolled back (the
-                # ParquetStateStore doctrine)
+                # uncommitted write and is correctly rolled back
                 for n in tmps:
                     shutil.rmtree(os.path.join(tdir, n), ignore_errors=True)
         for n in names:
@@ -670,12 +676,11 @@ class BucketedParquetStateStore:
         keys: list[str] | None = None,
         touched: list[int] | None = None,
     ) -> None:
-        """Full-table replace (ParquetStateStore.write parity — the
-        seeding / snapshot path; O(state) by definition, so the
-        touched-bucket economics don't apply). ``keys`` declares the
-        bucket-key columns; on the first write of a table they are
-        pinned (default: all columns — fine for tables only ever
-        replaced whole, but a table that will later be ``upsert``-ed
+        """Full-table replace (the seeding / snapshot path; O(state) by
+        definition, so the touched-bucket economics don't apply).
+        ``keys`` declares the bucket-key columns; on the first write of
+        a table they are pinned (default: all columns — fine for tables
+        only ever replaced whole, but a table that will later be ``upsert``-ed
         must declare its MERGE keys here so updated rows land in the
         bucket of the rows they replace). ``touched`` lets a caller that
         KNOWS its rows' bucket set (a constant-key table via
@@ -833,6 +838,19 @@ class BucketedParquetStateStore:
         updates = updates.select(*existing.columns)
         merged = _merge_latest(existing, updates, keys)
         self._write_buckets(table, merged, keys, touched)
+
+
+def _merge_latest(existing: DataFrame, updates: DataFrame, keys: list[str]) -> DataFrame:
+    """Union with precedence to update rows (per key, the update wins)."""
+    tagged = existing.withColumn("_prio", F.lit(0)).unionByName(
+        updates.withColumn("_prio", F.lit(1))
+    )
+    w = Window.partitionBy(*keys).orderBy(F.desc("_prio"))
+    return (
+        tagged.withColumn("_rn", F.row_number().over(w))
+        .filter(F.col("_rn") == 1)
+        .drop("_prio", "_rn")
+    )
 
 
 _SNAP_MANIFEST = "_snapshot_manifest"  # the snapshot's commit witness

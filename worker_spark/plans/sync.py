@@ -22,6 +22,7 @@ import json
 import os
 import shutil
 import time
+import uuid
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -449,7 +450,6 @@ def verify_snapshot(spark, out_root: str, snapshot_id: str) -> None:
 
 
 def snapshot_publish(
-    store_root: str,
     out_root: str,
     tables: dict[str, DataFrame],
     cursor: str,
@@ -458,12 +458,22 @@ def snapshot_publish(
     """S12 (src/snapshot.rs:303-363,578-651): write each table under
     ``{out_root}/{snapshot_id}/``, a manifest.json with row counts and
     content fingerprints, refresh ``latest``, prune to the newest
-    ``retention`` snapshots (lexical id sort)."""
+    ``retention`` snapshots (lexical id sort).
+
+    The tables and manifest are written into a ``.stage-*`` dir whose
+    rename to the id is the commit, so a crashed publish never leaves a
+    snapshot-named dir. Only dirs holding a manifest are snapshots:
+    retention counts and prunes nothing else. Snapshots are immutable:
+    republishing a committed id (a polling publisher whose gate stays
+    open) returns the id and changes nothing."""
     snapshot_id = cursor.replace(":", "-").replace("+", "Z")
     target = os.path.join(out_root, snapshot_id)
+    if os.path.exists(os.path.join(target, "manifest.json")):
+        return snapshot_id
+    stage = f"{target}.stage-{uuid.uuid4().hex[:8]}"
     manifest: dict[str, object] = {"cursor": cursor, "tables": {}}
     for name, df in tables.items():
-        path = os.path.join(target, name)
+        path = os.path.join(stage, name)
         df.write.mode("overwrite").parquet(path)
         # count + fingerprint from the parquet just written, NOT the lazy
         # input plan: re-executing the plan could see concurrently-swapped
@@ -475,14 +485,20 @@ def snapshot_publish(
             "rows": written.count(),
             "fingerprint": table_fingerprint(written),
         }
-    with open(os.path.join(target, "manifest.json"), "w") as f:
+    with open(os.path.join(stage, "manifest.json"), "w") as f:
         json.dump(manifest, f, sort_keys=True)
+    # a manifest-less dir under the id is a torn pre-staging publish
+    shutil.rmtree(target, ignore_errors=True)
+    os.rename(stage, target)
     latest = os.path.join(out_root, "latest")
     with open(latest + ".tmp", "w") as f:
         f.write(snapshot_id)
     os.replace(latest + ".tmp", latest)
     snaps = sorted(
-        d for d in os.listdir(out_root) if d not in ("latest",) and not d.endswith(".tmp")
+        d
+        for d in os.listdir(out_root)
+        if ".stage-" not in d
+        and os.path.exists(os.path.join(out_root, d, "manifest.json"))
     )
     for stale in snaps[:-retention]:
         shutil.rmtree(os.path.join(out_root, stale), ignore_errors=True)

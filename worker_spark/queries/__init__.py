@@ -53,11 +53,12 @@ def register(name: str, oracle: Optional[str], doc: str = ""):
 _DRIVER_WINDOW = [
     # ---- Bucketed-store rotation (after round 15). ----
     # (a) Every query transitively CHANGED by the store's JVM-local
-    # empty-table read (plans/bucketed_state.local_frame), and again by
+    # empty-table read (plans/bucketed_state.local_frame), again by
     # its one manifest write (BucketedParquetStateStore.reindex) and
-    # one-collect delete_then_insert: exactly these 23 streaming rows
-    # both times, verified by tools/query_hashes.py. They keep their
-    # round-14 relative order.
+    # one-collect delete_then_insert, and again when _merge_latest
+    # moved into bucketed_state (one state store): exactly these 23
+    # streaming rows each time, verified by tools/query_hashes.py.
+    # They keep their round-14 relative order.
     "streaming_quantile_index",
     "streaming_theta_overlap",
     "streaming_mixture_ledger",
@@ -88,7 +89,9 @@ _DRIVER_WINDOW = [
     # feed-staging cache (streaming/staging.py, VERDICT r13 item 1). The
     # five event-source rows lead (they sat BELOW the r13 boundary, so they are also the
     # stalest of the changed set — streaming_topk_window first, the
-    # six-round perf-watch row whose fix this change is).
+    # six-round perf-watch row whose fix this change is). All seven
+    # changed again with their one memory-sink drive path
+    # (streamq._drained / _events_feed).
     "streaming_topk_window",
     "streaming_event_window_counts",
     "streaming_stateful_sessions",

@@ -40,50 +40,18 @@ from worker_spark.streaming.staging import staged_dir
     "batch tumbling-window aggregation.",
 )
 def q_streaming_event_window_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-
-    # pyspark >= 4.1.2 reads the TIMESTAMP(NANOS) column as TIMESTAMP_NTZ,
-    # which withWatermark rejects (EVENT_TIME_IS_NOT_ON_TIMESTAMP_TYPE);
-    # event-time needs the instant type. The wall-clock value is preserved
-    # under the session timezone, so the formatted output strings (and the
-    # DuckDB naive-timestamp oracle) are unaffected.
-    events = load_table(spark, sf_dir, "events").withColumn(
-        "ts", F.col("ts").cast("timestamp")
-    )
-    src_dir = staged_dir(
-        sf_dir,
-        "events_multi",
-        lambda d: events.write.mode("overwrite").parquet(d),
-    )
-    ckpt = tempfile.mkdtemp(prefix="stream_ckpt_")
-    sink = f"stream_out_{uuid.uuid4().hex[:8]}"
-    try:
-        stream = spark.readStream.schema(events.schema).parquet(src_dir)
-        agg = (
-            stream.withWatermark("ts", "10 minutes")
-            .groupBy(F.window("ts", "1 minute"), F.col("event_type"))
-            .agg(
-                F.count(F.lit(1)).alias("n_events"),
-                F.round(F.sum("value"), 2).alias("total_value"),
-            )
+    events, src_dir = _events_feed(spark, sf_dir, "events_multi")
+    stream = spark.readStream.schema(events.schema).parquet(src_dir)
+    agg = (
+        stream.withWatermark("ts", "10 minutes")
+        .groupBy(F.window("ts", "1 minute"), F.col("event_type"))
+        .agg(
+            F.count(F.lit(1)).alias("n_events"),
+            F.round(F.sum("value"), 2).alias("total_value"),
         )
-        q = (
-            agg.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(sink)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        finished = q.awaitTermination(300)
-        if not finished:
-            q.stop()
-            raise TimeoutError(
-                "streaming_event_window_counts: availableNow drain exceeded 300s"
-            )
-        # materialize off the memory sink so the temp view and source/
-        # checkpoint dirs can be dropped before returning
-        result = spark.table(sink).select(
+    )
+    with _drained(spark, "streaming_event_window_counts", agg, "complete") as out:
+        return out.select(
             F.date_format(F.col("window.start"), "yyyy-MM-dd HH:mm:ss").alias(
                 "window_start"
             ),
@@ -91,10 +59,6 @@ def q_streaming_event_window_counts(spark: SparkSession, sf_dir: str) -> DataFra
             "n_events",
             "total_value",
         ).localCheckpoint(eager=True)
-        return result
-    finally:
-        spark.catalog.dropTempView(sink)
-        shutil.rmtree(ckpt, ignore_errors=True)
 
 
 @register(
@@ -143,55 +107,24 @@ def q_streaming_event_window_counts(spark: SparkSession, sf_dir: str) -> DataFra
     "sessionization.",
 )
 def q_streaming_stateful_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-
     from worker_spark.streaming.sessions import stateful_sessionize
 
-    # same NTZ -> instant cast as the windowed stream above (withWatermark
-    # rejects TIMESTAMP_NTZ event time on pyspark >= 4.1.2)
-    events = load_table(spark, sf_dir, "events").withColumn(
-        "ts", F.col("ts").cast("timestamp")
-    )
     # single file => single micro-batch => deterministic emitted set
-    src_dir = staged_dir(
-        sf_dir,
-        "events_single",
-        lambda d: events.coalesce(1).write.mode("overwrite").parquet(d),
-    )
-    ckpt = tempfile.mkdtemp(prefix="sess_ckpt_")
-    sink = f"sess_out_{uuid.uuid4().hex[:8]}"
-    try:
-        stream = spark.readStream.schema(events.schema).parquet(src_dir)
-        sessions = stateful_sessionize(stream, gap_minutes=30)
-        q = (
-            sessions.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(sink)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        finished = q.awaitTermination(300)
-        if not finished:
-            q.stop()
-            raise TimeoutError("stateful sessionization stream did not drain")
-        return (
-            spark.table(sink)
-            .select(
-                "user_id",
-                F.date_format("session_start", "yyyy-MM-dd HH:mm:ss").alias(
-                    "session_start"
-                ),
-                F.date_format("session_end", "yyyy-MM-dd HH:mm:ss").alias(
-                    "session_end"
-                ),
-                "n_events",
-                F.round("session_value", 2).alias("session_value"),
-            )
-            .localCheckpoint()
-        )
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
+    events, src_dir = _events_feed(spark, sf_dir, "events_single")
+    stream = spark.readStream.schema(events.schema).parquet(src_dir)
+    sessions = stateful_sessionize(stream, gap_minutes=30)
+    with _drained(spark, "streaming_stateful_sessions", sessions, "append") as out:
+        return out.select(
+            "user_id",
+            F.date_format("session_start", "yyyy-MM-dd HH:mm:ss").alias(
+                "session_start"
+            ),
+            F.date_format("session_end", "yyyy-MM-dd HH:mm:ss").alias(
+                "session_end"
+            ),
+            "n_events",
+            F.round("session_value", 2).alias("session_value"),
+        ).localCheckpoint()
 
 
 @register(
@@ -219,78 +152,47 @@ def q_streaming_stateful_sessions(spark: SparkSession, sf_dir: str) -> DataFrame
     "join state Spark must hold.",
 )
 def q_streaming_view_purchase_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-
-    events = load_table(spark, sf_dir, "events").withColumn(
-        "ts", F.col("ts").cast("timestamp")
-    )
-    src_dir = staged_dir(
-        sf_dir,
-        "events_single",
-        lambda d: events.coalesce(1).write.mode("overwrite").parquet(d),
-    )
-    ckpt = tempfile.mkdtemp(prefix="vpj_ckpt_")
-    sink = f"vpj_out_{uuid.uuid4().hex[:8]}"
-    try:
-        views = (
-            spark.readStream.schema(events.schema)
-            .parquet(src_dir)
-            .filter(F.col("event_type") == "view")
-            .select(
-                F.col("user_id").alias("v_user"),
-                F.col("event_id").alias("view_event_id"),
-                F.col("ts").alias("v_ts"),
-            )
-            .withWatermark("v_ts", "1 hour")
+    events, src_dir = _events_feed(spark, sf_dir, "events_single")
+    views = (
+        spark.readStream.schema(events.schema)
+        .parquet(src_dir)
+        .filter(F.col("event_type") == "view")
+        .select(
+            F.col("user_id").alias("v_user"),
+            F.col("event_id").alias("view_event_id"),
+            F.col("ts").alias("v_ts"),
         )
-        purchases = (
-            spark.readStream.schema(events.schema)
-            .parquet(src_dir)
-            .filter(F.col("event_type") == "purchase")
-            .select(
-                F.col("user_id").alias("p_user"),
-                F.col("event_id").alias("purchase_event_id"),
-                F.col("ts").alias("p_ts"),
-            )
-            .withWatermark("p_ts", "1 hour")
+        .withWatermark("v_ts", "1 hour")
+    )
+    purchases = (
+        spark.readStream.schema(events.schema)
+        .parquet(src_dir)
+        .filter(F.col("event_type") == "purchase")
+        .select(
+            F.col("user_id").alias("p_user"),
+            F.col("event_id").alias("purchase_event_id"),
+            F.col("ts").alias("p_ts"),
         )
-        joined = views.join(
-            purchases,
-            F.expr(
-                "v_user = p_user AND p_ts >= v_ts "
-                "AND p_ts <= v_ts + interval 30 minutes"
+        .withWatermark("p_ts", "1 hour")
+    )
+    joined = views.join(
+        purchases,
+        F.expr(
+            "v_user = p_user AND p_ts >= v_ts "
+            "AND p_ts <= v_ts + interval 30 minutes"
+        ),
+    )
+    with _drained(spark, "streaming_view_purchase_join", joined, "append") as out:
+        return out.select(
+            F.col("v_user").alias("user_id"),
+            "view_event_id",
+            "purchase_event_id",
+            F.date_format("v_ts", "yyyy-MM-dd HH:mm:ss").alias("view_ts"),
+            F.date_format("p_ts", "yyyy-MM-dd HH:mm:ss").alias("purchase_ts"),
+            (F.col("p_ts").cast("long") - F.col("v_ts").cast("long")).alias(
+                "lag_seconds"
             ),
-        )
-        q = (
-            joined.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(sink)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError("stream-stream join did not drain")
-        return (
-            spark.table(sink)
-            .select(
-                F.col("v_user").alias("user_id"),
-                "view_event_id",
-                "purchase_event_id",
-                F.date_format("v_ts", "yyyy-MM-dd HH:mm:ss").alias("view_ts"),
-                F.date_format("p_ts", "yyyy-MM-dd HH:mm:ss").alias(
-                    "purchase_ts"
-                ),
-                (
-                    F.col("p_ts").cast("long") - F.col("v_ts").cast("long")
-                ).alias("lag_seconds"),
-            )
-            .localCheckpoint()
-        )
-    finally:
-        spark.catalog.dropTempView(sink)
-        shutil.rmtree(ckpt, ignore_errors=True)
+        ).localCheckpoint()
 
 
 @register(
@@ -308,45 +210,16 @@ def q_streaming_view_purchase_join(spark: SparkSession, sf_dir: str) -> DataFram
     "replays.",
 )
 def q_streaming_dedup_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-
-    events = load_table(spark, sf_dir, "events").withColumn(
-        "ts", F.col("ts").cast("timestamp")
+    events, src_dir = _events_feed(spark, sf_dir, "events_single")
+    stream = (
+        spark.readStream.schema(events.schema)
+        .parquet(src_dir)
+        .select("user_id", "event_type", "ts")
+        .withWatermark("ts", "3650 days")
+        .dropDuplicatesWithinWatermark(["user_id", "event_type"])
     )
-    src_dir = staged_dir(
-        sf_dir,
-        "events_single",
-        lambda d: events.coalesce(1).write.mode("overwrite").parquet(d),
-    )
-    ckpt = tempfile.mkdtemp(prefix="sdk_ckpt_")
-    sink = f"sdk_out_{uuid.uuid4().hex[:8]}"
-    try:
-        stream = (
-            spark.readStream.schema(events.schema)
-            .parquet(src_dir)
-            .select("user_id", "event_type", "ts")
-            .withWatermark("ts", "3650 days")
-            .dropDuplicatesWithinWatermark(["user_id", "event_type"])
-        )
-        q = (
-            stream.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(sink)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError("streaming dedup did not drain")
-        return (
-            spark.table(sink)
-            .select("user_id", "event_type")
-            .localCheckpoint()
-        )
-    finally:
-        spark.catalog.dropTempView(sink)
-        shutil.rmtree(ckpt, ignore_errors=True)
+    with _drained(spark, "streaming_dedup_keys", stream, "append") as out:
+        return out.select("user_id", "event_type").localCheckpoint()
 
 
 def _hll_stream_oracle() -> str:
@@ -410,64 +283,39 @@ def _hll_stream_oracle() -> str:
     "against the exact per-window distinct.",
 )
 def q_streaming_hll_window_users(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-
     from worker_spark.operators import sketches as K
 
     m, wb = K.HLL_M, K.HLL_WBITS
     est_num = K.HLL_ALPHA * K.HLL_M * K.HLL_M * (1 << (wb + 1))
-    events = load_table(spark, sf_dir, "events").withColumn(
-        "ts", F.col("ts").cast("timestamp")
-    )
-    src_dir = staged_dir(
-        sf_dir,
-        "events_multi",
-        lambda d: events.write.mode("overwrite").parquet(d),
-    )
-    ckpt = tempfile.mkdtemp(prefix="stream_ckpt_")
-    sink = f"stream_hll_{uuid.uuid4().hex[:8]}"
-    try:
-        stream = spark.readStream.schema(events.schema).parquet(src_dir)
-        h = F.conv(
-            F.substring(F.md5(F.col("user_id").cast("string")), 1, 8), 16, 10
-        ).cast("long")
-        ranked = (
-            stream.withWatermark("ts", "10 minutes")
-            .select(
-                F.col("ts"),
-                F.col("event_type"),
-                h.alias("_h"),
-            )
-            .select(
-                "ts",
-                "event_type",
-                (F.col("_h") % m).alias("bucket"),
-                F.expr(
-                    f"cast({wb + 1} - "
-                    + K.bitlen_sql(f"(_h div {m})", wb)
-                    + " as int)"
-                ).alias("rho"),
-            )
+    events, src_dir = _events_feed(spark, sf_dir, "events_multi")
+    stream = spark.readStream.schema(events.schema).parquet(src_dir)
+    h = F.conv(
+        F.substring(F.md5(F.col("user_id").cast("string")), 1, 8), 16, 10
+    ).cast("long")
+    ranked = (
+        stream.withWatermark("ts", "10 minutes")
+        .select(
+            F.col("ts"),
+            F.col("event_type"),
+            h.alias("_h"),
         )
-        regs = ranked.groupBy(
-            F.window("ts", "1 minute"), F.col("event_type"), F.col("bucket")
-        ).agg(F.max("rho").alias("max_rho"))
-        q = (
-            regs.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(sink)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
+        .select(
+            "ts",
+            "event_type",
+            (F.col("_h") % m).alias("bucket"),
+            F.expr(
+                f"cast({wb + 1} - "
+                + K.bitlen_sql(f"(_h div {m})", wb)
+                + " as int)"
+            ).alias("rho"),
         )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError(
-                "streaming_hll_window_users: availableNow drain exceeded 300s"
-            )
+    )
+    regs = ranked.groupBy(
+        F.window("ts", "1 minute"), F.col("event_type"), F.col("bucket")
+    ).agg(F.max("rho").alias("max_rho"))
+    with _drained(spark, "streaming_hll_window_users", regs, "complete") as out:
         sk = (
-            spark.table(sink)
-            .select(
+            out.select(
                 F.date_format(F.col("window.start"), "yyyy-MM-dd HH:mm:ss").alias(
                     "window_start"
                 ),
@@ -493,7 +341,7 @@ def q_streaming_hll_window_users(spark: SparkSession, sf_dir: str) -> DataFrame:
             "event_type",
         ).agg(F.countDistinct("user_id").alias("exact_distinct"))
         est = F.lit(est_num) / F.col("s_int").cast("double")
-        result = (
+        return (
             sk.join(exact, ["window_start", "event_type"])
             .select(
                 "window_start",
@@ -509,10 +357,6 @@ def q_streaming_hll_window_users(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .localCheckpoint()
         )
-        spark.catalog.dropTempView(sink)
-        return result
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
 
 
 def _cms_stream_oracle() -> str:
@@ -571,55 +415,31 @@ def _cms_stream_oracle() -> str:
     "windowed HLL.",
 )
 def q_streaming_cms_window_users(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-
     from pyspark.sql import Window as W
 
     from worker_spark.operators import sketches as K
 
     d = K.CMS_DEPTH
-    events = load_table(spark, sf_dir, "events").withColumn(
-        "ts", F.col("ts").cast("timestamp")
-    )
-    src_dir = staged_dir(
-        sf_dir,
-        "events_multi",
-        lambda dd: events.write.mode("overwrite").parquet(dd),
-    )
-    ckpt = tempfile.mkdtemp(prefix="stream_ckpt_")
-    sink = f"stream_cms_{uuid.uuid4().hex[:8]}"
-    try:
-        stream = spark.readStream.schema(events.schema).parquet(src_dir)
-        placed = (
-            stream.withWatermark("ts", "10 minutes")
-            .select(
-                "ts",
-                F.col("user_id"),
-                F.explode(F.sequence(F.lit(0), F.lit(d - 1))).alias("row"),
-            )
-            .select(
-                "ts",
-                F.col("row").cast("long").alias("row"),
-                K.cms_place(F.col("user_id"), F.col("row")).alias("col"),
-            )
+    events, src_dir = _events_feed(spark, sf_dir, "events_multi")
+    stream = spark.readStream.schema(events.schema).parquet(src_dir)
+    placed = (
+        stream.withWatermark("ts", "10 minutes")
+        .select(
+            "ts",
+            F.col("user_id"),
+            F.explode(F.sequence(F.lit(0), F.lit(d - 1))).alias("row"),
         )
-        grid = placed.groupBy(
-            F.window("ts", "1 minute"), F.col("row"), F.col("col")
-        ).agg(F.count(F.lit(1)).alias("cell_count"))
-        q = (
-            grid.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(sink)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
+        .select(
+            "ts",
+            F.col("row").cast("long").alias("row"),
+            K.cms_place(F.col("user_id"), F.col("row")).alias("col"),
         )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError(
-                "streaming_cms_window_users: availableNow drain exceeded 300s"
-            )
-        cells = spark.table(sink).select(
+    )
+    grid = placed.groupBy(
+        F.window("ts", "1 minute"), F.col("row"), F.col("col")
+    ).agg(F.count(F.lit(1)).alias("cell_count"))
+    with _drained(spark, "streaming_cms_window_users", grid, "complete") as out:
+        cells = out.select(
             F.date_format(F.col("window.start"), "yyyy-MM-dd HH:mm:ss").alias(
                 "window_start"
             ),
@@ -653,7 +473,7 @@ def q_streaming_cms_window_users(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("row").cast("long").alias("row"),
             K.cms_place(F.col("user_id"), F.col("row")).alias("col"),
         )
-        result = (
+        return (
             probes.join(cells, ["window_start", "row", "col"])
             .groupBy("window_start", "user_id", "true_count")
             .agg(F.min("cell_count").alias("cms_estimate"))
@@ -668,10 +488,6 @@ def q_streaming_cms_window_users(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .localCheckpoint()
         )
-        spark.catalog.dropTempView(sink)
-        return result
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
 
 
 @register(
@@ -703,44 +519,20 @@ def q_streaming_cms_window_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     "(count DESC, user_id ASC) keeps the result hash-stable.",
 )
 def q_streaming_topk_window(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-
     from pyspark.sql import Window as W
 
-    events = load_table(spark, sf_dir, "events").withColumn(
-        "ts", F.col("ts").cast("timestamp")
-    )
     # the events-feed rewrite was this row's dominant, noisiest leg
     # (six rounds of adjusted-ratio flags, VERDICT r13 What's-wrong #1);
     # it now stages once per process via the shared cache
-    src_dir = staged_dir(
-        sf_dir,
-        "events_multi",
-        lambda d: events.write.mode("overwrite").parquet(d),
+    events, src_dir = _events_feed(spark, sf_dir, "events_multi")
+    stream = spark.readStream.schema(events.schema).parquet(src_dir)
+    counts = (
+        stream.withWatermark("ts", "10 minutes")
+        .groupBy(F.window("ts", "1 minute"), F.col("user_id"))
+        .agg(F.count(F.lit(1)).cast("long").alias("n_events"))
     )
-    ckpt = tempfile.mkdtemp(prefix="stream_ckpt_")
-    sink = f"stream_topk_{uuid.uuid4().hex[:8]}"
-    try:
-        stream = spark.readStream.schema(events.schema).parquet(src_dir)
-        counts = (
-            stream.withWatermark("ts", "10 minutes")
-            .groupBy(F.window("ts", "1 minute"), F.col("user_id"))
-            .agg(F.count(F.lit(1)).cast("long").alias("n_events"))
-        )
-        q = (
-            counts.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(sink)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError(
-                "streaming_topk_window: availableNow drain exceeded 300s"
-            )
-        drained = spark.table(sink).select(
+    with _drained(spark, "streaming_topk_window", counts, "complete") as out:
+        drained = out.select(
             F.date_format(F.col("window.start"), "yyyy-MM-dd HH:mm:ss").alias(
                 "window_start"
             ),
@@ -750,7 +542,7 @@ def q_streaming_topk_window(spark: SparkSession, sf_dir: str) -> DataFrame:
         wk = W.partitionBy("window_start").orderBy(
             F.desc("n_events"), F.asc("user_id")
         )
-        result = (
+        return (
             drained.withColumn("rnk", F.row_number().over(wk))
             .filter(F.col("rnk") <= 3)
             .select(
@@ -761,9 +553,53 @@ def q_streaming_topk_window(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .localCheckpoint(eager=True)
         )
-        spark.catalog.dropTempView(sink)
-        return result
+
+
+def _events_feed(spark, sf_dir: str, kind: str) -> tuple[DataFrame, str]:
+    """The events table and its staged stream feed, shared by the
+    memory-sink rows. ``kind`` is ``events_multi`` (the table's own
+    files) or ``events_single`` (one file, so one micro-batch and a
+    deterministic emitted set). pyspark >= 4.1.2 reads the
+    TIMESTAMP(NANOS) column as TIMESTAMP_NTZ, which withWatermark
+    rejects (EVENT_TIME_IS_NOT_ON_TIMESTAMP_TYPE); event time needs the
+    instant type. The wall-clock value is preserved under the session
+    timezone, so the formatted output strings (and the DuckDB
+    naive-timestamp oracle) are unaffected."""
+    events = load_table(spark, sf_dir, "events").withColumn(
+        "ts", F.col("ts").cast("timestamp")
+    )
+    staged = events.coalesce(1) if kind == "events_single" else events
+    return events, staged_dir(
+        sf_dir, kind, lambda d: staged.write.mode("overwrite").parquet(d)
+    )
+
+
+@contextmanager
+def _drained(spark, row: str, frame: DataFrame, output_mode: str):
+    """The one drive path of the memory-sink rows: drain the streaming
+    ``frame`` into a memory sink under an availableNow trigger and hand
+    ``spark.table(sink)`` to the block. The sink's view and the
+    checkpoint dir are dropped on exit, normal or raised, so the block
+    must ``localCheckpoint`` what it returns."""
+    import shutil
+
+    ckpt = tempfile.mkdtemp(prefix=f"{row}_")
+    sink = f"{row}_{uuid.uuid4().hex[:8]}"
+    try:
+        q = (
+            frame.writeStream.outputMode(output_mode)
+            .format("memory")
+            .queryName(sink)
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+        )
+        if not q.awaitTermination(300):
+            q.stop()
+            raise TimeoutError(f"{row}: availableNow drain exceeded 300s")
+        yield spark.table(sink)
     finally:
+        spark.catalog.dropTempView(sink)
         shutil.rmtree(ckpt, ignore_errors=True)
 
 

@@ -9,7 +9,7 @@ Spark mapping: a *partitioned* JDBC read — never a single-connection full
 pull — with predicate pushdown handled by the JDBC dialect, and writes
 staged to parquet + MERGE (plain JDBC append cannot express upsert; the
 reference's at-least-once + idempotent-upsert contract requires the MERGE
-path in plans.state).
+path in plans.bucketed_state).
 
 No Postgres is available in this environment, but the read path IS
 integration-tested end-to-end against embedded Apache Derby (on Spark's

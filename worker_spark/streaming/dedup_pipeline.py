@@ -362,9 +362,25 @@ class StreamingNearDupPipeline:
         )
 
     def fsck(self) -> dict[str, int]:
+        """Each sub-structure's check, then the cross-root one: every
+        signature has its text. Both MERGEs skip blank texts, so every
+        committed state holds sigs ⊆ docs; the two MERGEs run on two
+        threads, so a torn batch can commit signatures and bands whose
+        texts the partner verify would never find."""
         counts = {self.DOCS: self.docstore.verify_layout(self.DOCS)}
         counts.update(self.minhash.fsck())
         counts.update(self.components.fsck())
+        textless = (
+            self.minhash.sigs()
+            .select("doc_id")
+            .join(self.docstore.read(self.DOCS, DOCS_SCHEMA), "doc_id", "left_anti")
+            .count()
+        )
+        if textless:
+            raise RuntimeError(
+                f"{self._root}: {textless} signed docs have no text row "
+                "— a torn batch; replay it"
+            )
         return counts
 
     # --- read side ------------------------------------------------------

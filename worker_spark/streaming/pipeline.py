@@ -44,24 +44,19 @@ def run_stage(
     job_type: str,
     process_batch: Callable[[DataFrame, int], None],
     checkpoint_dir: str,
-    available_now: bool = True,
-    processing_time: str | None = None,
 ) -> StreamingQuery:
     """One worker stage: filter to its job type, hand each micro-batch to
-    the idempotent batch processor. ``available_now=True`` drains the
-    backlog and stops (the batch tick); a processing-time trigger runs the
-    T2 poller loop."""
-    stage = jobs.filter(F.col("job_type") == job_type)
-    writer = (
-        stage.writeStream.foreachBatch(process_batch)
+    the idempotent batch processor. The availableNow trigger drains the
+    backlog and stops (the batch tick); the live T2 poller is
+    ``run_budgeted_stage``."""
+    return (
+        jobs.filter(F.col("job_type") == job_type)
+        .writeStream.foreachBatch(process_batch)
         .option("checkpointLocation", checkpoint_dir)
         .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    elif processing_time is not None:
-        writer = writer.trigger(processingTime=processing_time)
-    return writer.start()
 
 
 def run_budgeted_stage(
