@@ -56,3 +56,31 @@ def spark():
     s = get_spark("worker_spark_tests", cpus=min(os.cpu_count() or 4, 8))
     yield s
     s.stop()
+
+
+@pytest.fixture
+def tear(monkeypatch):
+    """``tear(store, table)`` tears the next write transaction on a
+    state root (a store, or its root path) just before it swaps
+    ``table``: the tables declared before it commit, the rest stay
+    staged and are discarded, and the commit raises
+    ``RuntimeError("injected tear before the <table> swap")``. Only the
+    first such swap tears; later transactions commit normally. Returns
+    the list of torn tables."""
+    from worker_spark.plans.bucketed_state import BucketedParquetStateStore
+
+    def arm(store, table):
+        root = getattr(store, "root", store)
+        real = BucketedParquetStateStore._swap
+        torn: list[str] = []
+
+        def swap(self, op):
+            if self.root == root and op.table == table and not torn:
+                torn.append(table)
+                raise RuntimeError(f"injected tear before the {table} swap")
+            real(self, op)
+
+        monkeypatch.setattr(BucketedParquetStateStore, "_swap", swap)
+        return torn
+
+    return arm

@@ -206,7 +206,7 @@ def test_stream_restart_resumes_from_checkpoint(spark, tmp_path):
     )
 
 
-def test_torn_split_batch_replays_to_convergence(spark, tmp_path, monkeypatch):
+def test_torn_split_batch_replays_to_convergence(spark, tmp_path, tear):
     """The torn-batch completion journal (self-review finding): cluster
     identity RENAMES on split, so a batch torn between the members and
     labels swaps leaves the split-off nodes unreachable from the stale
@@ -217,18 +217,10 @@ def test_torn_split_batch_replays_to_convergence(spark, tmp_path, monkeypatch):
     idx = IncrementalComponentsIndex(spark, str(tmp_path / "x"))
     idx.apply_batch(_feed(spark, [(1, 2), (1, 3)]), batch_id=0)
 
-    orig = idx.store.delete_then_insert
-
-    def failing(table, *a, **k):
-        if table == idx.LABELS:
-            raise RuntimeError("injected crash before the labels swap")
-        return orig(table, *a, **k)
-
-    monkeypatch.setattr(idx.store, "delete_then_insert", failing)
+    tear(idx.store, idx.LABELS)
     batch = _feed(spark, [(1, 2)])  # 1 re-announced: {3} splits away
-    with pytest.raises(RuntimeError, match="injected"):
+    with pytest.raises(RuntimeError, match="injected tear before the labels"):
         idx.apply_batch(batch, batch_id=1)
-    monkeypatch.undo()
     # torn: members re-keyed, labels stale — fsck must refuse
     with pytest.raises(RuntimeError):
         idx.fsck()

@@ -159,9 +159,7 @@ def test_update_moves_posting_rows_and_delete_removes(spark, tmp_path):
     scr.fsck()
 
 
-def test_torn_crossing_batch_replays_to_convergence(
-    spark, tmp_path, monkeypatch
-):
+def test_torn_crossing_batch_replays_to_convergence(spark, tmp_path, tear):
     """The scope journal's reason to exist: a batch that flips a
     shingle's liveness crashes AFTER the hot swap but BEFORE the pairs
     re-derive. The replay sees the already-updated hot set (no crossing
@@ -176,17 +174,7 @@ def test_torn_crossing_batch_replays_to_convergence(
     scr.apply_batch(d1, batch_id=0)
     assert scr.pairs().count() == 1
 
-    real = scr.store.delete_then_insert
-    calls = {"n": 0}
-
-    def boom(table, *a, **kw):
-        if table == scr.PAIRS:
-            calls["n"] += 1
-            if calls["n"] == 1:
-                raise RuntimeError("injected tear before the pairs swap")
-        return real(table, *a, **kw)
-
-    monkeypatch.setattr(scr.store, "delete_then_insert", boom)
+    tear(scr.store, scr.PAIRS)
     d2 = _mkdocs(spark, [(2, "alpha beta yankee")])
     with pytest.raises(RuntimeError, match="injected tear"):
         scr.apply_batch(d2, batch_id=1)

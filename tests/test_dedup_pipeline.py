@@ -350,34 +350,27 @@ def test_mismatched_bucket_moduli_raise(spark, tmp_path, pipeline):
         pipe.apply_batch(docs)
 
 
-def test_neardup_fsck_catches_torn_texts(spark, tmp_path, monkeypatch):
-    """The text MERGE and the signature MERGE run on two threads, so a
-    tear can commit a NEW doc's signature and bands without its text.
-    fsck must raise on that state; replaying the batch heals it."""
+def test_neardup_fsck_catches_torn_texts(spark, tmp_path, tear):
+    """A batch is one transaction declared docs → bands → sigs, so a
+    tear after the docs swap of a DELETE batch leaves the deleted doc's
+    signature and bands without its text. fsck must raise on that
+    state; replaying the batch heals it."""
     schema = "doc_id long, text string"
     pipe = StreamingNearDupPipeline(spark, str(tmp_path / "p"), n_buckets=4)
     text = "the quick brown fox jumps over the lazy dog near the river"
     batch1 = spark.createDataFrame(
-        [(1, text + " bank"), (2, text + " bend"), (4, "an unrelated short note")],
+        [(1, text + " bank"), (2, text + " bend"), (3, text + " mouth"),
+         (4, "an unrelated short note")],
         schema,
     )
     pipe.apply_batch(batch1, batch_id=0)
     pipe.fsck()
-    # batch 2 adds a new doc: an updated doc would keep its old text row
-    batch2 = spark.createDataFrame([(3, text + " mouth")], schema)
-    real = pipe.docstore.delete_then_insert
-    torn = []
-
-    def tear_once(table, *args, **kwargs):
-        if not torn:
-            torn.append(table)
-            raise OSError("crash before the text swap")
-        return real(table, *args, **kwargs)
-
-    monkeypatch.setattr(pipe.docstore, "delete_then_insert", tear_once)
-    with pytest.raises(OSError, match="crash before the text swap"):
+    # batch 2 deletes doc 3 (blank text is the delete form)
+    batch2 = spark.createDataFrame([(3, " ")], schema)
+    torn = tear(pipe.minhash.store, pipe.minhash.BANDS)
+    with pytest.raises(RuntimeError, match="injected tear before the bands"):
         pipe.apply_batch(batch2, batch_id=1)
-    assert torn == [pipe.DOCS]
+    assert torn == [pipe.minhash.BANDS]
     assert pipe.minhash.sigs().filter(F.col("doc_id") == 3).count() == 1
     with pytest.raises(RuntimeError, match="no text row"):
         pipe.fsck()
@@ -385,5 +378,5 @@ def test_neardup_fsck_catches_torn_texts(spark, tmp_path, monkeypatch):
     pipe.apply_batch(batch2, batch_id=1)  # replay
     pipe.fsck()
     assert _rows(pipe.cluster_assignments()) == _rows(
-        _neardup_truth(spark, batch1.unionByName(batch2))
+        _neardup_truth(spark, batch1.filter(F.col("doc_id") != 3))
     )

@@ -181,3 +181,33 @@ def test_gate_refuses_eval_ingestion_and_reports_prefixed_fsck(
     counts = gate.fsck()
     assert any(k.startswith("curation.") for k in counts)
     assert any(k.startswith("screen.") for k in counts)
+
+
+def test_batch_jobs_keep_the_callers_job_group(spark, tmp_path):
+    """The gate applies its two sides on worker threads, and each side
+    stages its tables on the store's pool: every job they launch must
+    still carry the caller's job group, which Spark's status tracker
+    and event log attribute work by."""
+    schema = "doc_id long, text string"
+    docs = spark.createDataFrame(
+        [(1, "alpha beta gamma delta"), (2, "the cat sat on the mat")], schema
+    )
+    ev = spark.createDataFrame([(5, "alpha beta gamma delta")], schema)
+    gate = StreamingIngestGate(
+        spark, str(tmp_path / "g"), eval_docs=ev, lm_train_docs=docs,
+        config=_cfg(), n=2, min_shared=1, df_cap=2, n_buckets=4,
+    )
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    spark.range(1).collect()  # marker: the newest job before the batch
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    marker = max(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup("ingest-gate-batch", "one gate batch")
+    try:
+        gate.apply_batch(docs, batch_id=0)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert tracker.getJobIdsForGroup("ingest-gate-batch")
+    assert [j for j in tracker.getJobIdsForGroup(None) if j > marker] == []

@@ -83,7 +83,7 @@ def test_streamed_batches_converge_to_batch_report(spark, tmp_path):
     led.fsck()
 
 
-def test_torn_batch_replays_exactly_once(spark, tmp_path, monkeypatch):
+def test_torn_batch_replays_exactly_once(spark, tmp_path, tear):
     """The journaled-delta device: a batch crashes AFTER its mem swap
     but BEFORE the ledger apply. The replay's recomputed delta would be
     ZERO (mem already holds the batch) — only the journaled delta makes
@@ -96,14 +96,7 @@ def test_torn_batch_replays_exactly_once(spark, tmp_path, monkeypatch):
     led.apply_batch(docs.filter(F.col("doc_id") % 2 == 0), batch_id=0)
     b1 = docs.filter(F.col("doc_id") % 2 == 1).localCheckpoint(eager=True)
 
-    real_write = led.store.write
-    def boom(table, *a, **kw):
-        if table == led.LED and boom.armed:
-            boom.armed = False
-            raise RuntimeError("injected tear before the ledger swap")
-        return real_write(table, *a, **kw)
-    boom.armed = True
-    monkeypatch.setattr(led.store, "write", boom)
+    tear(led.store, led.LED)
     with pytest.raises(RuntimeError, match="injected tear"):
         led.apply_batch(b1, batch_id=1)
     # torn: mem holds batch 1, ledger does not

@@ -47,7 +47,7 @@ def main() -> None:
     from worker_spark.queries import all_queries
     from worker_spark.session import get_spark
 
-    _wrap(B.BucketedParquetStateStore, "_write_buckets", "store._write_buckets")
+    _wrap(B.BucketedParquetStateStore, "_stage", "store._stage")
     _wrap(B.BucketedParquetStateStore, "touched_buckets", "store.touched_buckets")
     _wrap(B.BucketedParquetStateStore, "read", "store.read(lazy)")
     _wrap(DataFrame, "localCheckpoint", "df.localCheckpoint")

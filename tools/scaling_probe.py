@@ -30,6 +30,14 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 FACTORS = (1, 4, 10)
+# the state probe's bucket sizing: the default 20000-doc, 64-bucket
+# state, so every factor and every STATE_PROBE_N0 holds docs per bucket
+# fixed (a small N0 must not buy more buckets than docs can fill)
+DOCS_PER_BUCKET = 20000 / 64
+
+
+def _state_buckets(n: int) -> int:
+    return max(1, round(n / DOCS_PER_BUCKET))
 
 
 def replicated_docs(spark, factor: int):
@@ -520,7 +528,7 @@ def state_probe() -> None:
         work = tempfile.mkdtemp(prefix=f"stateprobe{factor}-")
         try:
             idx = IncrementalRetrievalIndex(
-                spark, os.path.join(work, "idx"), n_buckets=64 * factor
+                spark, os.path.join(work, "idx"), n_buckets=_state_buckets(n)
             )
             idx.apply_batch(corpus)  # seed state (not timed)
             snap = tree_bytes(os.path.join(work, "idx"))
@@ -803,7 +811,7 @@ def state_probe() -> None:
             work = tempfile.mkdtemp(prefix=f"stateprobe-{kind}-{factor}-")
             try:
                 idx, corpus_fn, batch_df = make(
-                    os.path.join(work, "idx"), 64 * factor
+                    os.path.join(work, "idx"), _state_buckets(n)
                 )
                 idx.apply_batch(corpus_fn(n))  # seed state (not timed)
                 snap = tree_bytes(os.path.join(work, "idx"))

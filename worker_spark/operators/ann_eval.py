@@ -518,7 +518,8 @@ def evaluate_ann(
     na = anchors.count()
     # a degenerate anchor set must fail here, not divide-by-zero three
     # record() calls later under a misleading scan_frac (ADVICE r12)
-    assert na > 0, "contrastive eval: empty anchor set (vec_id % 20)"
+    if na == 0:
+        raise ValueError("contrastive eval: empty anchor set (vec_id % 20)")
     cdenom = na * (n - 1)
     qlab = embl.select(
         F.col("vec_id").alias("q_id"), F.col("label").alias("q_label")

@@ -58,7 +58,8 @@ MINHASH_B = (
     12345, 67890, 111, 222, 333, 4444, 55555, 666666,
     777, 888, 999, 1234567, 7654321, 2468, 13579, 97531,
 )
-assert len(MINHASH_A) == N_PERM and len(MINHASH_B) == N_PERM
+if len(MINHASH_A) != N_PERM or len(MINHASH_B) != N_PERM:
+    raise ValueError(f"MinHash needs {N_PERM} (a, b) coefficient pairs")
 
 # 48-bit SimHash (12 hex chars of md5 -> exact in BIGINT); 4 bands x 12 bits.
 # 48 bits gives enough discrimination that byte-band collisions stay rare even
@@ -426,7 +427,8 @@ def simhash_incremental_pairs(
 # true transliteration of non-Latin text is a tokenizer-level concern.
 TRANSLIT_FROM = "àáâãäåçèéêëìíîïñòóôõöøùúûüýÿæœß"
 TRANSLIT_TO = "aaaaaaceeeeiiiinoooooouuuuyyaos"
-assert len(TRANSLIT_FROM) == len(TRANSLIT_TO)
+if len(TRANSLIT_FROM) != len(TRANSLIT_TO):
+    raise ValueError("transliteration tables differ in length")
 
 
 def translit_normalize(col: F.Column) -> F.Column:

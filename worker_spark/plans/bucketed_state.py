@@ -37,18 +37,40 @@ leaves the batch partially applied, which the delivery contract above
 already covers: replaying the same batch re-applies the same per-bucket
 MERGEs, each of which is idempotent.
 
-Manifest crash order (``reindex``): a DERIVED table bucketed by one key
-but replaced by another (postings by term, replaced by doc_id) cannot
-find a batch document's old rows from the batch alone, so an id-keyed
-MANIFEST table records where they live. ``reindex`` swaps the derived
-table FIRST and the manifest LAST. A crash between the two leaves the
-STALE manifest, and the replayed batch's touched set is again
-stale-manifest ∪ new-row buckets — a superset of everywhere the batch
-ids' derived rows can be, so the replay converges. The reverse order
-would commit the new manifest first, and a crash would then strand the
-old derived rows in buckets the replay no longer visits. Every
-maintained index with a manifest writes through ``reindex``; its
-module docstring names the pair.
+Transactions: every bucket write goes through ``transaction()``, the
+Spark form of the reference's one Postgres commit per batch. A batch
+declares its table MERGEs (``write``, ``upsert``, ``delete_then_insert``,
+``reindex``) on the transaction; on exit it runs ONE tagged
+``(op, bucket)`` collect for every op whose touched set was not given,
+stages every table's merged rows concurrently on the store's one thread
+pool, checks every stage against its touched set (the stray-bucket
+guard), and only then swaps the tables in declared order, each table's
+meta persisted after its own swap. An exception before the first swap
+discards every stage and swaps nothing; the store's public ``write``,
+``upsert``, ``delete_then_insert`` and ``reindex`` are one- or two-op
+transactions over the same code. Three rules:
+
+* a table appears at most once per transaction (its stage reads the
+  pre-swap files of its own buckets);
+* an op whose inputs must see an earlier swap goes in a LATER
+  transaction — every stage reads pre-swap state;
+* the crash story stays the delivery contract: a crash between two
+  swaps leaves the batch partially applied, and the replay converges
+  because the declared order keeps every touched set a superset. There
+  is no commit journal.
+
+The declared order is the crash order. A DERIVED table bucketed by one
+key but replaced by another (postings by term, replaced by doc_id)
+cannot find a batch document's old rows from the batch alone, so an
+id-keyed MANIFEST table records where they live. ``reindex`` declares
+the derived table FIRST and the manifest LAST. A crash between the two
+leaves the STALE manifest, and the replayed batch's touched set is
+again stale-manifest ∪ new-row buckets — a superset of everywhere the
+batch ids' derived rows can be, so the replay converges. The reverse
+order would commit the new manifest first, and a crash would then
+strand the old derived rows in buckets the replay no longer visits.
+Every maintained index with a manifest writes through ``reindex``; each
+migrated module docstring names its declared order.
 
 Sizing rule (the scale contract): a touched bucket's rewrite costs one
 bucket of bytes, so choose ``n_buckets`` to hold BUCKET BYTES near a
@@ -74,13 +96,17 @@ swap of the bucket they read.
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
 import shutil
 import time
 import uuid
-from collections.abc import Callable
+from collections.abc import Callable, Iterator
+from concurrent.futures import ThreadPoolExecutor, wait
+from dataclasses import dataclass
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -231,6 +257,13 @@ class BucketedParquetStateStore:
     write, or localCheckpoint(eager=True) inputs that must survive it.
     """
 
+    # The one staging pool: a transaction with several staged tables
+    # runs their staging jobs on it concurrently, so they overlap on the
+    # scheduler. Staging tasks never wait on other tasks, so transactions
+    # opened from several threads at once share it without deadlock; its
+    # threads start on first use.
+    _pool = ThreadPoolExecutor(max_workers=4, thread_name_prefix="bucket-stage")
+
     def __init__(
         self,
         spark: SparkSession,
@@ -260,16 +293,26 @@ class BucketedParquetStateStore:
     def touched_buckets(self, df: DataFrame, *cols: Column | str) -> list[int]:
         """Distinct bucket ids present in df's key column(s) — a driver
         collect bounded by n_buckets."""
-        return self._collect_buckets(df.select(self.bucket_of(*cols).alias("b")))
+        b = df.select(self.bucket_of(*cols).alias("b")).distinct()
+        return sorted(r["b"] for r in b.collect())
 
     @staticmethod
-    def _collect_buckets(first: DataFrame, *more: DataFrame) -> list[int]:
-        """The ONE touched-bucket collect: distinct ``b`` over the union
-        of one-column bucket-id frames, as one job however many frames
-        contribute."""
-        for df in more:
-            first = first.unionByName(df)
-        return sorted(r["b"] for r in first.distinct().collect())
+    def _collect_buckets(probes: list[DataFrame]) -> list[list[int]]:
+        """The ONE touched-bucket collect of a transaction: distinct
+        ``(op, b)`` over the union of every op's one-column bucket-id
+        frame, as one job however many ops contribute. A lone probe
+        needs no tag (the tagged form costs the sync cycle's link MERGE
+        one more job)."""
+        if len(probes) == 1:
+            return [sorted(r["b"] for r in probes[0].distinct().collect())]
+        tagged = None
+        for i, df in enumerate(probes):
+            df = df.select(F.lit(i).alias("op"), F.col("b"))
+            tagged = df if tagged is None else tagged.unionByName(df)
+        found: list[list[int]] = [[] for _ in probes]
+        for r in tagged.distinct().collect():
+            found[r["op"]].append(r["b"])
+        return [sorted(b) for b in found]
 
     def bucket_of_long(self, value: int) -> int:
         """``bucket_of`` for one literal long key, computed host-side —
@@ -304,7 +347,7 @@ class BucketedParquetStateStore:
         row would land in a different bucket than the row it replaces).
         Mismatch is a loud error, not a re-bucket. Persistence happens
         only AFTER a successful commit (_persist_meta from
-        _write_buckets / the empty-replace path) — a failed FIRST write
+        _swap / the empty-replace commit) — a failed FIRST write
         must not leave a meta witness that makes exists() report an
         empty-but-created table (review finding: a poisoned witness
         blocked vector-index centroid re-pinning while serving an empty
@@ -603,55 +646,75 @@ class BucketedParquetStateStore:
             reader = reader.schema(schema)
         return reader.parquet(*paths)
 
+    def journaled(
+        self, table: str, schema: T.StructType, batch_id: int | None
+    ) -> DataFrame | None:
+        """The rows an earlier, torn attempt of ``batch_id`` recorded in
+        a scope journal (``Transaction.journal``); None when none can
+        exist."""
+        if batch_id is None or not self.has_schema_witness(table):
+            return None
+        return self.read(table, schema).filter(F.col("batch_id") == int(batch_id))
+
     # --- write ------------------------------------------------------------
 
-    def _write_buckets(
-        self,
-        table: str,
-        merged: DataFrame,
-        bucket_cols: list[str],
-        touched: list[int],
-    ) -> None:
-        """One staging job writes the merged rows partitioned by bucket,
-        then each TOUCHED bucket dir is atomically swapped in (a touched
-        bucket the merge emptied becomes an empty dir). Untouched bucket
-        directories are never renamed or rewritten."""
-        tdir = self._table_dir(table)
+    @contextlib.contextmanager
+    def transaction(self) -> Iterator["Transaction"]:
+        """One write transaction (module docstring, "Transactions"):
+        declare ops on the yielded ``Transaction``; they commit when the
+        block exits normally and are dropped, unstaged, when it raises."""
+        tx = Transaction(self, [])
+        yield tx
+        tx.commit()
+
+    def _stage(self, op: "_Op") -> None:
+        """One staging job writes the op's merged rows partitioned by
+        bucket into a ``.stage-*`` dir of its table, then the stray-bucket
+        guard checks the stage against the op's touched set."""
+        tdir = self._table_dir(op.table)
         os.makedirs(tdir, exist_ok=True)
-        stage = os.path.join(tdir, f".stage-{uuid.uuid4().hex[:8]}")
+        op.stage = os.path.join(tdir, f".stage-{uuid.uuid4().hex[:8]}")
+        merged = op.rows(op.touched)
+        op.schema = merged.schema
         (
-            merged.withColumn("_b", self.bucket_of(*bucket_cols))
+            merged.withColumn("_b", self.bucket_of(*op.keys))
             # co-locate each bucket's rows into ~one task before the
             # partitioned write: without this every input task writes a
             # sliver into every touched bucket dir (tasks x buckets tiny
             # files — measured 2x wall on the incremental index), and at
             # cluster scale file-count control IS the compaction target
             # the n_buckets sizing rule assumes
-            .repartition(max(len(touched), 1), F.col("_b"))
+            .repartition(len(op.touched), F.col("_b"))
             .write.partitionBy("_b")
             .mode("overwrite")
-            .parquet(stage)
+            .parquet(op.stage)
         )
         # loud-failure guard (free: one listdir of the stage): rows whose
-        # bucket is NOT in the caller's touched set would be staged and
-        # then discarded with the stage dir — silent data loss for a
-        # caller whose manifest/touched computation is wrong
-        touched_set = set(touched)
+        # bucket is NOT in the touched set would be staged and then
+        # discarded with the stage dir — silent data loss for a caller
+        # whose manifest/touched computation is wrong
+        touched = set(op.touched)
         stray = [
             d
-            for d in os.listdir(stage)
-            if d.startswith("_b=") and int(d[3:]) not in touched_set
+            for d in os.listdir(op.stage)
+            if d.startswith("_b=") and int(d[3:]) not in touched
         ]
         if stray:
-            shutil.rmtree(stage, ignore_errors=True)
             raise ValueError(
-                f"{table}: merged rows landed in buckets outside the "
+                f"{op.table}: merged rows landed in buckets outside the "
                 f"touched set ({sorted(stray)}) — caller's touched/"
                 "manifest computation is incomplete; aborting before "
                 "any swap"
             )
-        for b in touched:
-            src = os.path.join(stage, f"_b={b}")
+
+    def _swap(self, op: "_Op") -> None:
+        """Swap each TOUCHED bucket dir of a staged op in atomically (a
+        touched bucket the merge emptied becomes an empty dir), then
+        persist the table's meta. Untouched bucket directories are never
+        renamed or rewritten."""
+        tdir = self._table_dir(op.table)
+        for b in op.touched:
+            src = os.path.join(op.stage, f"_b={b}")
             final = os.path.join(tdir, self._bucket_name(b))
             tmp = f"{final}.tmp-{uuid.uuid4().hex[:8]}"
             if os.path.isdir(src):
@@ -664,10 +727,78 @@ class BucketedParquetStateStore:
             os.rename(tmp, final)
             if os.path.exists(old):
                 shutil.rmtree(old, ignore_errors=True)
-        shutil.rmtree(stage, ignore_errors=True)
+        shutil.rmtree(op.stage, ignore_errors=True)
+        op.stage = None
         # meta becomes the existence/schema witness only now that the
         # data committed (review finding)
-        self._persist_meta(table, bucket_cols, merged.schema)
+        self._persist_meta(op.table, op.keys, op.schema)
+
+    # one- and two-op transactions; ``table`` stays the first argument
+    def write(self, table: str, *args, **kwargs) -> None:
+        """A one-op transaction: ``Transaction.write``."""
+        with self.transaction() as tx:
+            tx.write(table, *args, **kwargs)
+
+    def upsert(self, table: str, *args, **kwargs) -> None:
+        """A one-op transaction: ``Transaction.upsert``."""
+        with self.transaction() as tx:
+            tx.upsert(table, *args, **kwargs)
+
+    def delete_then_insert(self, table: str, *args, **kwargs) -> None:
+        """A one-op transaction: ``Transaction.delete_then_insert``."""
+        with self.transaction() as tx:
+            tx.delete_then_insert(table, *args, **kwargs)
+
+    def reindex(self, *args, **kwargs) -> None:
+        """A two-op transaction: ``Transaction.reindex``."""
+        with self.transaction() as tx:
+            tx.reindex(*args, **kwargs)
+
+
+@dataclass(eq=False)
+class _Op:
+    """One table's MERGE inside a transaction. ``rows(touched)`` builds
+    the merged rows of the touched buckets; ``touched`` is given, or
+    collected on commit from ``probe`` (a one-column ``b`` frame) plus
+    ``also``."""
+
+    store: BucketedParquetStateStore
+    table: str
+    keys: list[str]
+    rows: Callable[[list[int]], DataFrame]
+    touched: list[int] | None = None
+    probe: DataFrame | None = None
+    also: tuple[int, ...] = ()
+    # skipped when this op touches nothing (reindex's manifest op)
+    needs: "_Op | None" = None
+    # a full replace: commits its meta witness even when it touches nothing
+    replace: bool = False
+    schema: T.StructType | None = None
+    stage: str | None = None
+
+
+@dataclass(eq=False)
+class Transaction:
+    """The ops of one write transaction, in declared (= swap) order.
+    Each op is bound to the store it was declared on; ``on(store)``
+    declares further ops on another root in the same transaction."""
+
+    store: BucketedParquetStateStore
+    ops: list[_Op]
+
+    def on(self, store: BucketedParquetStateStore) -> "Transaction":
+        return Transaction(store, self.ops)  # same op list, other root
+
+    def _add(self, op: _Op) -> _Op:
+        for o in self.ops:
+            if o.store.root == op.store.root and o.table == op.table:
+                raise ValueError(
+                    f"{op.store.root}/{op.table}: a table appears at most "
+                    "once per transaction — its stage reads the pre-swap "
+                    "files; write it again in a later transaction"
+                )
+        self.ops.append(op)
+        return op
 
     def write(
         self,
@@ -675,48 +806,56 @@ class BucketedParquetStateStore:
         df: DataFrame,
         keys: list[str] | None = None,
         touched: list[int] | None = None,
-    ) -> None:
+    ) -> _Op:
         """Full-table replace (the seeding / snapshot path; O(state) by
         definition, so the touched-bucket economics don't apply).
         ``keys`` declares the bucket-key columns; on the first write of
         a table they are pinned (default: all columns — fine for tables
-        only ever replaced whole, but a table that will later be ``upsert``-ed
-        must declare its MERGE keys here so updated rows land in the
-        bucket of the rows they replace). ``touched`` lets a caller that
-        KNOWS its rows' bucket set (a constant-key table via
-        ``bucket_of_long``) skip the touched-bucket collect job; a wrong
-        set fails loudly in _write_buckets' stray-bucket guard before
-        any swap."""
+        only ever replaced whole, but a table that will later be
+        ``upsert``-ed must declare its MERGE keys here so updated rows
+        land in the bucket of the rows they replace). ``touched`` lets a
+        caller that KNOWS its rows' bucket set (a constant-key table via
+        ``bucket_of_long``) skip the touched-bucket collect; a wrong set
+        fails loudly in the stray-bucket guard before any swap. An empty
+        replace of an empty table commits only the meta witness."""
+        store = self.store
         # heal torn swaps FIRST: a bucket displaced to .old-* by a prior
         # crash is invisible to the isdir() scan below, and recovery
         # would resurrect it AFTER this replace deleted it (review
         # finding)
-        self._recover(table)
-        keys = self._validate_keys(
-            table, keys or self._pinned_keys(table) or list(df.columns)
+        store._recover(table)
+        keys = store._validate_keys(
+            table, keys or store._pinned_keys(table) or list(df.columns)
         )
         # a replace must also EMPTY every currently-populated bucket the
         # new frame does not reach
-        existing = [
-            b
-            for b in range(self.n_buckets)
-            if os.path.isdir(os.path.join(self._table_dir(table), self._bucket_name(b)))
-        ]
-        touched = sorted(
-            set(existing)
-            | set(
-                self.touched_buckets(df, *keys)
-                if touched is None
-                else touched
-            )
+        populated = tuple(
+            int(os.path.basename(p)[1:]) for p in store.bucket_paths(table)
         )
-        if not touched:
-            # an EMPTY first replace commits nothing but the witness —
-            # there is no data job to fail, so persisting here is safe
-            # and makes the empty table readable/exists()-able
-            self._persist_meta(table, keys, df.schema)
-            return
-        self._write_buckets(table, df, keys, touched)
+        return self._add(_Op(
+            store, table, keys, lambda _t: df,
+            touched=None if touched is None else sorted(set(populated) | set(touched)),
+            probe=df.select(store.bucket_of(*keys).alias("b")),
+            also=populated,
+            replace=True,
+        ))
+
+    def journal(self, table: str, batch_id: int, rows: DataFrame) -> _Op:
+        """Replace a one-bucket scope journal by ``rows``, tagged with
+        ``batch_id``: a structure whose replay cannot recompute a batch's
+        scope from post-swap state declares this FIRST, and its replay
+        unions ``store.journaled`` back in. The key is constant, so the
+        bucket is computed host-side and no collect runs."""
+        return self.write(
+            table,
+            rows.select(
+                F.lit(0).cast("long").alias("jkey"),
+                F.lit(int(batch_id)).cast("long").alias("batch_id"),
+                "*",
+            ),
+            keys=["jkey"],
+            touched=[self.store.bucket_of_long(0)],
+        )
 
     def delete_then_insert(
         self,
@@ -728,43 +867,66 @@ class BucketedParquetStateStore:
         bucket_col: str,
         delete_on: str | None = None,
         touched: list[int] | None = None,
-        existing: DataFrame | None = None,
-    ) -> None:
+        doomed: DataFrame | None = None,
+    ) -> _Op:
         """S8 link-replace scoped to buckets: remove every row whose
         ``delete_on`` key appears in ``delete_keys``, then insert
-        ``inserts``. When ``delete_on`` is the bucket key, the touched
-        set is derived here; when it is a DIFFERENT column (postings are
-        bucketed by term but replaced by doc_id), the caller must pass
-        ``touched`` covering every bucket that holds a doomed row — the
-        manifest contract ``reindex`` implements (an insert landing
-        outside ``touched`` fails loudly in _write_buckets rather than
-        being silently dropped). A derived touched set is ONE collect
-        over both sides' buckets, each hashed in its own column type.
-        ``existing`` lets ``reindex``, which already read the manifest's
-        touched buckets, hand the frame over instead of paying a second
-        read — it MUST be exactly read(table, schema, buckets=touched)
-        and still lazy over the pre-swap files."""
-        self._validate_keys(table, [bucket_col])
+        ``inserts``. The touched set is ``touched`` when given (an
+        insert landing outside it fails loudly in the stray-bucket
+        guard rather than being silently dropped); otherwise it is
+        collected from the doomed rows' buckets ∪ the inserts' buckets.
+        When ``delete_on`` is the bucket key, the doomed buckets are the
+        delete keys' own; when it is a DIFFERENT column (postings are
+        bucketed by term but replaced by doc_id), the caller passes
+        ``doomed``, a one-column frame of every bucket that holds a
+        doomed row — the manifest contract ``reindex`` implements."""
+        store = self.store
+        store._validate_keys(table, [bucket_col])
         delete_on = delete_on or bucket_col
-        if touched is None:
+        if touched is None and doomed is None:
             if delete_on != bucket_col:
                 raise ValueError(
                     "delete_on differs from bucket_col: caller must "
-                    "supply the touched-bucket set (manifest)"
+                    "supply the touched or doomed buckets (manifest)"
                 )
-            touched = self._collect_buckets(
-                delete_keys.select(self.bucket_of(delete_on).alias("b")),
-                inserts.select(self.bucket_of(bucket_col).alias("b")),
-            )
-        if not touched:
-            return
-        if existing is None:
-            existing = self.read(table, schema, buckets=touched)
-        kept = existing.join(
-            delete_keys.select(delete_on).distinct(), delete_on, "left_anti"
+            doomed = delete_keys.select(store.bucket_of(delete_on))
+        # each side hashed in its own column type
+        probe = None if touched is not None else doomed.toDF("b").unionByName(
+            inserts.select(store.bucket_of(bucket_col).alias("b"))
         )
-        merged = kept.unionByName(inserts.select(*existing.columns))
-        self._write_buckets(table, merged, [bucket_col], touched)
+
+        def rows(t: list[int]) -> DataFrame:
+            existing = store.read(table, schema, buckets=t)
+            kept = existing.join(
+                delete_keys.select(delete_on).distinct(), delete_on, "left_anti"
+            )
+            return kept.unionByName(inserts.select(*existing.columns))
+
+        return self._add(
+            _Op(store, table, [bucket_col], rows, touched=touched, probe=probe)
+        )
+
+    def upsert(
+        self,
+        table: str,
+        updates: DataFrame,
+        keys: list[str],
+        schema: T.StructType | None = None,
+    ) -> _Op:
+        """S7 MERGE scoped to buckets (rows bucket on the full key
+        tuple): matched -> replace, not matched -> insert. Touched
+        buckets = buckets of the update keys only."""
+        store = self.store
+        store._validate_keys(table, keys)
+
+        def rows(t: list[int]) -> DataFrame:
+            existing = store.read(table, schema or updates.schema, buckets=t)
+            return _merge_latest(existing, updates.select(*existing.columns), keys)
+
+        return self._add(_Op(
+            store, table, keys, rows,
+            probe=updates.select(store.bucket_of(*keys).alias("b")),
+        ))
 
     def reindex(
         self,
@@ -781,63 +943,65 @@ class BucketedParquetStateStore:
     ) -> None:
         """Replace the batch ids' rows of a DERIVED table (bucketed by
         ``derived_key``, replaced by id) and of its MANIFEST (bucketed by
-        the one column of ``ids``): derived first, manifest last — the
-        crash order of the module docstring. ``old_buckets`` maps the
-        ids' OLD manifest rows to a one-column frame of every derived
-        bucket their rows can be in. ``id_buckets`` hands over the ids'
-        buckets when a composed caller already collected them. The
-        id-bucket collect and ONE old ∪ new derived-bucket collect run
-        before the first swap, so they materialize every lazy checkpoint
-        the batch frames carry; nothing touched writes nothing."""
+        the one column of ``ids``), declared derived first, manifest
+        last — the crash order of the module docstring. ``old_buckets``
+        maps the ids' OLD manifest rows to a one-column frame of every
+        derived bucket their rows can be in. ``id_buckets`` hands over
+        the ids' buckets when a composed caller already collected them;
+        otherwise they are collected here, since the old manifest read
+        is pruned by them. A derived table the batch does not touch
+        writes neither table."""
         (id_col,) = ids.columns
+        store = self.store
         if id_buckets is None:
-            id_buckets = self.touched_buckets(ids, id_col)
-        old = self.read(manifest, manifest_schema, buckets=id_buckets)
-        touched = self._collect_buckets(
-            old_buckets(old.join(ids, id_col, "left_semi")).toDF("b"),
-            derived_rows.select(self.bucket_of(derived_key).alias("b")),
-        )
-        if not touched:
-            return
-        self.delete_then_insert(
-            derived,
-            ids,
-            derived_rows,
-            derived_schema,
-            bucket_col=derived_key,
-            delete_on=id_col,
-            touched=touched,
+            id_buckets = store.touched_buckets(ids, id_col)
+        old = store.read(manifest, manifest_schema, buckets=id_buckets)
+        first = self.delete_then_insert(
+            derived, ids, derived_rows, derived_schema, bucket_col=derived_key,
+            delete_on=id_col, doomed=old_buckets(old.join(ids, id_col, "left_semi")),
         )
         self.delete_then_insert(
-            manifest,
-            ids,
-            manifest_rows,
-            manifest_schema,
-            bucket_col=id_col,
+            manifest, ids, manifest_rows, manifest_schema, bucket_col=id_col,
             touched=id_buckets,
-            # read above for the old buckets; still lazy over the
-            # pre-swap files — only the derived table swapped since
-            existing=old,
-        )
+        ).needs = first
 
-    def upsert(
-        self,
-        table: str,
-        updates: DataFrame,
-        keys: list[str],
-        schema: T.StructType | None = None,
-    ) -> None:
-        """S7 MERGE scoped to buckets (rows bucket on the full key
-        tuple): matched -> replace, not matched -> insert. Touched
-        buckets = buckets of the update keys only."""
-        self._validate_keys(table, keys)
-        touched = self.touched_buckets(updates, *keys)
-        if not touched:
-            return
-        existing = self.read(table, schema or updates.schema, buckets=touched)
-        updates = updates.select(*existing.columns)
-        merged = _merge_latest(existing, updates, keys)
-        self._write_buckets(table, merged, keys, touched)
+    def commit(self) -> None:
+        """Collect, stage, guard, swap (module docstring,
+        "Transactions"). Stages that never swapped are removed however
+        the commit ends."""
+        probed = [op for op in self.ops if op.touched is None]
+        if probed:
+            found = BucketedParquetStateStore._collect_buckets(
+                [op.probe for op in probed]
+            )
+            for op, buckets in zip(probed, found):
+                op.touched = sorted(set(buckets) | set(op.also))
+        for op in self.ops:
+            if op.needs is not None and not op.needs.touched:
+                op.touched = []
+        staged = [op for op in self.ops if op.touched]
+        try:
+            # each staging thread gets its own copy of the caller's local
+            # properties (job group, description); pinned-thread mode
+            # drops them otherwise
+            futures = [
+                BucketedParquetStateStore._pool.submit(
+                    inheritable_thread_target(self.store.spark)(op.store._stage), op
+                )
+                for op in staged
+            ]
+            wait(futures)
+            for f in futures:
+                f.result()
+            for op in self.ops:
+                if op.touched:
+                    op.store._swap(op)
+                elif op.replace:
+                    op.store._persist_meta(op.table, op.keys, op.rows([]).schema)
+        finally:
+            for op in staged:
+                if op.stage is not None:
+                    shutil.rmtree(op.stage, ignore_errors=True)
 
 
 def _merge_latest(existing: DataFrame, updates: DataFrame, keys: list[str]) -> DataFrame:

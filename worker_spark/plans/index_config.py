@@ -176,7 +176,8 @@ def index_config_df(spark: SparkSession) -> DataFrame:
 def index_config_oracle_sql() -> str:
     """VALUES literal from the same constant — exact parity by construction."""
     rows = config_rows()
-    assert not any("'" in v for _, _, _, v in rows)
+    if any("'" in v for _, _, _, v in rows):
+        raise ValueError("index config values must not contain a quote")
     values = ",\n        ".join(
         f"('{n}', '{s}', {i}, '{v}')" for n, s, i, v in rows
     )

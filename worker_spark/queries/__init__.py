@@ -82,6 +82,15 @@ _DRIVER_WINDOW = [
     "streaming_heavy_hitters",
     "streaming_stratified_reservoir",
     "streaming_weighted_reservoir",
+    # (b) Rows CHANGED by turning their `assert` invariants into real
+    # exceptions (python -O strips asserts): the inline-ref oracles'
+    # quote-corpus checks (queries/domain.py), the index-config oracle's
+    # quote check (plans/index_config.py) and dedup.py's module-level
+    # table checks — verified by tools/query_hashes.py.
+    "inline_ref_codes",
+    "inline_ref_parse",
+    "lang_shingle_overlap",
+    "search_index_config",
     # ---- Round-14 rotation (remainder). ----
     # (a) Every query transitively CHANGED in round 14 (verified by
     # tools/query_hashes.py against the r13 close): the 30 streaming
@@ -120,15 +129,15 @@ _DRIVER_WINDOW = [
     "doc_quality_filter",
     "doc_lang_id",
     "doc_fingerprint_dupes",
-    "inline_ref_codes",
     "doc_tfidf_topk",
-    "pii_redaction",
-    "article_analysis",
-    "kmv_distinct_users",
     # ---- driver window boundary: only the FIRST 50 entries above get
     # a driver row this round (tests/test_rotation_guard.py enforces
     # that anything transitively changed sits above this line; the four
-    # CC-consumer rows displaced the last four r9 fill slots). ----
+    # CC-consumer rows displaced the last four r9 fill slots, and the
+    # three assert-rotation rows the next three). ----
+    "pii_redaction",
+    "article_analysis",
+    "kmv_distinct_users",
     # r9-green remainder continues, then the r10/r11/r12 blocks in
     # standing order (oldest driver row first); the r13-green block
     # (non-streaming rows displaced from the r13 window) fills last.
@@ -182,12 +191,10 @@ _DRIVER_WINDOW = [
     "event_asof_attribution",
     "event_range_join",
     "hll_distinct_users",
-    "inline_ref_parse",
     "outbox_dedup_append",
     "pack_utilization",
     "place_crawl_closure",
     "reverse_invalidation",
-    "search_index_config",
     "url_build_redact",
     "doc_cdc_duplicate_chunks",
     "dedup_substring_spans",
@@ -235,7 +242,6 @@ _DRIVER_WINDOW = [
     # r13-green block (displaced from the r13 window this round; the
     # most recently driver-verified class, so it fills last)
     "event_audience_overlap",
-    "lang_shingle_overlap",
     "event_quantile_sketch",
     "doc_length_quantiles",
     "benchmark_contamination",

@@ -62,11 +62,13 @@ def _inline_ref_parse_oracle() -> str:
     from worker_spark.functions.inline_refs import extract_refs_from_quote
 
     for q, _ in FX.QUOTE_CASES:
-        assert _naive_candidates(q) == extract_refs_from_quote(q), (
-            "fixture quote needs regex consumption semantics; the SQL "
-            f"offsets oracle cannot express it: {q!r}"
-        )
-    assert not any("'" in q for q, _ in FX.QUOTE_CASES)
+        if _naive_candidates(q) != extract_refs_from_quote(q):
+            raise ValueError(
+                "fixture quote needs regex consumption semantics; the SQL "
+                f"offsets oracle cannot express it: {q!r}"
+            )
+    if any("'" in q for q, _ in FX.QUOTE_CASES):
+        raise ValueError("the quote corpus is inlined as SQL literals")
     values = ",\n        ".join(
         f"('no', {100 + i}, '{q}')" for i, (q, _) in enumerate(FX.QUOTE_CASES)
     )
@@ -165,7 +167,8 @@ def _inline_ref_codes_oracle() -> str:
     inlined as VALUES (it is the reference's own literal test corpus)."""
     from worker_spark import fixtures as FX
 
-    assert not any("'" in q for q, _ in FX.QUOTE_CASES)
+    if any("'" in q for q, _ in FX.QUOTE_CASES):
+        raise ValueError("the quote corpus is inlined as SQL literals")
     values = ",\n        ".join(
         f"('no', {100 + i}, '{q}')" for i, (q, _) in enumerate(FX.QUOTE_CASES)
     )

@@ -46,10 +46,11 @@ components', not the corpus's. Component SPLITS are handled by
 construction: the scope always covers the pre-batch component, so
 members separated by an edge removal are re-labelled too.
 
-Crash-order invariant: adj swaps first (mirrors, then node side),
-members second, labels last. A torn batch replays against the STALE
-label/member manifest, whose old cluster ids cover every node the old
-edges could have linked — a superset of the live scope.
+Declared order: a first transaction swaps the scope journal → the adj
+MIRROR sweep, then a second swaps adj (node side) → members → labels.
+A torn batch replays against the STALE label/member manifest, whose
+old cluster ids cover every node the old edges could have linked — a
+superset of the live scope.
 
 Serving: ``cluster_assignments()`` == operators/components.
 cluster_assignments over the live pair graph EXACTLY — (doc_id,
@@ -68,7 +69,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from worker_spark.plans.bucketed_state import BucketedParquetStateStore
+from worker_spark.plans.bucketed_state import BucketedParquetStateStore, local_frame
 
 ADJ_SCHEMA = T.StructType(
     [
@@ -191,10 +192,8 @@ class IncrementalComponentsIndex:
         # replay of a torn batch: union the journaled scope back in (its
         # nodes' member rows may already sit under RENAMED cluster ids
         # that the stale labels cannot reach — module docstring)
-        if batch_id is not None and store.has_schema_witness(self.JOURNAL):
-            prior = store.read(self.JOURNAL, JOURNAL_SCHEMA).filter(
-                F.col("batch_id") == int(batch_id)
-            )
+        prior = store.journaled(self.JOURNAL, JOURNAL_SCHEMA, batch_id)
+        if prior is not None:
             touched_nodes = touched_nodes.unionByName(prior.select("doc_id"))
         # lazy: materialized by the node_buckets collect just below
         touched_nodes = touched_nodes.distinct().localCheckpoint(eager=False)
@@ -217,29 +216,13 @@ class IncrementalComponentsIndex:
         old_members = store.read(
             self.MEMBERS, MEMBERS_SCHEMA, buckets=cluster_buckets
         ).join(affected_clusters, "cluster_id", "left_semi")
-        # lazy: materialized by the journal staging write (or, for an
-        # unjournaled call, the scope_buckets collect) — both run before
-        # any swap of the MEMBERS files this lineage reads
+        # lazy: materialized by the scope_buckets collect just below,
+        # before any swap of the MEMBERS files this lineage reads
         scope = (
             touched_nodes.unionByName(old_members.select("doc_id"))
             .distinct()
             .localCheckpoint(eager=False)
         )
-        # journal the scope BEFORE any swap (one single-bucket atomic
-        # write): from here on, any torn state replays to convergence
-        if batch_id is not None:
-            store.write(
-                self.JOURNAL,
-                scope.select(
-                    F.lit(0).cast("long").alias("jkey"),
-                    F.lit(int(batch_id)).cast("long").alias("batch_id"),
-                    "doc_id",
-                ),
-                keys=["jkey"],
-                # constant key => constant bucket, computed host-side
-                # (r14: drops the per-batch collect over the scope frame)
-                touched=[store.bucket_of_long(0)],
-            )
 
         # the scoped subgraph: stored edges of scope nodes, minus every
         # edge incident to a batch doc, plus the batch's new edges
@@ -279,77 +262,50 @@ class IncrementalComponentsIndex:
             F.col("id").alias("doc_id"), F.col("component").alias("cluster_id")
         )
 
-        # --- writes, in crash order ------------------------------------
-        # adj 1/2: the MIRROR sweep (rows pointing AT batch docs) —
-        # node-side rows are its manifest and must still be readable.
-        # ONE tagged collect derives BOTH pre-swap adj bucket sets (the
-        # mirror sweep's and the node side's insert buckets) — both are
-        # needed before the first ADJ swap anyway, and folding them
-        # halves the probe jobs (r15 job trim; same sets by
-        # construction: mirror = buckets(old_nbrs ∪ endpoints), node
-        # side = batch_buckets ∪ buckets(new_sym.node), and new_sym is
-        # symmetric so its node column covers both endpoint directions)
-        tagged = (
-            old_nbrs.unionByName(endpoints)
-            .select(
-                store.bucket_of(F.col("doc_id")).alias("b"),
-                F.lit(1).alias("mir"),
-                F.lit(0).alias("sym"),
-            )
-            .unionByName(
-                new_sym.select(
-                    store.bucket_of(F.col("node")).alias("b"),
-                    F.lit(0).alias("mir"),
-                    F.lit(1).alias("sym"),
-                )
-            )
-            .groupBy("b")
-            .agg(F.max("mir").alias("mir"), F.max("sym").alias("sym"))
-            .collect()
-        )
-        mirror_buckets = sorted(r["b"] for r in tagged if r["mir"])
-        new_sym_buckets = {r["b"] for r in tagged if r["sym"]}
-        if mirror_buckets:
-            store.delete_then_insert(
+        # --- writes, in declared (crash) order --------------------------
+        with store.transaction() as tx:
+            # journal the scope BEFORE any swap: from here on, any torn
+            # state replays to convergence
+            if batch_id is not None:
+                tx.journal(self.JOURNAL, batch_id, scope)
+            # adj 1/2: the MIRROR sweep (rows pointing AT batch docs, in
+            # the buckets of the old neighbours and the new endpoints) —
+            # node-side rows are its manifest and must still be readable
+            # afterwards, and adj appears once per transaction
+            tx.delete_then_insert(
                 self.ADJ,
                 delete_keys=batch_ids.withColumnRenamed("doc_id", "nbr"),
-                inserts=self.spark.createDataFrame([], ADJ_SCHEMA),
+                inserts=local_frame(self.spark, [], ADJ_SCHEMA),
                 schema=ADJ_SCHEMA,
                 bucket_col="node",
                 delete_on="nbr",
-                touched=mirror_buckets,
+                doomed=old_nbrs.unionByName(endpoints).select(
+                    store.bucket_of("doc_id")
+                ),
             )
-        # adj 2/2: node side replaced, new symmetric rows inserted
-        adj_buckets = sorted(set(batch_buckets) | new_sym_buckets)
-        if adj_buckets:
-            store.delete_then_insert(
+        with store.transaction() as tx:
+            # adj 2/2: node side replaced, new symmetric rows inserted
+            tx.delete_then_insert(
                 self.ADJ,
                 delete_keys=batch_ids.withColumnRenamed("doc_id", "node"),
                 inserts=new_sym,
                 schema=ADJ_SCHEMA,
                 bucket_col="node",
-                delete_on="node",
-                touched=adj_buckets,
             )
-        # members (cluster-bucketed): delete every scoped doc's row from
-        # the affected clusters' buckets, insert the recomputed rows
-        member_buckets = sorted(
-            set(cluster_buckets)
-            | set(store.touched_buckets(new_labels, "cluster_id"))
-        )
-        if member_buckets:
-            store.delete_then_insert(
+            # members (cluster-bucketed): delete every scoped doc's row
+            # from the affected clusters' buckets, insert the recomputed
+            # rows
+            tx.delete_then_insert(
                 self.MEMBERS,
                 delete_keys=scope,
                 inserts=new_labels.select("cluster_id", "doc_id"),
                 schema=MEMBERS_SCHEMA,
                 bucket_col="cluster_id",
                 delete_on="doc_id",
-                touched=member_buckets,
+                doomed=affected_clusters.select(store.bucket_of("cluster_id")),
             )
-        # labels (the manifest) LAST
-        if scope_buckets:
-            store.delete_then_insert(
+            # labels (the manifest) LAST
+            tx.delete_then_insert(
                 self.LABELS,
                 delete_keys=scope,
                 inserts=new_labels,

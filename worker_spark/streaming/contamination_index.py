@@ -55,11 +55,14 @@ State tables (root, n_buckets):
   the re-derives. The journal records the full scope BEFORE any swap;
   a replay of the SAME batch_id unions it back in.
 
-Crash order: journal first (atomic single-bucket swap), then post
-(data) before man (manifest — the exact-index argument: a torn batch
-replays against the stale manifest, a superset of everywhere the
-document's rows can be), then hot, evsz, pairs. Every write is a keyed
-delete-then-insert derived from post-swap state, so replay converges.
+Declared order: creation is one transaction, evg → evman → hot → evsz
+→ post → man → pairs → config (the witness last). A batch is two
+transactions: journal → post (data) → man (manifest — the exact-index
+argument: a torn batch replays against the stale manifest, a superset
+of everywhere the document's rows can be) → hot, then evsz → pairs,
+which read the post-swap hot set and so cannot join the first. Every
+write is a keyed MERGE derived from pre-transaction state, so replay
+converges.
 
 The contamination RATE is never stored: ``decisions()`` computes
 round(n_shared / n_eval_grams, 6) at serve time from ``pairs`` ×
@@ -88,7 +91,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from worker_spark.plans.bucketed_state import BucketedParquetStateStore
+from worker_spark.plans.bucketed_state import BucketedParquetStateStore, local_frame
 from worker_spark.streaming.feed import DOC_FEED_SCHEMA
 
 EVG_SCHEMA = T.StructType(
@@ -227,8 +230,6 @@ class IncrementalContaminationScreen:
         eval-only df state, write the config witness LAST (the
         created-ness marker — a crash mid-create replays as 'not
         created' and re-pins everything, the curation-index argument)."""
-        from concurrent.futures import ThreadPoolExecutor
-
         ev = _grams(eval_docs, n).select(
             F.col("doc_id").alias("eval_id"), "shingle"
         ).localCheckpoint(eager=True)
@@ -259,48 +260,32 @@ class IncrementalContaminationScreen:
                 ),
             )
         )
-        # the six pre-config pins are independent tables derived from
-        # the one checkpointed ev frame (no table reads another), so
-        # their write jobs overlap on the scheduler (the Spark guide's
-        # overlap-independent-jobs discipline); the CONFIG witness —
-        # the created-ness marker — still lands strictly LAST, so the
-        # crash story is unchanged: no witness, replay re-pins all.
-        with ThreadPoolExecutor(max_workers=4) as pool:
-            for fut in [
-                pool.submit(
-                    store.write, self.EVG,
-                    ev.select("shingle", "eval_id"), keys=["shingle"],
+        # one transaction: the seven pins are independent tables derived
+        # from the one checkpointed ev frame, so one tagged collect sizes
+        # them all and their staging jobs overlap; the CONFIG witness —
+        # the created-ness marker — is declared LAST, so the crash story
+        # is unchanged: no witness, replay re-pins all.
+        with store.transaction() as tx:
+            tx.write(self.EVG, ev.select("shingle", "eval_id"), keys=["shingle"])
+            tx.write(self.EVMAN, ev.select("eval_id", "shingle"), keys=["eval_id"])
+            tx.write(self.HOT, hot0, keys=["shingle"])
+            tx.write(self.EVSZ, evsz0, keys=["eval_id"])
+            for table, schema, key in (
+                (self.POST, POST_SCHEMA, "shingle"),
+                (self.MAN, MAN_SCHEMA, "corpus_id"),
+                (self.PAIRS, PAIRS_SCHEMA, "corpus_id"),
+            ):
+                tx.write(table, local_frame(self.spark, [], schema), keys=[key])
+            tx.write(
+                self.CONFIG,
+                local_frame(
+                    self.spark,
+                    [(0, int(n), int(min_shared), int(df_cap))],
+                    CONFIG_SCHEMA,
                 ),
-                pool.submit(
-                    store.write, self.EVMAN,
-                    ev.select("eval_id", "shingle"), keys=["eval_id"],
-                ),
-                pool.submit(store.write, self.HOT, hot0, keys=["shingle"]),
-                pool.submit(store.write, self.EVSZ, evsz0, keys=["eval_id"]),
-                pool.submit(
-                    store.write, self.POST,
-                    self.spark.createDataFrame([], POST_SCHEMA),
-                    keys=["shingle"],
-                ),
-                pool.submit(
-                    store.write, self.MAN,
-                    self.spark.createDataFrame([], MAN_SCHEMA),
-                    keys=["corpus_id"],
-                ),
-                pool.submit(
-                    store.write, self.PAIRS,
-                    self.spark.createDataFrame([], PAIRS_SCHEMA),
-                    keys=["corpus_id"],
-                ),
-            ]:
-                fut.result()
-        store.write(
-            self.CONFIG,
-            self.spark.createDataFrame(
-                [(0, int(n), int(min_shared), int(df_cap))], CONFIG_SCHEMA
-            ),
-            keys=["config_id"],
-        )
+                keys=["config_id"],
+                touched=[store.bucket_of_long(0)],
+            )
 
     # --- maintenance ----------------------------------------------------
 
@@ -436,10 +421,8 @@ class IncrementalContaminationScreen:
             .join(crossings, "shingle", "left_semi")
             .select("eval_id")
         )
-        if batch_id is not None and store.has_schema_witness(self.JOURNAL):
-            prior = store.read(self.JOURNAL, JOURNAL_SCHEMA).filter(
-                F.col("batch_id") == int(batch_id)
-            )
+        prior = store.journaled(self.JOURNAL, JOURNAL_SCHEMA, batch_id)
+        if prior is not None:
             d_c = d_c.unionByName(
                 prior.filter(~F.col("is_eval")).select(
                     F.col("doc_id").alias("corpus_id")
@@ -456,33 +439,22 @@ class IncrementalContaminationScreen:
         # must force them NOW: both are consumed again after the swaps.
         d_c = d_c.distinct().localCheckpoint(eager=batch_id is None)
         e_c = e_c.distinct().localCheckpoint(eager=batch_id is None)
-        if batch_id is not None:
-            store.write(
-                self.JOURNAL,
-                d_c.select(
-                    F.lit(0).cast("long").alias("jkey"),
-                    F.lit(int(batch_id)).cast("long").alias("batch_id"),
-                    F.col("corpus_id").alias("doc_id"),
-                    F.lit(False).alias("is_eval"),
-                ).unionByName(
-                    e_c.select(
-                        F.lit(0).cast("long").alias("jkey"),
-                        F.lit(int(batch_id)).cast("long").alias("batch_id"),
-                        F.col("eval_id").alias("doc_id"),
-                        F.lit(True).alias("is_eval"),
-                    )
-                ),
-                keys=["jkey"],
-                # constant key => constant bucket, host-side (r14)
-                touched=[store.bucket_of_long(0)],
-            )
-
-        # --- swaps, in crash order --------------------------------------
-        # post (data) before man (manifest): a torn batch replays
-        # against the STALE manifest, a superset of everywhere the
-        # batch docs' posting rows can be
-        if sh_buckets:
-            store.delete_then_insert(
+        # --- swaps, in declared (crash) order ---------------------------
+        # journal first, then post (data) before man (manifest): a torn
+        # batch replays against the STALE manifest, a superset of
+        # everywhere the batch docs' posting rows can be
+        with store.transaction() as tx:
+            if batch_id is not None:
+                tx.journal(
+                    self.JOURNAL,
+                    batch_id,
+                    d_c.select(
+                        F.col("corpus_id").alias("doc_id"), F.lit(False).alias("is_eval")
+                    ).unionByName(
+                        e_c.select(F.col("eval_id").alias("doc_id"), F.lit(True).alias("is_eval"))
+                    ),
+                )
+            tx.delete_then_insert(
                 self.POST,
                 delete_keys=bkeys,
                 inserts=new_g.select("shingle", "corpus_id"),
@@ -491,55 +463,32 @@ class IncrementalContaminationScreen:
                 delete_on="corpus_id",
                 touched=sh_buckets,
             )
-        store.delete_then_insert(
-            self.MAN,
-            delete_keys=bkeys,
-            inserts=new_g.select("corpus_id", "shingle"),
-            schema=MAN_SCHEMA,
-            bucket_col="corpus_id",
-            delete_on="corpus_id",
-            touched=doc_buckets,
-        )
-        if sh_buckets:
-            store.delete_then_insert(
+            tx.delete_then_insert(
+                self.MAN,
+                delete_keys=bkeys,
+                inserts=new_g.select("corpus_id", "shingle"),
+                schema=MAN_SCHEMA,
+                bucket_col="corpus_id",
+                touched=doc_buckets,
+            )
+            tx.delete_then_insert(
                 self.HOT,
                 delete_keys=touched_sh,
                 inserts=hot_after_t,
                 schema=HOT_SCHEMA,
                 bucket_col="shingle",
-                delete_on="shingle",
                 touched=sh_buckets,
             )
 
-        # evsz for crossing-affected eval docs: re-count their live
-        # grams against the post-swap dead set
-        if e_c.limit(1).count() > 0:
-            e_buckets = store.touched_buckets(e_c, "eval_id")
-            ev_rows = store.read(
-                self.EVMAN, EVMAN_SCHEMA, buckets=e_buckets
-            ).join(e_c, "eval_id", "left_semi")
-            hot_now = self.hot()
-            new_sz = (
-                ev_rows.join(hot_now, "shingle", "left_anti")
-                .groupBy("eval_id")
-                .agg(F.count(F.lit(1)).alias("n_eval_grams"))
-            )
-            # an eval doc whose every gram went dead keeps a 0 row (the
-            # denominator table stays total over the pinned eval set)
-            new_sz = e_c.join(new_sz, "eval_id", "left").select(
-                "eval_id",
-                F.coalesce("n_eval_grams", F.lit(0).cast("long")).alias(
-                    "n_eval_grams"
-                ),
-            )
-            store.upsert(self.EVSZ, new_sz, keys=["eval_id"], schema=EVSZ_SCHEMA)
-
+        # a second transaction: both tables below read the POST-swap hot
+        # set
+        hot_now = self.hot()
         # pairs for the full re-derive scope: live shingles of the
         # affected corpus docs × the pinned eval grams
         scope_man = store.read(
             self.MAN, MAN_SCHEMA, buckets=store.touched_buckets(d_c, "corpus_id")
         ).join(d_c, "corpus_id", "left_semi")
-        live_man = scope_man.join(self.hot(), "shingle", "left_anti")
+        live_man = scope_man.join(hot_now, "shingle", "left_anti")
         probe_buckets = store.touched_buckets(live_man, "shingle")
         evg_probe = store.read(self.EVG, EVG_SCHEMA, buckets=probe_buckets)
         new_pairs = (
@@ -548,14 +497,37 @@ class IncrementalContaminationScreen:
             .agg(F.count(F.lit(1)).alias("n_shared"))
             .filter(F.col("n_shared") >= self.min_shared)
         )
-        store.delete_then_insert(
-            self.PAIRS,
-            delete_keys=d_c,
-            inserts=new_pairs,
-            schema=PAIRS_SCHEMA,
-            bucket_col="corpus_id",
-            delete_on="corpus_id",
-        )
+        with store.transaction() as tx:
+            # evsz for crossing-affected eval docs: re-count their live
+            # grams against the post-swap dead set
+            if e_c.limit(1).count() > 0:
+                ev_rows = store.read(
+                    self.EVMAN,
+                    EVMAN_SCHEMA,
+                    buckets=store.touched_buckets(e_c, "eval_id"),
+                ).join(e_c, "eval_id", "left_semi")
+                new_sz = (
+                    ev_rows.join(hot_now, "shingle", "left_anti")
+                    .groupBy("eval_id")
+                    .agg(F.count(F.lit(1)).alias("n_eval_grams"))
+                )
+                # an eval doc whose every gram went dead keeps a 0 row
+                # (the denominator table stays total over the pinned
+                # eval set)
+                new_sz = e_c.join(new_sz, "eval_id", "left").select(
+                    "eval_id",
+                    F.coalesce("n_eval_grams", F.lit(0).cast("long")).alias(
+                        "n_eval_grams"
+                    ),
+                )
+                tx.upsert(self.EVSZ, new_sz, keys=["eval_id"], schema=EVSZ_SCHEMA)
+            tx.delete_then_insert(
+                self.PAIRS,
+                delete_keys=d_c,
+                inserts=new_pairs,
+                schema=PAIRS_SCHEMA,
+                bucket_col="corpus_id",
+            )
 
     # --- read side --------------------------------------------------------
 

@@ -26,7 +26,8 @@ so a micro-batch costs O(batch) compute plus O(touched buckets)
 rewrite — and since ``decisions`` is bucketed by DOC_ID, the batch's
 own key, touched buckets are exactly the batch's doc buckets: no
 manifest table is needed (unlike the fingerprint/vector indexes, a
-decision row never moves buckets when its document changes).
+decision row never moves buckets when its document changes). A batch
+is one transaction, declared decisions → texts.
 
 Delete semantics: a batch document with empty/whitespace-only text has
 no content — its decision row is removed.
@@ -56,7 +57,7 @@ from worker_spark.operators.text import (
     with_lang_id,
     with_quality_score,
 )
-from worker_spark.plans.bucketed_state import BucketedParquetStateStore
+from worker_spark.plans.bucketed_state import BucketedParquetStateStore, local_frame
 from worker_spark.streaming.feed import DOC_FEED_SCHEMA
 
 LM_SCHEMA = T.StructType(
@@ -185,36 +186,32 @@ class IncrementalCurationIndex:
                     "batch would score over no support and the "
                     "lm gate would never fire"
                 )
-            # lm and texts BEFORE config: the config's schema witness
-            # is the created-ness marker (checked above), so a crash
-            # between the writes replays as "not created" and re-pins
-            # everything
-            self.store.write(self.LM, model, keys=["bigram"])
-            self.store.write(
-                self.TEXTS,
-                self.spark.createDataFrame([], TEXTS_SCHEMA),
-                keys=["doc_id"],
-            )
-            self.store.write(
-                self.CONFIG,
-                self.spark.createDataFrame(
-                    [
-                        (
-                            0,
-                            config.target_lang,
-                            float(config.min_quality),
-                            float(config.min_ttr),
-                            float(config.max_tbr),
-                            float(config.min_logp),
-                            int(config.gopher_min_words),
-                            list(config.gopher_stopwords),
-                            int(config.gopher_min_sw_hits),
-                        )
-                    ],
-                    CONFIG_SCHEMA,
-                ),
-                keys=["config_id"],
-            )
+            # one transaction, declared lm → texts → config: the
+            # config's schema witness is the created-ness marker
+            # (checked above), so a crash between the swaps replays as
+            # "not created" and re-pins everything
+            with self.store.transaction() as tx:
+                tx.write(self.LM, model, keys=["bigram"])
+                tx.write(
+                    self.TEXTS, local_frame(spark, [], TEXTS_SCHEMA), keys=["doc_id"]
+                )
+                row = (
+                    0,
+                    config.target_lang,
+                    float(config.min_quality),
+                    float(config.min_ttr),
+                    float(config.max_tbr),
+                    float(config.min_logp),
+                    int(config.gopher_min_words),
+                    list(config.gopher_stopwords),
+                    int(config.gopher_min_sw_hits),
+                )
+                tx.write(
+                    self.CONFIG,
+                    self.spark.createDataFrame([row], CONFIG_SCHEMA),
+                    keys=["config_id"],
+                    touched=[self.store.bucket_of_long(0)],
+                )
             self.config = config
 
     def _load_config(self) -> CurationConfig:
@@ -320,9 +317,9 @@ class IncrementalCurationIndex:
         # checkpoint each branch re-pays the last_wins shuffle (and the
         # feed scan) — 5x the batch cost per trigger at scale. Lazy
         # (r15 job-count discipline): live and rows materialize inside
-        # the DECISIONS staging job (their lineage reads only the feed
-        # batch and the pinned LM tables, neither swapped here), and
-        # batch_ids by the one doc_buckets collect below.
+        # the staging jobs (their lineage reads only the feed batch and
+        # the pinned LM tables, neither swapped here), and batch_ids by
+        # the one doc_buckets collect below.
         live = (
             batch.filter(F.length(F.trim(F.col("text"))) > 0)
             .localCheckpoint(eager=False)
@@ -334,28 +331,26 @@ class IncrementalCurationIndex:
         # so the touched set is the batch ids' buckets for each (insert
         # rows are a subset of the batch ids).
         doc_buckets = store.touched_buckets(batch_ids, "doc_id")
-        store.delete_then_insert(
-            self.DECISIONS,
-            delete_keys=batch_ids,
-            inserts=rows,
-            schema=DECISIONS_SCHEMA,
-            bucket_col="doc_id",
-            delete_on="doc_id",
-            touched=doc_buckets,
-        )
-        # the retained corpus text (r12 item 5 — what makes retrain()
-        # self-contained): same buckets as decisions, same delete
-        # semantics. Crash order decisions-then-texts is safe: a torn
-        # batch replays the identical delete-then-insert on both.
-        store.delete_then_insert(
-            self.TEXTS,
-            delete_keys=batch_ids,
-            inserts=live.select("doc_id", "text"),
-            schema=TEXTS_SCHEMA,
-            bucket_col="doc_id",
-            delete_on="doc_id",
-            touched=doc_buckets,
-        )
+        # one transaction, declared decisions → texts (the retained
+        # corpus text, r12 item 5 — what makes retrain() self-contained):
+        # a torn batch replays the identical delete-then-insert on both
+        with store.transaction() as tx:
+            tx.delete_then_insert(
+                self.DECISIONS,
+                delete_keys=batch_ids,
+                inserts=rows,
+                schema=DECISIONS_SCHEMA,
+                bucket_col="doc_id",
+                touched=doc_buckets,
+            )
+            tx.delete_then_insert(
+                self.TEXTS,
+                delete_keys=batch_ids,
+                inserts=live.select("doc_id", "text"),
+                schema=TEXTS_SCHEMA,
+                bucket_col="doc_id",
+                touched=doc_buckets,
+            )
 
     # --- lifecycle (VERDICT r12 item 5: the IVF recluster discipline) ---
 

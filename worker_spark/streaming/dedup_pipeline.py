@@ -32,6 +32,10 @@ the same seam: swap step 2's screen for theirs and the label
 maintenance is unchanged — this module pins the composition contract
 with the cheapest screen.
 
+The near-dup pipeline commits its text table and the MinHash index's
+tables in one write transaction across the two roots, declared docs →
+bands → sigs.
+
 Reference parity anchor: the reference's sync pipeline composes its
 add-or-replace index sink with link-table replacement in one batch
 (src/indexing.rs:61-115 feeding src/storage.rs link swaps); this is
@@ -168,8 +172,9 @@ class StreamingNearDupPipeline:
     the few candidate partners, which the bucket-pruned read below
     reproduces (partner ids -> their buckets -> semi-join).
 
-    Per batch: texts MERGE -> band-state MERGE -> band-bucket-pruned
-    candidate screen -> exact-Jaccard verify re-shingling the batch +
+    Per batch: one transaction declared docs → bands → sigs (texts
+    first, then the MinHash index's own derived-first order) ->
+    band-bucket-pruned candidate screen -> exact-Jaccard verify re-shingling the batch +
     partner docs only -> verified pairs relabel the touched components.
     Convergence: a corrected document's announcement re-screens it
     against the whole maintained band state and REPLACES its edge set,
@@ -249,8 +254,6 @@ class StreamingNearDupPipeline:
         id_col: str = "doc_id",
         text_col: str = "text",
     ) -> None:
-        from concurrent.futures import ThreadPoolExecutor
-
         from worker_spark.operators.dedup import word_shingles
         from worker_spark.streaming.feed import last_wins
 
@@ -271,19 +274,12 @@ class StreamingNearDupPipeline:
         )
         doc_buckets = self.docstore.touched_buckets(batch_ids, "doc_id")
         live = batch.filter(F.length(F.trim(F.col("text"))) > 0)
-        # The text MERGE and the band/signature MERGE maintain DISJOINT
-        # state roots, so their jobs overlap on the scheduler (guide
-        # §2.6, the ingest-gate discipline): wall = the slower side.
-        # Each side's internal crash order runs unchanged in its own
-        # thread, and the composed replay contract equals sequential's —
-        # this batch's verify reads batch text from the batch frame
-        # itself (partners are non-batch ids by construction), and a
-        # later batch only screens after this one fully committed, so
-        # no reader can observe the bands-before-texts interleaving; a
-        # torn batch replays both MERGEs idempotently.
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            ft = pool.submit(
-                self.docstore.delete_then_insert,
+        # one transaction over both roots, declared docs → bands → sigs:
+        # a torn batch never leaves a signature whose text is missing
+        # for a doc the batch adds or updates, and the replay re-applies
+        # every table idempotently
+        with self.docstore.transaction() as tx:
+            tx.delete_then_insert(
                 self.DOCS,
                 delete_keys=batch_ids,
                 inserts=live,
@@ -291,16 +287,13 @@ class StreamingNearDupPipeline:
                 bucket_col="doc_id",
                 touched=doc_buckets,
             )
-            fm = pool.submit(
-                self.minhash.apply_batch,
+            self.minhash.add_batch(
+                tx,
                 batch,
-                batch_id=batch_id,
                 pre_reduced=True,
                 batch_ids=batch_ids,
                 doc_buckets=doc_buckets,
             )
-            ft.result()
-            fm.result()
         # screen AFTER apply: the batch's own bands are in state, so
         # within-batch pairs fall out of the same band equi-join. The
         # batch's signatures are read BACK from the sigs state the
@@ -364,9 +357,9 @@ class StreamingNearDupPipeline:
     def fsck(self) -> dict[str, int]:
         """Each sub-structure's check, then the cross-root one: every
         signature has its text. Both MERGEs skip blank texts, so every
-        committed state holds sigs ⊆ docs; the two MERGEs run on two
-        threads, so a torn batch can commit signatures and bands whose
-        texts the partner verify would never find."""
+        committed state holds sigs ⊆ docs; a batch torn after its docs
+        swap leaves a deleted doc's stale signature without its text,
+        which the partner verify would never find."""
         counts = {self.DOCS: self.docstore.verify_layout(self.DOCS)}
         counts.update(self.minhash.fsck())
         counts.update(self.components.fsck())

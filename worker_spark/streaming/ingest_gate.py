@@ -42,7 +42,9 @@ bounded bucket-id lists.
 from __future__ import annotations
 
 import os
+from concurrent.futures import ThreadPoolExecutor
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -74,8 +76,6 @@ class StreamingIngestGate:
         df_cap: int = 1000,
         n_buckets: int = 16,
     ):
-        from concurrent.futures import ThreadPoolExecutor
-
         self.spark = spark
         # the two sub-structures are INDEPENDENT (separate state roots,
         # separate pins), so their creation jobs — the curation side's
@@ -84,9 +84,12 @@ class StreamingIngestGate:
         # overlap-independent-jobs discipline): wall time = the slower
         # creation, not the sum. Each root keeps its own crash story —
         # a crash mid-create replays whichever side's witness is absent.
+        # each side's jobs keep the caller's job group and description;
+        # every wrap takes its own copy of the local properties, which
+        # two threads must not share
         with ThreadPoolExecutor(max_workers=2) as pool:
             fc = pool.submit(
-                IncrementalCurationIndex,
+                inheritable_thread_target(spark)(IncrementalCurationIndex),
                 spark,
                 os.path.join(root, "curation"),
                 lm_train_docs=lm_train_docs,
@@ -94,7 +97,7 @@ class StreamingIngestGate:
                 n_buckets=n_buckets,
             )
             fs = pool.submit(
-                IncrementalContaminationScreen,
+                inheritable_thread_target(spark)(IncrementalContaminationScreen),
                 spark,
                 os.path.join(root, "screen"),
                 eval_docs=eval_docs,
@@ -113,8 +116,6 @@ class StreamingIngestGate:
         id_col: str = "doc_id",
         text_col: str = "text",
     ) -> None:
-        from concurrent.futures import ThreadPoolExecutor
-
         from worker_spark.streaming.feed import last_wins
 
         # one winner per key BEFORE either side sees the batch (both
@@ -136,9 +137,15 @@ class StreamingIngestGate:
         # batch_id re-applies both idempotently.
         with ThreadPoolExecutor(max_workers=2) as pool:
             fc = pool.submit(
-                self.curation.apply_batch, batch, batch_id=batch_id
+                inheritable_thread_target(self.spark)(self.curation.apply_batch),
+                batch,
+                batch_id=batch_id,
             )
-            fs = pool.submit(self.screen.apply_batch, batch, batch_id=batch_id)
+            fs = pool.submit(
+                inheritable_thread_target(self.spark)(self.screen.apply_batch),
+                batch,
+                batch_id=batch_id,
+            )
             fc.result()
             fs.result()
 

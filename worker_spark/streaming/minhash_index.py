@@ -23,9 +23,11 @@ signature state: document batches arrive as a stream, and a
   math over the stored signature array (the fps-table trick of the
   SimHash index, applied to signatures).
 
-Both tables are written by ``BucketedParquetStateStore.reindex``:
-bands (derived) before sigs (manifest), the crash order its module
-docstring argues.
+Both tables are written by ``Transaction.reindex``, declared bands
+(derived) → sigs (manifest), the crash order the
+``plans/bucketed_state.py`` module docstring argues. ``add_batch``
+declares them on a caller's transaction (the near-dup pipeline commits
+its text table with them).
 
 Verification is where MinHash differs from SimHash: SimHash verifies
 by Hamming distance over the STORED fingerprints, but MinHash-LSH's
@@ -141,24 +143,31 @@ class IncrementalMinHashIndex:
             F.array(*[F.col(f"mh_{i}") for i in range(N_PERM)]).alias("sig"),
         )
 
-    def apply_batch(
+    def apply_batch(self, docs: DataFrame, batch_id: int | None = None, **kwargs) -> None:
+        """The foreachBatch body: ``add_batch`` in a transaction of its own."""
+        with self.store.transaction() as tx:
+            self.add_batch(tx, docs, **kwargs)
+
+    def add_batch(
         self,
+        tx,
         docs: DataFrame,
-        batch_id: int | None = None,
         id_col: str = "doc_id",
         text_col: str = "text",
         pre_reduced: bool = False,
         batch_ids: DataFrame | None = None,
         doc_buckets: list[int] | None = None,
     ) -> None:
-        """The foreachBatch body: delete-then-insert the batch
-        documents' band rows (an updated document's signature changes,
-        so its band rows MOVE to new band keys; a replayed batch
-        rewrites identical rows) and refresh the signature manifest.
-        Touched bands buckets = old-signature band keys ∪ new-signature
-        band keys — exact and bounded, both derived by column math.
-        A batch carrying several versions of one doc_id is reduced to
-        one row per key first — last-wins (feed.last_wins).
+        """Declare a batch's ops on ``tx``, bound to this index's store
+        (a composed pipeline commits them with its own tables): delete-
+        then-insert the batch documents' band rows (an updated
+        document's signature changes, so its band rows MOVE to new band
+        keys; a replayed batch rewrites identical rows) and refresh the
+        signature manifest, declared bands → sigs. Touched bands buckets
+        = old-signature band keys ∪ new-signature band keys — exact and
+        bounded, both derived by column math. A batch carrying several
+        versions of one doc_id is reduced to one row per key first —
+        last-wins (feed.last_wins).
 
         ``pre_reduced`` declares the caller already ran last_wins on
         ``docs`` (the composed pipelines do, before screening) — the
@@ -170,14 +179,14 @@ class IncrementalMinHashIndex:
 
         store = self.store
         reduced = docs if pre_reduced else last_wins(docs, [id_col])
-        # lazy: materialized by reindex's bucket collects, which run
-        # before either table's swap
+        # lazy: materialized by the transaction's bucket collect, which
+        # runs before any swap
         new_sigs = self._signatures(reduced, id_col, text_col).localCheckpoint(
             eager=False
         )
         if batch_ids is None:
             batch_ids = batch_doc_ids(docs, id_col)
-        store.reindex(
+        tx.on(store).reindex(
             batch_ids,
             self.SIGS,
             SIGS_SCHEMA,

@@ -24,12 +24,13 @@ devices make it exactly-once, both inherited from the family:
   the Misra-Gries exactly-once fence): a replay whose batch_id is
   already at-or-below the watermark skips the ledger apply entirely.
 
-Crash order: journal (atomic single-bucket) → mem (keyed
-delete-then-insert — idempotent) → ledger (atomic single-bucket,
-fenced). Every tear point replays to convergence:
-crash-after-journal / crash-after-mem → replay uses the JOURNALED
-delta (recomputation is wrong exactly when mem already swapped) and
-the fence admits the apply once; crash-after-ledger → fence skips.
+Declared order: one transaction swaps journal (atomic single-bucket) →
+mem (keyed delete-then-insert — idempotent); the ledger (atomic
+single-bucket, fenced) is its own write after it. Every tear point
+replays to convergence: crash-after-journal / crash-after-mem → replay
+uses the JOURNALED delta (recomputation is wrong exactly when mem
+already swapped) and the fence admits the apply once;
+crash-after-ledger → fence skips.
 
 State tables (root, n_buckets):
 
@@ -235,10 +236,8 @@ class IncrementalMixtureLedger:
         # --- the delta: journaled truth for this batch_id -----------------
         fenced = batch_id is not None
         journaled = None
-        if fenced and store.has_schema_witness(self.JOURNAL):
-            prior = store.read(self.JOURNAL, JOURNAL_SCHEMA).filter(
-                F.col("batch_id") == int(batch_id)
-            )
+        prior = store.journaled(self.JOURNAL, JOURNAL_SCHEMA, batch_id)
+        if prior is not None:
             if prior.limit(1).count():
                 # a torn attempt already journaled this batch: its delta
                 # was computed against the TRUE pre-batch mem (which the
@@ -277,30 +276,17 @@ class IncrementalMixtureLedger:
                 # pre-swap mem files are still live
                 .localCheckpoint(eager=not fenced)
             )
-        if fenced:
-            store.write(
-                self.JOURNAL,
-                journaled.select(
-                    F.lit(0).cast("long").alias("jkey"),
-                    F.lit(int(batch_id)).cast("long").alias("batch_id"),
-                    "stratum",
-                    "d_total",
-                    "d_sampled",
-                ),
-                keys=["jkey"],
-                # constant key => constant bucket, host-side (r14)
-                touched=[store.bucket_of_long(0)],
+        # --- one transaction: journal → mem (idempotent keyed replace) ----
+        with store.transaction() as tx:
+            if fenced:
+                tx.journal(self.JOURNAL, batch_id, journaled)
+            tx.delete_then_insert(
+                self.MEM,
+                delete_keys=batch_ids,
+                inserts=new_mem,
+                schema=MEM_SCHEMA,
+                bucket_col="doc_id",
             )
-
-        # --- mem: idempotent keyed replace ---------------------------------
-        store.delete_then_insert(
-            self.MEM,
-            delete_keys=batch_ids,
-            inserts=new_mem,
-            schema=MEM_SCHEMA,
-            bucket_col="doc_id",
-            delete_on="doc_id",
-        )
 
         # --- ledger: atomic single-bucket swap behind the fence -------------
         led = self._led_rows()

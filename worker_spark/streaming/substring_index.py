@@ -24,10 +24,10 @@ multi-row-per-document fingerprint set):
   dup_frac denominator (a document shorter than the K-gram width has
   NO fingerprints but still owns a report row).
 
-fprows (derived) and fps (manifest) are written by
-``BucketedParquetStateStore.reindex``, derived first — the crash order
-its module docstring argues; doclen swaps last and is idempotent under
-replay.
+A batch is one transaction, declared fprows (derived) → fps
+(manifest) → doclen: ``Transaction.reindex`` declares the pair derived
+first, the crash order the ``plans/bucketed_state.py`` module docstring
+argues; doclen swaps last and is idempotent under replay.
 
 Delete semantics: a batch document with empty/whitespace-only text is a
 removal — its fingerprint rows, manifest rows, and length row all go,
@@ -166,31 +166,32 @@ class IncrementalSubstringIndex:
             .count()
             > 0
         )
-        store.reindex(
-            batch_ids,
-            self.FPS,
-            FPS_SCHEMA,
-            new_fp.select("doc_id", "fhash", "pos"),
-            self.FPROWS,
-            FPROWS_SCHEMA,
-            new_fp.select("fhash", "doc_id", "pos"),
-            "fhash",
-            lambda old: old.select(store.bucket_of("fhash")),
-            id_buckets=doc_buckets,
-        )
-        # doclen LAST: a short-but-live document (len < K) has no
-        # fingerprints yet still owns a zero-filled report row, so its
-        # length row must land even when no hash bucket was touched —
-        # but an unknown-delete-only batch touches nothing at all
-        if write_doclen:
-            store.delete_then_insert(
-                self.DOCLEN,
-                delete_keys=batch_ids,
-                inserts=live.select("doc_id", "doc_len"),
-                schema=DOCLEN_SCHEMA,
-                bucket_col="doc_id",
-                touched=doc_buckets,
+        with store.transaction() as tx:
+            tx.reindex(
+                batch_ids,
+                self.FPS,
+                FPS_SCHEMA,
+                new_fp.select("doc_id", "fhash", "pos"),
+                self.FPROWS,
+                FPROWS_SCHEMA,
+                new_fp.select("fhash", "doc_id", "pos"),
+                "fhash",
+                lambda old: old.select(store.bucket_of("fhash")),
+                id_buckets=doc_buckets,
             )
+            # doclen LAST: a short-but-live document (len < K) has no
+            # fingerprints yet still owns a zero-filled report row, so
+            # its length row must land even when no hash bucket was
+            # touched — but an unknown-delete-only batch touches nothing
+            if write_doclen:
+                tx.delete_then_insert(
+                    self.DOCLEN,
+                    delete_keys=batch_ids,
+                    inserts=live.select("doc_id", "doc_len"),
+                    schema=DOCLEN_SCHEMA,
+                    bucket_col="doc_id",
+                    touched=doc_buckets,
+                )
 
     def fsck(self) -> dict[str, int]:
         """Index-level consistency check: placement for all three
