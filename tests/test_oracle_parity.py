@@ -7,17 +7,23 @@ import pytest
 
 from tests.conftest import FULL_SUITE, SF_ORACLE
 from tests.oracle_harness import compare
-from worker_spark.queries import _DRIVER_WINDOW, all_queries
+from worker_spark.queries import (
+    _DISPLACED_FROM_WINDOW,
+    _DRIVER_WINDOW,
+    all_queries,
+)
 
 _SPECS = all_queries()
-# Default tier: exactly the driver's 50-slot verification window (the
+# Default tier: the driver's 50-slot verification window (the
 # set the round driver oracle-checks — anything transitively changed is
 # rotated in there, so the default tier always covers this round's
-# changes). SPARK_GRAFT_FULL_SUITE=1 sweeps all registered queries.
+# changes), plus the rows the latest rotation displaced from it.
+# SPARK_GRAFT_FULL_SUITE=1 sweeps all registered queries.
 _WINDOW50 = set(_DRIVER_WINDOW[:50])
+_DEFAULT_TIER = _WINDOW50 | set(_DISPLACED_FROM_WINDOW)
 _PARAMS = [
     name
-    if (FULL_SUITE or name in _WINDOW50)
+    if (FULL_SUITE or name in _DEFAULT_TIER)
     else pytest.param(
         name,
         marks=pytest.mark.skip(
@@ -39,3 +45,9 @@ def test_query_matches_oracle(spark, name):
         return
     ok, msg = compare(df, spec.oracle, SF_ORACLE)
     assert ok, f"{name}: {msg}"
+
+
+def test_displaced_rows_are_registered_and_outside_the_window():
+    displaced = set(_DISPLACED_FROM_WINDOW)
+    assert displaced <= set(_SPECS), sorted(displaced - set(_SPECS))
+    assert not displaced & _WINDOW50, sorted(displaced & _WINDOW50)
