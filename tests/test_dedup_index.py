@@ -52,8 +52,7 @@ def test_duplicate_keys_in_one_batch_are_last_wins(spark, tmp_path):
     idx.apply_batch(batch)
     want = _rows(
         simhash(
-            spark.createDataFrame([(1, fresh)], "doc_id long, text string"),
-            id_col="doc_id",
+            spark.createDataFrame([(1, fresh)], "doc_id long, text string")
         ).select(F.col("id").cast("long").alias("doc_id"), "simhash")
     )
     assert _rows(idx.fps()) == want  # one fingerprint: the fresh text's

@@ -704,8 +704,7 @@ def test_quantile_index_serve_is_state_only_bounded_agg(spark, tmp_path):
         spark.createDataFrame(
             [("a", i, float(i)) for i in range(40)],
             "g string, kid long, v double",
-        ),
-        key_col="kid",
+        )
     )
     est = idx.estimates()
     plan = _physical(est)

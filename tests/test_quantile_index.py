@@ -24,8 +24,11 @@ from worker_spark.streaming.quantile_index import (
 
 
 def _events(spark):
+    # the events table in the index's FEED_SCHEMA names
     return load_table(spark, SF_ORACLE, "events").select(
-        "event_type", "event_id", "value"
+        F.col("event_type").alias("g"),
+        F.col("event_id").alias("kid"),
+        F.col("value").alias("v"),
     )
 
 
@@ -36,9 +39,8 @@ def _rows(df):
 def _estimates_match_batch(idx, events):
     got = _rows(idx.estimates())
     want = _rows(
-        quantile_sketch(events, "value", "event_id", "event_type").select(
-            F.col("event_type").alias("g"), "m", "p50_est", "p90_est",
-            "p99_est",
+        quantile_sketch(events, "v", "kid", "g").select(
+            "g", "m", "p50_est", "p90_est", "p99_est"
         )
     )
     assert got == want
@@ -50,19 +52,12 @@ def test_streamed_batches_converge_to_batch_sketch(spark, tmp_path):
     row's contract at test scale)."""
     e = _events(spark).localCheckpoint(eager=True)
     idx = IncrementalQuantileIndex(spark, str(tmp_path / "x"))
-    idx.apply_batch(
-        e.filter(F.col("event_id") % 3 == 0),
-        group_col="event_type", key_col="event_id", value_col="value",
-    )
+    idx.apply_batch(e.filter(F.col("kid") % 3 == 0))
     # batch 1 re-delivers a slice of batch 0 (id%9==0 ⊂ id%3==0)
     idx.apply_batch(
-        e.filter((F.col("event_id") % 3 == 1) | (F.col("event_id") % 9 == 0)),
-        group_col="event_type", key_col="event_id", value_col="value",
+        e.filter((F.col("kid") % 3 == 1) | (F.col("kid") % 9 == 0))
     )
-    idx.apply_batch(
-        e.filter(F.col("event_id") % 3 == 2),
-        group_col="event_type", key_col="event_id", value_col="value",
-    )
+    idx.apply_batch(e.filter(F.col("kid") % 3 == 2))
     _estimates_match_batch(idx, e)
     idx.fsck()
 
@@ -73,9 +68,9 @@ def test_replay_is_a_noop_and_small_group_is_exact(spark, tmp_path):
         [("a", i, float(i)) for i in range(1, 11)],
         "g string, kid long, v double",
     )
-    idx.apply_batch(b, key_col="kid")
+    idx.apply_batch(b)
     before = _rows(idx.sample())
-    idx.apply_batch(b, key_col="kid")  # full re-delivery
+    idx.apply_batch(b)  # full re-delivery
     assert _rows(idx.sample()) == before
     # n=10 <= k=64: the sample holds everything, estimates are the exact
     # nearest-rank order statistics of 1..10
@@ -93,10 +88,7 @@ def test_bounded_state_survives_heavy_eviction(spark, tmp_path):
     idx = IncrementalQuantileIndex(spark, str(tmp_path / "x"), k=k)
     e = _events(spark).limit(3000).localCheckpoint(eager=True)
     for r in range(5):
-        idx.apply_batch(
-            e.filter(F.col("event_id") % 5 == r),
-            group_col="event_type", key_col="event_id", value_col="value",
-        )
+        idx.apply_batch(e.filter(F.col("kid") % 5 == r))
         cap = (
             idx.sample().groupBy("g").agg(F.count(F.lit(1)).alias("n"))
             .agg(F.max("n")).collect()[0][0]
@@ -104,11 +96,8 @@ def test_bounded_state_survives_heavy_eviction(spark, tmp_path):
         assert cap <= k
     got = _rows(idx.estimates())
     want = _rows(
-        quantile_sketch(
-            e, "value", "event_id", "event_type", k=k
-        ).select(
-            F.col("event_type").alias("g"), "m", "p50_est", "p90_est",
-            "p99_est",
+        quantile_sketch(e, "v", "kid", "g", k=k).select(
+            "g", "m", "p50_est", "p90_est", "p99_est"
         )
     )
     assert got == want
@@ -127,7 +116,7 @@ def test_null_nan_rows_are_excluded_like_the_batch_operator(spark, tmp_path):
         ],
         "g string, kid long, v double",
     )
-    idx.apply_batch(b, key_col="kid")
+    idx.apply_batch(b)
     assert {r["kid"] for r in idx.sample().collect()} == {"1", "4"}
 
 
@@ -146,12 +135,12 @@ def test_batch_rewrites_only_touched_group_buckets(spark, tmp_path):
         [(f"g{j}", j * 1000 + i, float(i)) for j in range(8) for i in range(50)],
         "g string, kid long, v double",
     )
-    idx.apply_batch(seed, key_col="kid")
+    idx.apply_batch(seed)
     before = _bucket_snapshot(os.path.join(root, idx.SMP))
     one = spark.createDataFrame(
         [("g0", 99_999, 0.5)], "g string, kid long, v double"
     )
-    idx.apply_batch(one, key_col="kid")
+    idx.apply_batch(one)
     after = _bucket_snapshot(os.path.join(root, idx.SMP))
     assert len(_changed(before, after)) == 1  # g0's bucket only
 
@@ -163,8 +152,7 @@ def test_fsck_catches_overfull_group(spark, tmp_path):
         spark.createDataFrame(
             [("a", i, float(i)) for i in range(4)],
             "g string, kid long, v double",
-        ),
-        key_col="kid",
+        )
     )
     idx.fsck()
     # smuggle a 5th row in through the raw store (bypassing apply_batch)
@@ -191,8 +179,6 @@ def test_quantile_stream_restart_resumes_from_checkpoint(spark, tmp_path):
     import os as _os
     import shutil
 
-    from pyspark.sql import types as T
-
     from worker_spark.streaming.feed import file_feed_stream
 
     e = _events(spark).limit(3000).localCheckpoint(eager=True)
@@ -208,30 +194,20 @@ def test_quantile_stream_restart_resumes_from_checkpoint(spark, tmp_path):
 
     root = str(tmp_path / "x")
     ckpt = str(tmp_path / "ckpt")
-    schema = T.StructType(
-        [
-            T.StructField("event_type", T.StringType(), True),
-            T.StructField("event_id", T.LongType(), True),
-            T.StructField("value", T.DoubleType(), True),
-        ]
-    )
 
     def run_stream(idx):
-        return file_feed_stream(
-            spark, feed, idx, ckpt, schema,
-            group_col="event_type", key_col="event_id", value_col="value",
-        )
+        return file_feed_stream(spark, feed, idx, ckpt)
 
-    land(e.filter(F.col("event_id") % 3 == 0), "b0")
+    land(e.filter(F.col("kid") % 3 == 0), "b0")
     idx = IncrementalQuantileIndex(spark, root)
     assert run_stream(idx).awaitTermination(120)
 
     # post-restart files include an at-least-once re-delivered slice
     land(
-        e.filter((F.col("event_id") % 3 == 1) | (F.col("event_id") % 9 == 0)),
+        e.filter((F.col("kid") % 3 == 1) | (F.col("kid") % 9 == 0)),
         "b1",
     )
-    land(e.filter(F.col("event_id") % 3 == 2), "b2")
+    land(e.filter(F.col("kid") % 3 == 2), "b2")
     reopened = IncrementalQuantileIndex(spark, root)
     assert run_stream(reopened).awaitTermination(120)
     _estimates_match_batch(reopened, e)

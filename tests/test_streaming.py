@@ -288,13 +288,16 @@ def test_feed_schemas_keep_replay_column_order():
     from worker_spark.streaming.ingest_gate import StreamingIngestGate
     from worker_spark.streaming.minhash_index import IncrementalMinHashIndex
     from worker_spark.streaming.mixture_ledger import IncrementalMixtureLedger
+    from worker_spark.streaming.quantile_index import IncrementalQuantileIndex
     from worker_spark.streaming.reservoir import (
         StreamingReservoir,
         StreamingStratifiedReservoir,
     )
     from worker_spark.streaming.retrieval_index import IncrementalRetrievalIndex
     from worker_spark.streaming.substring_index import IncrementalSubstringIndex
+    from worker_spark.streaming.theta_index import IncrementalThetaIndex
     from worker_spark.streaming.vector_index import IncrementalVectorIndex
+    from worker_spark.streaming.zorder_index import IncrementalZOrderIndex
 
     doc = ["doc_id:bigint", "text:string"]
     expected = {
@@ -319,21 +322,18 @@ def test_feed_schemas_keep_replay_column_order():
         IncrementalRetrievalIndex: doc,
         IncrementalSubstringIndex: doc,
         IncrementalVectorIndex: ["vec_id:bigint", "embedding:array<float>"],
+        # the quantile and theta hashes are md5 of the key / member as
+        # fed, so these types are part of the contract too
+        IncrementalQuantileIndex: ["g:string", "kid:bigint", "v:double"],
+        IncrementalThetaIndex: ["g:string", "v:bigint"],
+        IncrementalZOrderIndex: [
+            "event_id:bigint", "v1:bigint", "v2:bigint",
+            "event_type:string", "value:double",
+        ],
     }
     for cls, cols in expected.items():
         got = [f"{f.name}:{f.dataType.simpleString()}" for f in cls.FEED_SCHEMA]
         assert got == cols, cls.__name__
-
-
-def test_file_feed_stream_needs_a_schema_for_caller_named_columns():
-    """Quantile, theta and z-order read caller-named columns, so they
-    carry no FEED_SCHEMA and the stream refuses to start without one."""
-    from worker_spark.streaming.feed import file_feed_stream
-    from worker_spark.streaming.quantile_index import IncrementalQuantileIndex
-
-    idx = IncrementalQuantileIndex.__new__(IncrementalQuantileIndex)
-    with pytest.raises(ValueError, match="FEED_SCHEMA"):
-        file_feed_stream(None, "feed", idx, "ckpt")
 
 
 def test_drained_drops_sink_and_checkpoint(spark, tmp_path, monkeypatch):

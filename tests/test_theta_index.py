@@ -25,8 +25,9 @@ from worker_spark.streaming.theta_index import (
 
 
 def _events(spark):
+    # the events table in the index's FEED_SCHEMA names
     return load_table(spark, SF_ORACLE, "events").select(
-        "event_type", "user_id"
+        F.col("event_type").alias("g"), F.col("user_id").alias("v")
     )
 
 
@@ -38,7 +39,7 @@ def _overlaps_match_batch(idx, events, k=None):
     kw = {"k": k} if k else {}
     got = _rows(idx.overlaps())
     want = _rows(
-        theta_set_ops(events, "user_id", "event_type", audit=False, **kw)
+        theta_set_ops(events, "v", "g", audit=False, **kw)
     )
     assert got == want
 
@@ -48,19 +49,10 @@ def test_streamed_batches_converge_to_batch_sketch(spark, tmp_path):
     theta_set_ops estimates over the full table, exactly."""
     e = _events(spark).localCheckpoint(eager=True)
     idx = IncrementalThetaIndex(spark, str(tmp_path / "x"))
-    idx.apply_batch(
-        e.filter(F.col("user_id") % 3 == 0),
-        group_col="event_type", value_col="user_id",
-    )
+    idx.apply_batch(e.filter(F.col("v") % 3 == 0))
     # batch 1 re-delivers a slice of batch 0 (user%9==0 ⊂ user%3==0)
-    idx.apply_batch(
-        e.filter((F.col("user_id") % 3 == 1) | (F.col("user_id") % 9 == 0)),
-        group_col="event_type", value_col="user_id",
-    )
-    idx.apply_batch(
-        e.filter(F.col("user_id") % 3 == 2),
-        group_col="event_type", value_col="user_id",
-    )
+    idx.apply_batch(e.filter((F.col("v") % 3 == 1) | (F.col("v") % 9 == 0)))
+    idx.apply_batch(e.filter(F.col("v") % 3 == 2))
     _overlaps_match_batch(idx, e)
     idx.fsck()
 
@@ -87,10 +79,7 @@ def test_bounded_state_survives_heavy_eviction(spark, tmp_path):
     idx = IncrementalThetaIndex(spark, str(tmp_path / "x"), k=k)
     e = _events(spark).limit(4000).localCheckpoint(eager=True)
     for r in range(5):
-        idx.apply_batch(
-            e.filter(F.col("user_id") % 5 == r),
-            group_col="event_type", value_col="user_id",
-        )
+        idx.apply_batch(e.filter(F.col("v") % 5 == r))
         cap = (
             idx.sample().groupBy("g").agg(F.count(F.lit(1)).alias("n"))
             .agg(F.max("n")).collect()[0][0]
@@ -150,8 +139,6 @@ def test_theta_stream_restart_resumes_from_checkpoint(spark, tmp_path):
     import os as _os
     import shutil
 
-    from pyspark.sql import types as T
-
     from worker_spark.streaming.feed import file_feed_stream
 
     e = _events(spark).limit(4000).localCheckpoint(eager=True)
@@ -167,28 +154,18 @@ def test_theta_stream_restart_resumes_from_checkpoint(spark, tmp_path):
 
     root = str(tmp_path / "x")
     ckpt = str(tmp_path / "ckpt")
-    schema = T.StructType(
-        [
-            T.StructField("event_type", T.StringType(), True),
-            T.StructField("user_id", T.LongType(), True),
-        ]
-    )
-
     def run_stream(idx):
-        return file_feed_stream(
-            spark, feed, idx, ckpt, schema,
-            group_col="event_type", value_col="user_id",
-        )
+        return file_feed_stream(spark, feed, idx, ckpt)
 
-    land(e.filter(F.col("user_id") % 3 == 0), "b0")
+    land(e.filter(F.col("v") % 3 == 0), "b0")
     idx = IncrementalThetaIndex(spark, root)
     assert run_stream(idx).awaitTermination(120)
 
     land(
-        e.filter((F.col("user_id") % 3 == 1) | (F.col("user_id") % 9 == 0)),
+        e.filter((F.col("v") % 3 == 1) | (F.col("v") % 9 == 0)),
         "b1",
     )
-    land(e.filter(F.col("user_id") % 3 == 2), "b2")
+    land(e.filter(F.col("v") % 3 == 2), "b2")
     reopened = IncrementalThetaIndex(spark, root)
     assert run_stream(reopened).awaitTermination(120)
     _overlaps_match_batch(reopened, e)

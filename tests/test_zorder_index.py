@@ -179,8 +179,6 @@ def test_zorder_stream_restart_resumes_from_checkpoint(spark, tmp_path):
     import os as _os
     import shutil
 
-    from pyspark.sql import types as T
-
     from worker_spark.streaming.feed import file_feed_stream
 
     e = _events(spark, limit=3000)
@@ -196,21 +194,8 @@ def test_zorder_stream_restart_resumes_from_checkpoint(spark, tmp_path):
 
     root = str(tmp_path / "z")
     ckpt = str(tmp_path / "ckpt")
-    schema = T.StructType(
-        [
-            T.StructField("event_id", T.LongType(), True),
-            T.StructField("v1", T.LongType(), True),
-            T.StructField("v2", T.LongType(), True),
-            T.StructField("event_type", T.StringType(), True),
-            T.StructField("value", T.DoubleType(), True),
-        ]
-    )
-
     def run_stream(idx):
-        return file_feed_stream(
-            spark, feed, idx, ckpt, schema,
-            id_col="event_id", v1_col="v1", v2_col="v2",
-        )
+        return file_feed_stream(spark, feed, idx, ckpt)
 
     land(e.filter(F.col("event_id") % 3 == 0), "b0")
     idx = IncrementalZOrderIndex(spark, root, bounds=_bounds(e))

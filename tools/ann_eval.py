@@ -17,16 +17,9 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    from pyspark.sql import SparkSession
+    from worker_spark.session import get_spark
 
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.driver.memory", "8g")
-        .appName("ann-eval")
-        .getOrCreate()
-    )
+    spark = get_spark("ann-eval", extra_conf={"spark.driver.memory": "8g"})
     spark.sparkContext.setLogLevel("ERROR")
     from worker_spark.operators.ann_eval import evaluate_ann, markdown_table
 

@@ -21,16 +21,9 @@ def main() -> None:
     args = [a for a in sys.argv[1:] if a != "--edit"]
     sf_dir = args[0] if args else "/root/testdata/sf0.1"
     include_edit = "--edit" in sys.argv or "sf0.01" in sf_dir or "sf0.001" in sf_dir
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    from pyspark.sql import SparkSession
+    from worker_spark.session import get_spark
 
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.driver.memory", "8g")
-        .appName("dedup-eval")
-        .getOrCreate()
-    )
+    spark = get_spark("dedup-eval", extra_conf={"spark.driver.memory": "8g"})
     spark.sparkContext.setLogLevel("ERROR")
     from worker_spark.operators.dedup_eval import (
         evaluate_dedup,

@@ -543,7 +543,7 @@ def state_probe() -> None:
                 spark, os.path.join(work, "full"), n_buckets=1
             )
             full.write("postings", idx.postings(), keys=["term", "doc_id"])
-            batch_tf = idx._batch_delta(batch, "doc_id", "text")
+            batch_tf = idx._batch_delta(batch)
             snap = tree_bytes(os.path.join(work, "full"))
             t0 = time.perf_counter()
             full.upsert(

@@ -7,8 +7,7 @@ order; ``collect_bibl_ids`` (:456-462) gathers any ``bibl_id`` integer at
 any depth (set semantics; we emit sorted for determinism);
 ``find_related_article_ids`` (:500-509) gathers ``article_id`` from any
 object whose ``type_`` is ``article_ref``/``sub_article`` (IndexSet —
-insertion order preserved); ``collect_inline_refs_recursive`` (:550-564)
-runs the inline-ref parser over every example quote / explanation content.
+insertion order preserved).
 
 For typed (parquet StructType) data, worker_spark.extraction expresses the
 same scans natively over the enumerated paths — these UDFs are the
@@ -24,8 +23,6 @@ from typing import Any
 import pandas as pd
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-
-from worker_spark.functions.inline_refs import extract_refs_from_quote
 
 
 def _walk_objects(value: Any, f) -> None:
@@ -64,28 +61,6 @@ def find_related_article_ids(doc: Any) -> list[int]:
 
     _walk_objects(doc, visit)
     return list(ids)
-
-
-def collect_quote_refs(doc: Any) -> list[tuple[int, int, str, str | None, str]]:
-    """All inline refs from example quotes / explanation contents anywhere
-    in the tree, with the source content string attached."""
-    out: list[tuple[int, int, str, str | None, str]] = []
-
-    def visit(obj: dict) -> None:
-        t = obj.get("type_")
-        content = None
-        if t == "example":
-            q = obj.get("quote")
-            if isinstance(q, dict):
-                content = q.get("content")
-        elif t == "explanation":
-            content = obj.get("content")
-        if isinstance(content, str):
-            for s, e, code, spec in extract_refs_from_quote(content):
-                out.append((s, e, code, spec, content))
-
-    _walk_objects(doc, visit)
-    return out
 
 
 def definition_depth(doc: Any) -> int:
@@ -138,32 +113,3 @@ def walk_bibl_ids_udf(doc_json: pd.Series) -> pd.Series:
 @F.pandas_udf(T.ArrayType(T.LongType()))
 def walk_related_ids_udf(doc_json: pd.Series) -> pd.Series:
     return doc_json.map(lambda s: find_related_article_ids(_loads(s)))
-
-
-QUOTE_REF_STRUCT = T.ArrayType(
-    T.StructType(
-        [
-            T.StructField("offset_start", T.IntegerType()),
-            T.StructField("offset_end", T.IntegerType()),
-            T.StructField("code", T.StringType()),
-            T.StructField("spec", T.StringType()),
-            T.StructField("quote_content", T.StringType()),
-        ]
-    )
-)
-
-
-@F.pandas_udf(QUOTE_REF_STRUCT)
-def walk_quote_refs_udf(doc_json: pd.Series) -> pd.Series:
-    return doc_json.map(
-        lambda s: [
-            {
-                "offset_start": a,
-                "offset_end": b,
-                "code": c,
-                "spec": d,
-                "quote_content": q,
-            }
-            for (a, b, c, d, q) in collect_quote_refs(_loads(s))
-        ]
-    )

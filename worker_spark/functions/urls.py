@@ -44,13 +44,6 @@ def article_url_col(dictionary: Column, article_id: Column) -> Column:
     )
 
 
-def article_list_url_col(dictionary: Column) -> Column:
-    """Article-list fetch URL (src/uib_client.rs:190)."""
-    return F.concat_ws(
-        "", F.lit("https://ord.uib.no/"), dictionary, F.lit("/fil/article.json")
-    )
-
-
 def bibl_by_code_url_col(code: Column) -> Column:
     """Bibliography-by-code lookup URL with the code percent-encoded
     (src/uib_client.rs:249-250)."""

@@ -5,7 +5,7 @@ drain_batch_index_function.sql:19-44, invoked from src/outbox.rs:128-133):
 take unprocessed ``batch_index`` rows in ``id`` order until the cumulative
 number of article keys exceeds the target (default 5,000), always taking at
 least one row; the drained keys are deduplicated into one coalesced job
-(src/outbox.rs:135-144).
+(src/outbox.rs:135-144 — ``plans/outbox.coalesced_batch_keys``).
 
 Spark formulation: a running sum over ``Window.orderBy("id")``. A global
 ordered window is single-partition by nature — that is *correct* here and
@@ -43,9 +43,3 @@ def drain_with_cap(
         | (F.col("drain_rank") == 1)
     )
 
-
-def coalesce_keys(drained: DataFrame, keys_col: str = "article_keys") -> DataFrame:
-    """T3: dedup the union of per-row key arrays into one batch job payload
-    (src/outbox.rs:135-144 collects into an IndexSet; order is not part of
-    the observable contract — the consumer treats it as a set)."""
-    return drained.select(F.explode(keys_col).alias("article_key")).distinct()

@@ -43,10 +43,6 @@ def bpe_ish_piece_count(text: Column) -> Column:
     return F.regexp_count(text, F.lit(r"[A-Za-z]+|[0-9]|[^A-Za-z0-9\s]")).cast("long")
 
 
-def stopword_count(text: Column, stopwords: tuple[str, ...]) -> Column:
-    return F.size(F.filter(tokens(text), lambda t: t.isin(*stopwords))).cast("long")
-
-
 def punct_count(text: Column) -> Column:
     return F.regexp_count(text, F.lit(PUNCT_CLASS)).cast("long")
 

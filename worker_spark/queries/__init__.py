@@ -56,8 +56,10 @@ _DRIVER_WINDOW = [
     # empty-table read (plans/bucketed_state.local_frame), again by
     # its one manifest write (BucketedParquetStateStore.reindex) and
     # one-collect delete_then_insert, and again when _merge_latest
-    # moved into bucketed_state (one state store): exactly these 23
-    # streaming rows each time, verified by tools/query_hashes.py.
+    # moved into bucketed_state (one state store), and again when each
+    # structure's FEED_SCHEMA became its one column contract: exactly
+    # these 23 streaming rows each time, verified by
+    # tools/query_hashes.py.
     # They keep their round-14 relative order.
     "streaming_quantile_index",
     "streaming_theta_overlap",

@@ -635,11 +635,11 @@ def _stage_feed(batches, feed_dir: str) -> None:
 
 
 @contextmanager
-def _maintained(spark, row: str, feed: str, build, **stream_kwargs):
+def _maintained(spark, row: str, feed: str, build):
     """The one drive path of the maintained-structure rows: make the
-    structure with ``build(state_root)``, drain ``feed`` into it through
-    feed.file_feed_stream (``stream_kwargs``: schema and apply_batch
-    column names), and hand the drained structure to the block.
+    structure with ``build(state_root)``, drain ``feed`` (staged in the
+    structure's FEED_SCHEMA column names) into it through
+    feed.file_feed_stream, and hand the drained structure to the block.
     Checkpoint and state share one scratch dir, removed on exit, so the
     block must ``localCheckpoint(eager=True)`` what it serves. A row
     whose lifecycle needs a second root (recluster, retrain) puts it
@@ -653,9 +653,7 @@ def _maintained(spark, row: str, feed: str, build, **stream_kwargs):
         state = os.path.join(scratch, "state")
         os.mkdir(state)
         structure = build(state)
-        q = file_feed_stream(
-            spark, feed, structure, os.path.join(scratch, "ckpt"), **stream_kwargs
-        )
+        q = file_feed_stream(spark, feed, structure, os.path.join(scratch, "ckpt"))
         if not q.awaitTermination(300):
             q.stop()
             raise TimeoutError(f"{row}: availableNow drain exceeded 300s")
@@ -2006,40 +2004,27 @@ def _streaming_quantile_oracle() -> str:
     "streamed sample equal the batch sample exactly.",
 )
 def q_streaming_quantile_index(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import types as T
-
     from worker_spark.streaming.quantile_index import IncrementalQuantileIndex
 
     e = load_table(spark, sf_dir, "events").select(
-        "event_type", "event_id", "value"
+        F.col("event_type").alias("g"),
+        F.col("event_id").alias("kid"),
+        F.col("value").alias("v"),
     )
     # Two-file feed: batch 0 the even event_ids, batch 1 the odd ones
     # PLUS a re-delivered slice of batch 0 (id%10==0 — at-least-once
     # delivery, the append-only feed's realistic failure mode; the
     # maintained sample must not double-count it).
-    b0 = e.filter(F.col("event_id") % 2 == 0)
-    b1 = e.filter(
-        (F.col("event_id") % 2 == 1) | (F.col("event_id") % 10 == 0)
-    )
+    b0 = e.filter(F.col("kid") % 2 == 0)
+    b1 = e.filter((F.col("kid") % 2 == 1) | (F.col("kid") % 10 == 0))
     feed = staged_dir(
         sf_dir, "events_quant", lambda d: _stage_feed((b0, b1), d)
-    )
-    schema = T.StructType(
-        [
-            T.StructField("event_type", T.StringType(), True),
-            T.StructField("event_id", T.LongType(), True),
-            T.StructField("value", T.DoubleType(), True),
-        ]
     )
     with _maintained(
         spark,
         "streaming_quantile_index",
         feed,
         lambda state: IncrementalQuantileIndex(spark, state),
-        schema=schema,
-        group_col="event_type",
-        key_col="event_id",
-        value_col="value",
     ) as idx:
         return (
             idx.estimates()
@@ -2325,35 +2310,24 @@ def _streaming_theta_oracle() -> str:
     "oracle's estimate block verbatim.",
 )
 def q_streaming_theta_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import types as T
-
     from worker_spark.streaming.theta_index import IncrementalThetaIndex
 
-    e = load_table(spark, sf_dir, "events").select("event_type", "user_id")
+    e = load_table(spark, sf_dir, "events").select(
+        F.col("event_type").alias("g"), F.col("user_id").alias("v")
+    )
     # Two-file feed: batch 0 the even event rows (by user), batch 1 the
     # odd ones PLUS a re-delivered slice of batch 0 (user%10==0 —
     # at-least-once delivery; the sketch must not double-count).
-    b0 = e.filter(F.col("user_id") % 2 == 0)
-    b1 = e.filter(
-        (F.col("user_id") % 2 == 1) | (F.col("user_id") % 10 == 0)
-    )
+    b0 = e.filter(F.col("v") % 2 == 0)
+    b1 = e.filter((F.col("v") % 2 == 1) | (F.col("v") % 10 == 0))
     feed = staged_dir(
         sf_dir, "events_theta", lambda d: _stage_feed((b0, b1), d)
-    )
-    schema = T.StructType(
-        [
-            T.StructField("event_type", T.StringType(), True),
-            T.StructField("user_id", T.LongType(), True),
-        ]
     )
     with _maintained(
         spark,
         "streaming_theta_overlap",
         feed,
         lambda state: IncrementalThetaIndex(spark, state),
-        schema=schema,
-        group_col="event_type",
-        value_col="user_id",
     ) as idx:
         return idx.overlaps().localCheckpoint(eager=True)
 
@@ -2476,8 +2450,6 @@ def _streaming_zorder_oracle() -> str:
     "back.",
 )
 def q_streaming_zorder_index(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import types as T
-
     from worker_spark.streaming.zorder_index import IncrementalZOrderIndex
 
     e = load_table(spark, sf_dir, "events").select(
@@ -2499,15 +2471,6 @@ def q_streaming_zorder_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     feed = staged_dir(
         sf_dir, "events_zorder", lambda d: _stage_feed((b0, b1), d)
     )
-    schema = T.StructType(
-        [
-            T.StructField("event_id", T.LongType(), True),
-            T.StructField("v1", T.LongType(), True),
-            T.StructField("v2", T.LongType(), True),
-            T.StructField("event_type", T.StringType(), True),
-            T.StructField("value", T.DoubleType(), True),
-        ]
-    )
     with _maintained(
         spark,
         "streaming_zorder_index",
@@ -2515,10 +2478,6 @@ def q_streaming_zorder_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         lambda state: IncrementalZOrderIndex(
             spark, state, bounds=bounds, n_buckets=64
         ),
-        schema=schema,
-        id_col="event_id",
-        v1_col="v1",
-        v2_col="v2",
     ) as idx:
         return (
             idx.box_query(*_ZBOX)

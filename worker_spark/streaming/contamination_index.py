@@ -92,7 +92,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from worker_spark.plans.bucketed_state import BucketedParquetStateStore, local_frame
-from worker_spark.streaming.feed import DOC_FEED_SCHEMA
+from worker_spark.streaming.feed import DOC_FEED_SCHEMA, has_text
 
 EVG_SCHEMA = T.StructType(
     [
@@ -152,17 +152,15 @@ JOURNAL_SCHEMA = T.StructType(
 )
 
 
-def _grams(
-    docs: DataFrame, n: int, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def _grams(docs: DataFrame, n: int) -> DataFrame:
     """Distinct word n-grams of the LIVE documents (empty/whitespace
     text is the delete marker) — the batch operator's shingle pass,
     applied to a batch only."""
     from worker_spark.operators.dedup import word_shingles
 
     live = docs.select(
-        F.col(id_col).cast("long").alias("doc_id"), F.col(text_col).alias("text")
-    ).filter(F.length(F.trim(F.col("text"))) > 0)
+        F.col("doc_id").cast("long").alias("doc_id"), "text"
+    ).filter(has_text())
     return word_shingles(live, n=n).select(
         F.col("id").alias("doc_id"), "shingle"
     )
@@ -293,8 +291,6 @@ class IncrementalContaminationScreen:
         self,
         docs: DataFrame,
         batch_id: int | None = None,
-        id_col: str = "doc_id",
-        text_col: str = "text",
     ) -> None:
         """The foreachBatch body: shingle ONLY the batch documents,
         replace their posting/manifest rows, recompute df for the
@@ -311,9 +307,8 @@ class IncrementalContaminationScreen:
         # lazy checkpoints (r15 job-count discipline): batch and
         # batch_ids are materialized by the doc_buckets collect, before
         # any swap
-        batch = last_wins(docs, [id_col]).select(
-            F.col(id_col).cast("long").alias("doc_id"),
-            F.col(text_col).alias("text"),
+        batch = last_wins(docs, ["doc_id"]).select(
+            F.col("doc_id").cast("long").alias("doc_id"), "text"
         ).localCheckpoint(eager=False)
         batch_ids = batch.select("doc_id").distinct().localCheckpoint(
             eager=False
@@ -566,14 +561,12 @@ class IncrementalContaminationScreen:
             )
         )
 
-    def screen_batch(
-        self, docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-    ) -> DataFrame:
+    def screen_batch(self, docs: DataFrame) -> DataFrame:
         """Pre-ingest screen: shingle the batch only, probe ONLY the
         batch shingles' evg bucket files. (eval_id, corpus_id,
         n_shared) over currently-live shingles — the gate a pipeline
         consults BEFORE admitting a document to training data."""
-        g = _grams(docs, self.n, id_col=id_col, text_col=text_col).select(
+        g = _grams(docs, self.n).select(
             F.col("doc_id").alias("corpus_id"), "shingle"
         ).localCheckpoint(eager=True)
         live = g.join(self.hot(), "shingle", "left_anti")

@@ -290,8 +290,6 @@ class IncrementalCurationIndex:
         self,
         docs: DataFrame,
         batch_id: int | None = None,
-        id_col: str = "doc_id",
-        text_col: str = "text",
     ) -> None:
         """The foreachBatch body: re-decide the batch documents and
         delete-then-insert their decision rows (an updated document's
@@ -302,13 +300,16 @@ class IncrementalCurationIndex:
         A batch carrying several versions of one doc_id is reduced to
         one row per key FIRST (feed.last_wins); an empty-text row is a
         delete."""
-        from worker_spark.streaming.feed import batch_doc_ids, last_wins
+        from worker_spark.streaming.feed import (
+            batch_doc_ids,
+            has_text,
+            last_wins,
+        )
 
         store = self.store
         batch = last_wins(
             docs.select(
-                F.col(id_col).cast("long").alias("doc_id"),
-                F.col(text_col).alias("text"),
+                F.col("doc_id").cast("long").alias("doc_id"), "text"
             ),
             ["doc_id"],
         )
@@ -321,11 +322,11 @@ class IncrementalCurationIndex:
         # the pinned LM tables, neither swapped here), and batch_ids by
         # the one doc_buckets collect below.
         live = (
-            batch.filter(F.length(F.trim(F.col("text"))) > 0)
+            batch.filter(has_text())
             .localCheckpoint(eager=False)
         )
         rows = self.decide(live).localCheckpoint(eager=False)
-        batch_ids = batch_doc_ids(docs, id_col)
+        batch_ids = batch_doc_ids(docs)
         # ONE touched-bucket collect serves both MERGEs (r15): both
         # tables bucket on doc_id and both delete exactly the batch ids,
         # so the touched set is the batch ids' buckets for each (insert

@@ -74,7 +74,7 @@ FPS_SCHEMA = T.StructType(
 )
 
 
-def _band_rows(fps: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def _band_rows(fps: DataFrame) -> DataFrame:
     """(bk, band, byte, doc_id, simhash) — the banded expansion of a
     fingerprint table; ONE definition shared by maintenance, screening
     and the convergence tests (band arithmetic identical to
@@ -92,7 +92,7 @@ def _band_rows(fps: DataFrame, id_col: str = "doc_id") -> DataFrame:
         ]
     )
     return fps.select(
-        F.col(id_col).alias("doc_id"), "simhash", F.explode(entries).alias("e")
+        "doc_id", "simhash", F.explode(entries).alias("e")
     ).select(
         (
             F.shiftleft(F.col("e.band").cast("long"), SIMHASH_BAND_BITS)
@@ -124,8 +124,6 @@ class IncrementalDedupIndex:
         self,
         docs: DataFrame,
         batch_id: int | None = None,
-        id_col: str = "doc_id",
-        text_col: str = "text",
     ) -> None:
         """The foreachBatch body: delete-then-insert the batch documents'
         band rows (an updated document's fingerprint changes, so its
@@ -145,12 +143,12 @@ class IncrementalDedupIndex:
         # lazy (r15 job-count discipline): reindex's bucket collect
         # materializes it before either table's swap
         new_fps = (
-            simhash(last_wins(docs, [id_col]), id_col=id_col, text_col=text_col)
+            simhash(last_wins(docs, ["doc_id"]))
             .select(F.col("id").cast("long").alias("doc_id"), "simhash")
             .localCheckpoint(eager=False)
         )
         store.reindex(
-            batch_doc_ids(docs, id_col),
+            batch_doc_ids(docs),
             self.FPS,
             FPS_SCHEMA,
             new_fps,
@@ -205,8 +203,6 @@ class IncrementalDedupIndex:
         self,
         docs: DataFrame,
         max_hamming: int = 3,
-        id_col: str = "doc_id",
-        text_col: str = "text",
     ) -> DataFrame:
         """Screen an ingest batch against the MAINTAINED index: map-only
         batch fingerprints, band equi-join reading ONLY the batch's band
@@ -215,7 +211,7 @@ class IncrementalDedupIndex:
         never recomputed. Output (new_id, corpus_id, hamming), identical
         to the batch operator over the union corpus."""
         store = self.store
-        qfps = simhash(docs, id_col=id_col, text_col=text_col).select(
+        qfps = simhash(docs).select(
             F.col("id").cast("long").alias("doc_id"), "simhash"
         )
         # lazy: materialized by the probe collect just below

@@ -87,8 +87,6 @@ class StreamingDedupPipeline:
         self,
         docs: DataFrame,
         batch_id: int | None = None,
-        id_col: str = "doc_id",
-        text_col: str = "text",
     ) -> None:
         from worker_spark.streaming.feed import batch_doc_ids, last_wins
 
@@ -100,22 +98,17 @@ class StreamingDedupPipeline:
         # index reuses the same bucket set — all stores share one
         # modulus, checked below). Checkpoints are lazy; the one
         # doc_buckets collect materializes both.
-        batch = last_wins(docs, [id_col]).localCheckpoint(eager=False)
-        batch_ids = batch_doc_ids(batch, id_col)
+        batch = last_wins(docs, ["doc_id"]).localCheckpoint(eager=False)
+        batch_ids = batch_doc_ids(batch)
         _require_one_modulus(self.exact.store, self.components.store)
         doc_buckets = self.exact.store.touched_buckets(batch_ids, "doc_id")
         self.exact.apply_batch(
             batch,
             batch_id=batch_id,
-            id_col=id_col,
-            text_col=text_col,
-            pre_reduced=True,
             batch_ids=batch_ids,
             doc_buckets=doc_buckets,
         )
-        hits = self.exact.screen_batch(
-            batch, id_col=id_col, text_col=text_col
-        )
+        hits = self.exact.screen_batch(batch)
         announcements = batch_ids.select(
             "doc_id", F.lit(None).cast("long").alias("nbr")
         )
@@ -251,20 +244,17 @@ class StreamingNearDupPipeline:
         self,
         docs: DataFrame,
         batch_id: int | None = None,
-        id_col: str = "doc_id",
-        text_col: str = "text",
     ) -> None:
         from worker_spark.operators.dedup import word_shingles
-        from worker_spark.streaming.feed import last_wins
+        from worker_spark.streaming.feed import has_text, last_wins
 
         self._ensure_threshold_pinned()
         # the batch, its id frame and their bucket ids are derived ONCE
         # and handed to every sub-structure (r15 job-count discipline);
         # checkpoints are lazy, materialized by the one doc_buckets
         # collect below — before any swap
-        batch = last_wins(docs, [id_col]).select(
-            F.col(id_col).cast("long").alias("doc_id"),
-            F.col(text_col).alias("text"),
+        batch = last_wins(docs, ["doc_id"]).select(
+            F.col("doc_id").cast("long").alias("doc_id"), "text"
         ).localCheckpoint(eager=False)
         batch_ids = batch.select("doc_id").distinct().localCheckpoint(
             eager=False
@@ -273,7 +263,7 @@ class StreamingNearDupPipeline:
             self.docstore, self.minhash.store, self.components.store
         )
         doc_buckets = self.docstore.touched_buckets(batch_ids, "doc_id")
-        live = batch.filter(F.length(F.trim(F.col("text"))) > 0)
+        live = batch.filter(has_text())
         # one transaction over both roots, declared docs → bands → sigs:
         # a torn batch never leaves a signature whose text is missing
         # for a doc the batch adds or updates, and the replay re-applies
@@ -290,7 +280,6 @@ class StreamingNearDupPipeline:
             self.minhash.add_batch(
                 tx,
                 batch,
-                pre_reduced=True,
                 batch_ids=batch_ids,
                 doc_buckets=doc_buckets,
             )
@@ -417,8 +406,6 @@ class StreamingSubstringPipeline:
         self,
         docs: DataFrame,
         batch_id: int | None = None,
-        id_col: str = "doc_id",
-        text_col: str = "text",
     ) -> None:
         from worker_spark.streaming.feed import last_wins
         from worker_spark.streaming.substring_index import FPS_SCHEMA
@@ -428,9 +415,8 @@ class StreamingSubstringPipeline:
         # batch_ids, and its bucket set serves the substring apply, the
         # manifest read-back AND the components relabel (one modulus
         # across the pipeline's stores, checked below)
-        batch = last_wins(docs, [id_col]).select(
-            F.col(id_col).cast("long").alias("doc_id"),
-            F.col(text_col).alias("text"),
+        batch = last_wins(docs, ["doc_id"]).select(
+            F.col("doc_id").cast("long").alias("doc_id"), "text"
         ).localCheckpoint(eager=False)
         batch_ids = batch.select("doc_id").distinct().localCheckpoint(
             eager=False
@@ -441,7 +427,6 @@ class StreamingSubstringPipeline:
         self.substring.apply_batch(
             batch,
             batch_id=batch_id,
-            pre_reduced=True,
             batch_ids=batch_ids,
             doc_buckets=fbuckets,
         )

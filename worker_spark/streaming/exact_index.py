@@ -41,7 +41,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from worker_spark.plans.bucketed_state import BucketedParquetStateStore
-from worker_spark.streaming.feed import DOC_FEED_SCHEMA
+from worker_spark.streaming.feed import DOC_FEED_SCHEMA, has_text
 
 HASHES_SCHEMA = T.StructType(
     [
@@ -57,17 +57,13 @@ FPS_SCHEMA = T.StructType(
 )
 
 
-def _content_hashes(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def _content_hashes(docs: DataFrame) -> DataFrame:
     """(doc_id, content_hash) with NULL hash for contentless docs —
     ONE definition shared by maintenance, screening and the tests
     (hash identical to operators/dedup.exact_dedup's md5(text))."""
     return docs.select(
-        F.col(id_col).cast("long").alias("doc_id"),
-        F.when(
-            F.length(F.trim(F.col(text_col))) > 0, F.md5(F.col(text_col))
-        ).alias("content_hash"),
+        F.col("doc_id").cast("long").alias("doc_id"),
+        F.when(has_text(), F.md5(F.col("text"))).alias("content_hash"),
     )
 
 
@@ -90,9 +86,6 @@ class IncrementalExactIndex:
         self,
         docs: DataFrame,
         batch_id: int | None = None,
-        id_col: str = "doc_id",
-        text_col: str = "text",
-        pre_reduced: bool = False,
         batch_ids: DataFrame | None = None,
         doc_buckets: list[int] | None = None,
     ) -> None:
@@ -108,23 +101,21 @@ class IncrementalExactIndex:
         a document would keep BOTH versions' hash rows and serve as its
         own duplicate cluster.
 
-        ``pre_reduced`` declares the caller already ran last_wins on
-        ``docs`` (the composed dedup pipeline does) — the reduction is
-        idempotent, so skipping the second pass changes nothing but the
-        job count. ``batch_ids`` / ``doc_buckets`` likewise hand over
-        the id frame / its bucket ids (same-modulus stores only) a
-        composed caller already derived. Checkpoints are LAZY (r15
+        A handed-over ``batch_ids`` says the caller already ran
+        last_wins on ``docs`` and derived their id frame (the composed
+        dedup pipeline does) — the reduction is idempotent, so skipping
+        the second pass changes nothing but the job count.
+        ``doc_buckets`` likewise hands over the ids' bucket ids
+        (same-modulus stores only). Checkpoints are LAZY (r15
         job-count discipline): each is materialized by reindex's
         bucket collects, which run before either table's swap."""
         from worker_spark.streaming.feed import batch_doc_ids, last_wins
 
         store = self.store
-        reduced = docs if pre_reduced else last_wins(docs, [id_col])
-        new_fps = _content_hashes(
-            reduced, id_col=id_col, text_col=text_col
-        ).localCheckpoint(eager=False)
         if batch_ids is None:
-            batch_ids = batch_doc_ids(docs, id_col)
+            batch_ids = batch_doc_ids(docs)
+            docs = last_wins(docs, ["doc_id"])
+        new_fps = _content_hashes(docs).localCheckpoint(eager=False)
         inserts = new_fps.filter(F.col("content_hash").isNotNull())
         store.reindex(
             batch_ids,
@@ -188,19 +179,14 @@ class IncrementalExactIndex:
             F.count(F.lit(1)).alias("n_dupes"),
         )
 
-    def screen_batch(
-        self,
-        docs: DataFrame,
-        id_col: str = "doc_id",
-        text_col: str = "text",
-    ) -> DataFrame:
+    def screen_batch(self, docs: DataFrame) -> DataFrame:
         """Screen an ingest batch against the MAINTAINED index: map-only
         batch hashes, one equi-join reading ONLY the batch hashes'
         bucket files. Output (new_id, corpus_id, content_hash) — every
         stored document whose content equals a batch document's."""
         store = self.store
         qfps = (
-            _content_hashes(docs, id_col=id_col, text_col=text_col)
+            _content_hashes(docs)
             .filter(F.col("content_hash").isNotNull())
             # lazy: materialized by the probe collect just below
             .localCheckpoint(eager=False)

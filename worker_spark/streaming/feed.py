@@ -1,14 +1,20 @@
 """The one drive path of every maintained structure: a parquet file
 directory as the change feed, the structure's ``apply_batch`` as the
-foreachBatch consumer. ``file_feed_stream`` wires any structure that
-has ``apply_batch(df, batch_id=None, ...)``, reading the feed with the
-structure's ``FEED_SCHEMA`` class attribute unless the caller passes a
-schema. ``last_wins`` is the within-batch version rule the structures
-apply to what the stream hands them."""
+foreachBatch consumer.
+
+The feed contract: each maintained structure declares a ``FEED_SCHEMA``
+class attribute in its own column names, and that schema is the one
+place its input columns are named. ``file_feed_stream`` reads the feed
+with it, and ``apply_batch`` reads those columns by name; a caller whose
+data uses other names aliases them when it stages the feed, never per
+call. The document structures share ``DOC_FEED_SCHEMA`` ``(doc_id,
+text)``, where an empty or whitespace-only ``text`` is a delete
+(``has_text``). ``last_wins`` is the within-batch version rule the
+structures apply to what the stream hands them."""
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
@@ -20,6 +26,13 @@ DOC_FEED_SCHEMA = T.StructType(
         T.StructField("text", T.StringType(), True),
     ]
 )
+
+
+def has_text(field: str = "text") -> Column:
+    """The live-document predicate: false for an empty or
+    whitespace-only ``field``, the delete marker of the document
+    feeds."""
+    return F.length(F.trim(F.col(field))) > 0
 
 
 def _refuse_map_columns(schema: T.DataType, path: str = "") -> None:
@@ -93,7 +106,7 @@ def last_wins(df: DataFrame, key_cols: list[str]) -> DataFrame:
     )
 
 
-def batch_doc_ids(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def batch_doc_ids(docs: DataFrame) -> DataFrame:
     """The batch's distinct ids as one long ``doc_id`` column, lazily
     checkpointed (r15 job-count discipline: the caller's first bucket
     collect materializes it, before any swap). Pass the raw batch or an
@@ -101,7 +114,7 @@ def batch_doc_ids(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
     after ``last_wins``, and deriving it from an unmaterialized reduced
     frame would run the reduction twice."""
     return (
-        docs.select(F.col(id_col).cast("long").alias("doc_id"))
+        docs.select(F.col("doc_id").cast("long").alias("doc_id"))
         .distinct()
         .localCheckpoint(eager=False)
     )
@@ -112,29 +125,17 @@ def file_feed_stream(
     feed_dir: str,
     structure,
     checkpoint_dir: str,
-    schema: T.StructType | None = None,
     max_files_per_trigger: int | None = 1,
-    **apply_kwargs,
 ) -> StreamingQuery:
     """ONE definition of the feed topology, for every maintained
     structure: each new parquet file under ``feed_dir`` is a
-    micro-batch, drained with an availableNow trigger into
-    ``structure.apply_batch(batch, batch_id=..., **apply_kwargs)``, with
-    the source offsets checkpointed in ``checkpoint_dir`` so a restart
-    resumes instead of reprocessing.
-
-    ``schema`` defaults to the structure's ``FEED_SCHEMA``. Its column
-    order is part of the replay contract (last_wins fingerprints
-    ``to_json(struct(*cols))``). Structures whose feed columns are
-    caller-named (quantile, theta, z-order) define none and need
-    ``schema`` plus the column-name ``apply_kwargs``."""
-    if schema is None:
-        schema = getattr(structure, "FEED_SCHEMA", None)
-        if schema is None:
-            raise ValueError(
-                f"{type(structure).__name__} has no FEED_SCHEMA: pass schema="
-            )
-    reader = spark.readStream.schema(schema)
+    micro-batch, read with the structure's ``FEED_SCHEMA`` and drained
+    with an availableNow trigger into ``structure.apply_batch(batch,
+    batch_id=...)``, with the source offsets checkpointed in
+    ``checkpoint_dir`` so a restart resumes instead of reprocessing.
+    The schema's column order is part of the replay contract
+    (last_wins fingerprints ``to_json(struct(*cols))``)."""
+    reader = spark.readStream.schema(structure.FEED_SCHEMA)
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     return (
@@ -142,9 +143,7 @@ def file_feed_stream(
         .writeStream.outputMode("update")
         .option("checkpointLocation", checkpoint_dir)
         .foreachBatch(
-            lambda batch, bid: structure.apply_batch(
-                batch, batch_id=bid, **apply_kwargs
-            )
+            lambda batch, bid: structure.apply_batch(batch, batch_id=bid)
         )
         .trigger(availableNow=True)
         .start()

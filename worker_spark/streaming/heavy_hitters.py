@@ -85,7 +85,7 @@ _SENTINEL = ""  # impossible token: batch_token_counts filters length > 0
 MG_K = 32
 
 
-def batch_token_counts(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def batch_token_counts(docs: DataFrame) -> DataFrame:
     """(token, cnt): exact lowercased whitespace-token counts of one
     batch — the same tokenization as the CMS heavy-hitter row so the
     two summaries are comparable over one corpus."""
@@ -93,7 +93,7 @@ def batch_token_counts(docs: DataFrame, text_col: str = "text") -> DataFrame:
 
     return (
         docs.select(
-            F.explode(tokens(F.lower(F.col(text_col)))).alias("token")
+            F.explode(tokens(F.lower(F.col("text")))).alias("token")
         )
         .filter(F.length("token") > 0)
         .groupBy("token")
@@ -125,7 +125,6 @@ class StreamingHeavyHitters:
         self,
         docs: DataFrame,
         batch_id: int | None = None,
-        text_col: str = "text",
     ) -> None:
         """The foreachBatch body: exact batch counts (a batch is itself
         an error-free summary), merge with the stored counters by
@@ -159,7 +158,7 @@ class StreamingHeavyHitters:
         counters = summary.filter(F.col("token") != _SENTINEL).select(
             "token", "est_cnt"
         )
-        counts = batch_token_counts(docs, text_col=text_col)
+        counts = batch_token_counts(docs)
         merged = (
             counters.unionByName(counts)
             .groupBy("token")

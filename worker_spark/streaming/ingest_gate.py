@@ -113,8 +113,6 @@ class StreamingIngestGate:
         self,
         docs: DataFrame,
         batch_id: int | None = None,
-        id_col: str = "doc_id",
-        text_col: str = "text",
     ) -> None:
         from worker_spark.streaming.feed import last_wins
 
@@ -123,8 +121,7 @@ class StreamingIngestGate:
         # the feed scan twice for the dedup)
         batch = last_wins(
             docs.select(
-                F.col(id_col).cast("long").alias("doc_id"),
-                F.col(text_col).alias("text"),
+                F.col("doc_id").cast("long").alias("doc_id"), "text"
             ),
             ["doc_id"],
         ).localCheckpoint(eager=True)

@@ -131,30 +131,25 @@ class IncrementalMinHashIndex:
 
     # --- maintenance ----------------------------------------------------
 
-    def _signatures(
-        self, docs: DataFrame, id_col: str, text_col: str
-    ) -> DataFrame:
+    def _signatures(self, docs: DataFrame) -> DataFrame:
         """(doc_id, sig): the batch's MinHash signatures as one array
         column — exactly operators/dedup.minhash_signatures' values,
         packed for storage (documents without shingles are absent)."""
-        sigs = minhash_signatures(docs, id_col=id_col, text_col=text_col)
+        sigs = minhash_signatures(docs)
         return sigs.select(
             F.col("id").cast("long").alias("doc_id"),
             F.array(*[F.col(f"mh_{i}") for i in range(N_PERM)]).alias("sig"),
         )
 
-    def apply_batch(self, docs: DataFrame, batch_id: int | None = None, **kwargs) -> None:
+    def apply_batch(self, docs: DataFrame, batch_id: int | None = None) -> None:
         """The foreachBatch body: ``add_batch`` in a transaction of its own."""
         with self.store.transaction() as tx:
-            self.add_batch(tx, docs, **kwargs)
+            self.add_batch(tx, docs)
 
     def add_batch(
         self,
         tx,
         docs: DataFrame,
-        id_col: str = "doc_id",
-        text_col: str = "text",
-        pre_reduced: bool = False,
         batch_ids: DataFrame | None = None,
         doc_buckets: list[int] | None = None,
     ) -> None:
@@ -169,23 +164,21 @@ class IncrementalMinHashIndex:
         versions of one doc_id is reduced to one row per key first —
         last-wins (feed.last_wins).
 
-        ``pre_reduced`` declares the caller already ran last_wins on
-        ``docs`` (the composed pipelines do, before screening) — the
-        reduction is idempotent, so skipping the second pass changes
-        nothing but the job count. ``batch_ids`` / ``doc_buckets``
-        likewise hand over the id frame / its bucket ids (same-modulus
-        stores only) a composed caller already derived."""
+        A handed-over ``batch_ids`` says the caller already ran
+        last_wins on ``docs`` and derived their id frame (the composed
+        pipelines do, before screening) — the reduction is idempotent,
+        so skipping the second pass changes nothing but the job count.
+        ``doc_buckets`` likewise hands over the ids' bucket ids
+        (same-modulus stores only)."""
         from worker_spark.streaming.feed import batch_doc_ids, last_wins
 
         store = self.store
-        reduced = docs if pre_reduced else last_wins(docs, [id_col])
+        if batch_ids is None:
+            batch_ids = batch_doc_ids(docs)
+            docs = last_wins(docs, ["doc_id"])
         # lazy: materialized by the transaction's bucket collect, which
         # runs before any swap
-        new_sigs = self._signatures(reduced, id_col, text_col).localCheckpoint(
-            eager=False
-        )
-        if batch_ids is None:
-            batch_ids = batch_doc_ids(docs, id_col)
+        new_sigs = self._signatures(docs).localCheckpoint(eager=False)
         tx.on(store).reindex(
             batch_ids,
             self.SIGS,
@@ -267,8 +260,6 @@ class IncrementalMinHashIndex:
         self,
         docs: DataFrame,
         threshold: float = 0.5,
-        id_col: str = "doc_id",
-        text_col: str = "text",
     ) -> DataFrame:
         """All verified near-dup pairs from the MAINTAINED band state:
         candidates via one equi-self-join of stored band rows (the
@@ -300,30 +291,21 @@ class IncrementalMinHashIndex:
             .localCheckpoint(eager=False)
         )
         cand_ids = (
-            cands.select(F.col("id_a").alias(id_col))
-            .unionByName(cands.select(F.col("id_b").alias(id_col)))
+            cands.select(F.col("id_a").alias("doc_id"))
+            .unionByName(cands.select(F.col("id_b").alias("doc_id")))
             .distinct()
         )
-        sh = word_shingles(
-            docs.join(cand_ids, id_col, "left_semi"),
-            id_col=id_col,
-            text_col=text_col,
-        )
+        sh = word_shingles(docs.join(cand_ids, "doc_id", "left_semi"))
         return self._verify(cands, sh, threshold)
 
-    def screen_candidates(
-        self,
-        new_docs: DataFrame,
-        id_col: str = "doc_id",
-        text_col: str = "text",
-    ) -> DataFrame:
+    def screen_candidates(self, new_docs: DataFrame) -> DataFrame:
         """(id_a=new, id_b=corpus) candidate pairs of an ingest batch
         against the maintained bands — map-only batch signatures, one
         band-key equi-join reading ONLY the batch's band keys' bucket
         files. Lazy (screen_batch checkpoints it); exposed so the
         file-pruning property is assertable on the exact serving
         plan."""
-        qsigs = self._signatures(new_docs, id_col, text_col)
+        qsigs = self._signatures(new_docs)
         # lazy: materialized by the probe collect just below
         qbands = _band_rows(qsigs).localCheckpoint(eager=False)
         probe_buckets = self.store.touched_buckets(qbands, "bk")
@@ -344,8 +326,6 @@ class IncrementalMinHashIndex:
         new_docs: DataFrame,
         corpus_docs: DataFrame,
         threshold: float = 0.5,
-        id_col: str = "doc_id",
-        text_col: str = "text",
     ) -> DataFrame:
         """Screen an ingest batch against the MAINTAINED index — the
         per-ingest production shape: map-only batch signatures, band
@@ -363,25 +343,17 @@ class IncrementalMinHashIndex:
         per id — the batch's version wins (partners also present in
         the batch are dropped from the corpus text fetch), so the
         shingle sizes can never double-count an id."""
-        cands = self.screen_candidates(
-            new_docs, id_col=id_col, text_col=text_col
-        ).localCheckpoint(eager=False)  # feeds the partner semi-join AND
-        # the verify join; without the checkpoint the probe join runs
-        # twice. Lazy: the verify chain's shingle-count job materializes
-        # it (read side, no swaps in flight)
+        # feeds the partner semi-join AND the verify join; without the
+        # checkpoint the probe join runs twice. Lazy: the verify chain's
+        # shingle-count job materializes it (read side, no swaps in flight)
+        cands = self.screen_candidates(new_docs).localCheckpoint(eager=False)
         partner_ids = (
-            cands.select(F.col("id_b").alias(id_col))
+            cands.select(F.col("id_b").alias("doc_id"))
             .distinct()
-            .join(new_docs.select(id_col), id_col, "left_anti")
+            .join(new_docs.select("doc_id"), "doc_id", "left_anti")
         )
-        sh = word_shingles(
-            new_docs, id_col=id_col, text_col=text_col
-        ).unionByName(
-            word_shingles(
-                corpus_docs.join(partner_ids, id_col, "left_semi"),
-                id_col=id_col,
-                text_col=text_col,
-            )
+        sh = word_shingles(new_docs).unionByName(
+            word_shingles(corpus_docs.join(partner_ids, "doc_id", "left_semi"))
         )
         return self._verify(cands, sh, threshold).select(
             F.col("id_a").alias("new_id"),

@@ -192,23 +192,20 @@ class IncrementalMixtureLedger:
         self,
         docs: DataFrame,
         batch_id: int | None = None,
-        id_col: str = "doc_id",
-        strat_col: str = "stratum",
-        text_col: str = "text",
     ) -> None:
         """The foreachBatch body. An empty/whitespace ``text`` is the
         delete marker (family convention); an update that moves a doc
         between strata subtracts from the old stratum and adds to the
         new via the mem diff. Without a batch_id (direct calls) the
         delta applies unfenced — stream wiring always passes one."""
-        from worker_spark.streaming.feed import last_wins
+        from worker_spark.streaming.feed import has_text, last_wins
 
         store = self.store
         batch = last_wins(
             docs.select(
-                F.col(id_col).cast("long").alias("doc_id"),
-                F.col(strat_col).cast("string").alias("stratum"),
-                F.col(text_col).alias("text"),
+                F.col("doc_id").cast("long").alias("doc_id"),
+                F.col("stratum").cast("string").alias("stratum"),
+                "text",
             ),
             ["doc_id"],
         ).localCheckpoint(eager=False)
@@ -221,7 +218,7 @@ class IncrementalMixtureLedger:
         batch_ids = batch.select("doc_id").distinct().localCheckpoint(
             eager=False
         )
-        live = batch.filter(F.length(F.trim(F.col("text"))) > 0)
+        live = batch.filter(has_text())
         new_mem = self._decide(live).localCheckpoint(eager=False)
 
         doc_buckets = store.touched_buckets(batch_ids, "doc_id")

@@ -91,6 +91,16 @@ class IncrementalQuantileIndex:
     bucket-scoped MERGE maintenance; estimates served from state equal
     the batch sketch over the full streamed history exactly."""
 
+    # kid's type is part of the contract: the sample hash is md5 of
+    # the key as fed
+    FEED_SCHEMA = T.StructType(
+        [
+            T.StructField("g", T.StringType(), True),
+            T.StructField("kid", T.LongType(), True),
+            T.StructField("v", T.DoubleType(), True),
+        ]
+    )
+
     SMP = "smp"
     CONFIG = "config"
 
@@ -127,9 +137,6 @@ class IncrementalQuantileIndex:
         self,
         rows: DataFrame,
         batch_id: int | None = None,
-        group_col: str = "g",
-        key_col: str = "kid",
-        value_col: str = "v",
     ) -> None:
         """The foreachBatch body: fold the batch into each touched
         group's bottom-k. Same row filters as the batch operator (NULL/
@@ -141,14 +148,13 @@ class IncrementalQuantileIndex:
         ∖ batch keys ∪ batch rows."""
         batch = (
             rows.filter(
-                F.col(value_col).isNotNull()
-                & ~F.isnan(F.col(value_col).cast("double"))
+                F.col("v").isNotNull() & ~F.isnan(F.col("v").cast("double"))
             )
             .select(
-                F.col(group_col).cast("string").alias("g"),
-                F.col(key_col).cast("string").alias("kid"),
-                md5_prefix32(F.col(key_col)).alias("hv"),
-                F.col(value_col).cast("double").alias("v"),
+                F.col("g").cast("string").alias("g"),
+                F.col("kid").cast("string").alias("kid"),
+                md5_prefix32(F.col("kid")).alias("hv"),
+                F.col("v").cast("double").alias("v"),
             )
             .filter(F.col("hv").isNotNull())
             # within-batch re-delivery dedup (rows are immutable, so

@@ -76,8 +76,6 @@ class StreamingReservoir:
         self,
         docs: DataFrame,
         batch_id: int | None = None,
-        id_col: str = "doc_id",
-        text_col: str = "text",
     ) -> None:
         """The foreachBatch body: score the batch with the exact shared
         A-ES key, merge with the current reservoir (a re-arriving key's
@@ -88,15 +86,14 @@ class StreamingReservoir:
 
         batch = last_wins(
             docs.select(
-                F.col(id_col).cast("long").alias("doc_id"),
-                F.col(text_col).alias("text"),
+                F.col("doc_id").cast("long").alias("doc_id"), "text"
             ),
             ["doc_id"],
         )
         # lazy (r15 job-count discipline): both are materialized by
         # the write's touched-bucket collect, before the one swap
         scored = aes_scored(batch).localCheckpoint(eager=False)
-        batch_ids = batch_doc_ids(docs, id_col)
+        batch_ids = batch_doc_ids(docs)
         state = self.reservoir().join(batch_ids, "doc_id", "left_anti")
         merged = state.withColumn(
             "_r",
@@ -168,9 +165,6 @@ class StreamingStratifiedReservoir:
         self,
         docs: DataFrame,
         batch_id: int | None = None,
-        id_col: str = "doc_id",
-        text_col: str = "text",
-        strat_col: str = "stratum",
     ) -> None:
         """Score the batch with the exact shared A-ES key, carry each
         row's stratum through, merge with the current reservoirs
@@ -183,9 +177,9 @@ class StreamingStratifiedReservoir:
 
         batch = last_wins(
             docs.select(
-                F.col(id_col).cast("long").alias("doc_id"),
-                F.col(text_col).alias("text"),
-                F.col(strat_col).cast("string").alias("stratum"),
+                F.col("doc_id").cast("long").alias("doc_id"),
+                "text",
+                F.col("stratum").cast("string").alias("stratum"),
             ),
             ["doc_id"],
         )
@@ -196,7 +190,7 @@ class StreamingStratifiedReservoir:
             .join(batch.select("doc_id", "stratum"), "doc_id")
             .localCheckpoint(eager=False)
         )
-        batch_ids = batch_doc_ids(docs, id_col)
+        batch_ids = batch_doc_ids(docs)
         state = self.reservoirs().join(batch_ids, "doc_id", "left_anti")
         merged = state.withColumn(
             "_r",

@@ -74,7 +74,7 @@ from worker_spark.plans.bucketed_state import (
     BucketedParquetStateStore,
     local_frame,
 )
-from worker_spark.streaming.feed import DOC_FEED_SCHEMA
+from worker_spark.streaming.feed import DOC_FEED_SCHEMA, has_text
 
 POSTINGS_SCHEMA = T.StructType(
     [
@@ -118,11 +118,7 @@ class IncrementalRetrievalIndex:
     # --- maintenance ----------------------------------------------------
 
     def _batch_delta(
-        self,
-        docs: DataFrame,
-        id_col: str,
-        text_col: str,
-        fields: dict[str, int] | None = None,
+        self, docs: DataFrame, fields: dict[str, int] = {"text": 1}
     ) -> DataFrame:
         """Per-batch (term, doc_id, tf) delta. ``fields`` maps field
         column -> integer weight for multi-field (BM25F) maintenance:
@@ -130,7 +126,7 @@ class IncrementalRetrievalIndex:
         operators/retrieval.bm25f_topk's base, so the maintained index
         scores BM25F through the unchanged bm25_topk read side
         (weighted tf/dl are just longs to the formula). Default is the
-        single-field {text_col: 1} special case — identical rows to the
+        single-field {"text": 1} special case — identical rows to the
         historical behavior.
 
         dl is NOT computed here: dl = sum(w) over a doc's tokens ==
@@ -138,12 +134,10 @@ class IncrementalRetrievalIndex:
         CHECKPOINTED tf — one tokenize+explode pass per batch instead
         of two (the tokenization is the dominant map cost of the delta
         stage at scale)."""
-        if fields is None:
-            fields = {text_col: 1}
         parts = [
-            docs.filter(F.length(F.trim(F.col(fld))) > 0)
+            docs.filter(has_text(fld))
             .select(
-                F.col(id_col).cast("long").alias("doc_id"),
+                F.col("doc_id").cast("long").alias("doc_id"),
                 F.explode(tokens(F.lower(F.col(fld)))).alias("term"),
                 F.lit(int(w)).cast("long").alias("w"),
             )
@@ -161,9 +155,7 @@ class IncrementalRetrievalIndex:
         self,
         docs: DataFrame,
         batch_id: int | None = None,
-        id_col: str = "doc_id",
-        text_col: str = "text",
-        fields: dict[str, int] | None = None,
+        fields: dict[str, int] = {"text": 1},
     ) -> None:
         """The foreachBatch body: delete-then-insert the batch documents'
         posting rows (S8 link-replace semantics — an UPDATED document
@@ -184,7 +176,7 @@ class IncrementalRetrievalIndex:
         from worker_spark.streaming.feed import batch_doc_ids, last_wins
 
         store = self.store
-        tf = self._batch_delta(last_wins(docs, [id_col]), id_col, text_col, fields)
+        tf = self._batch_delta(last_wins(docs, ["doc_id"]), fields)
         # localCheckpoint: the bucket swaps invalidate lazy frames derived
         # from pre-swap files (BucketedParquetStateStore caution), and
         # tf must also not re-read the streaming batch after the
@@ -205,7 +197,7 @@ class IncrementalRetrievalIndex:
             ).alias("term_buckets")
         )
         store.reindex(
-            batch_doc_ids(docs, id_col),
+            batch_doc_ids(docs),
             self.DOCLEN,
             DOCLEN_SCHEMA,
             dl.join(manifest, "doc_id").select("doc_id", "dl", "term_buckets"),

@@ -58,7 +58,7 @@ from pyspark.sql import types as T
 
 from worker_spark.operators import substrings as SUB
 from worker_spark.plans.bucketed_state import BucketedParquetStateStore
-from worker_spark.streaming.feed import DOC_FEED_SCHEMA
+from worker_spark.streaming.feed import DOC_FEED_SCHEMA, has_text
 
 FPROWS_SCHEMA = T.StructType(
     [
@@ -82,17 +82,15 @@ DOCLEN_SCHEMA = T.StructType(
 )
 
 
-def _live_docs(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def _live_docs(docs: DataFrame) -> DataFrame:
     """(doc_id, text, doc_len) for the batch's LIVE documents (empty /
     whitespace-only text is the delete marker, matching the exact
     index's contentless-doc semantics)."""
     return docs.select(
-        F.col(id_col).cast("long").alias("doc_id"),
-        F.col(text_col).alias("text"),
-        F.length(F.col(text_col)).cast("long").alias("doc_len"),
-    ).filter(F.length(F.trim(F.col("text"))) > 0)
+        F.col("doc_id").cast("long").alias("doc_id"),
+        "text",
+        F.length(F.col("text")).cast("long").alias("doc_len"),
+    ).filter(has_text())
 
 
 class IncrementalSubstringIndex:
@@ -116,9 +114,6 @@ class IncrementalSubstringIndex:
         self,
         docs: DataFrame,
         batch_id: int | None = None,
-        id_col: str = "doc_id",
-        text_col: str = "text",
-        pre_reduced: bool = False,
         batch_ids: DataFrame | None = None,
         doc_buckets: list[int] | None = None,
     ) -> None:
@@ -132,23 +127,21 @@ class IncrementalSubstringIndex:
         row per key FIRST (last-wins); without it a document would keep
         both versions' fingerprints and dup-match against itself.
 
-        ``pre_reduced`` / ``batch_ids`` / ``doc_buckets``: the composed
-        substring pipeline hands over its already-reduced batch, id
-        frame and bucket ids (same-modulus stores only) instead of
-        paying the derivations twice — last-wins is idempotent, so the
-        values are unchanged. Checkpoints are LAZY (r15 job-count
-        discipline), each materialized by the first count/collect that
-        consumes it, before any bucket swap."""
+        ``batch_ids`` / ``doc_buckets``: the composed substring pipeline
+        hands over its id frame and bucket ids (same-modulus stores
+        only) instead of paying the derivations twice; a handed-over
+        ``batch_ids`` says ``docs`` is already reduced — last-wins is
+        idempotent, so the values are unchanged. Checkpoints are LAZY
+        (r15 job-count discipline), each materialized by the first
+        count/collect that consumes it, before any bucket swap."""
         from worker_spark.streaming.feed import batch_doc_ids, last_wins
 
         store = self.store
-        reduced = docs if pre_reduced else last_wins(docs, [id_col])
-        live = _live_docs(
-            reduced, id_col=id_col, text_col=text_col
-        ).localCheckpoint(eager=False)
-        new_fp = SUB.winnow_fingerprints(live).localCheckpoint(eager=False)
         if batch_ids is None:
-            batch_ids = batch_doc_ids(docs, id_col)
+            batch_ids = batch_doc_ids(docs)
+            docs = last_wins(docs, ["doc_id"])
+        live = _live_docs(docs).localCheckpoint(eager=False)
+        new_fp = SUB.winnow_fingerprints(live).localCheckpoint(eager=False)
         if doc_buckets is None:
             doc_buckets = store.touched_buckets(batch_ids, "doc_id")
         # a batch that only deletes docs the index never saw must be a
@@ -314,12 +307,7 @@ class IncrementalSubstringIndex:
             )
         )
 
-    def screen_batch(
-        self,
-        docs: DataFrame,
-        id_col: str = "doc_id",
-        text_col: str = "text",
-    ) -> DataFrame:
+    def screen_batch(self, docs: DataFrame) -> DataFrame:
         """Screen an ingest batch against the MAINTAINED index: winnow
         the batch only, read ONLY the batch fingerprints' bucket files,
         one equi-join on fhash. Output (new_id, new_pos, corpus_id,
@@ -328,7 +316,7 @@ class IncrementalSubstringIndex:
         corpus surfaces here before ingest."""
         store = self.store
         qfp = SUB.winnow_fingerprints(
-            _live_docs(docs, id_col=id_col, text_col=text_col)
+            _live_docs(docs)
         ).localCheckpoint(eager=True)
         probe_buckets = store.touched_buckets(qfp, "fhash")
         idx = self.fprows(buckets=probe_buckets)

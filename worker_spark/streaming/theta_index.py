@@ -74,6 +74,15 @@ class IncrementalThetaIndex:
     bucket-scoped MERGE maintenance; pair overlap estimates served
     from state equal the batch theta_set_ops estimates exactly."""
 
+    # v's type is part of the contract: the member hash is md5 of the
+    # value as fed
+    FEED_SCHEMA = T.StructType(
+        [
+            T.StructField("g", T.StringType(), True),
+            T.StructField("v", T.LongType(), True),
+        ]
+    )
+
     THS = "ths"
     CONFIG = "config"
 
@@ -111,8 +120,6 @@ class IncrementalThetaIndex:
         self,
         rows: DataFrame,
         batch_id: int | None = None,
-        group_col: str = "g",
-        value_col: str = "v",
     ) -> None:
         """The foreachBatch body: fold the batch's distinct member
         hashes into each touched group's bottom-k. Same hash + NULL
@@ -122,8 +129,8 @@ class IncrementalThetaIndex:
         replay-safe."""
         batch = (
             rows.select(
-                F.col(group_col).cast("string").alias("g"),
-                md5_prefix32(F.col(value_col)).alias("hv"),
+                F.col("g").cast("string").alias("g"),
+                md5_prefix32(F.col("v")).alias("hv"),
             )
             .filter(F.col("hv").isNotNull())
             .dropDuplicates(["g", "hv"])

@@ -121,13 +121,9 @@ class IncrementalVectorIndex:
         centroids: DataFrame | None = None,
         codebook_vectors: DataFrame | None = None,
         n_buckets: int = 16,
-        id_col: str = "vec_id",
-        vec_col: str = "embedding",
     ):
         self.spark = spark
         self.store = BucketedParquetStateStore(spark, root, n_buckets)
-        self.id_col = id_col
-        self.vec_col = vec_col
         self._pin_table(
             self.CENTROIDS,
             centroids,
@@ -182,8 +178,8 @@ class IncrementalVectorIndex:
                 )
             return
         pinned = df.select(
-            F.col(self.id_col).cast("long").alias("cent_id"),
-            F.col(self.vec_col).alias("embedding"),
+            F.col("vec_id").cast("long").alias("cent_id"),
+            "embedding",
         )
         if pinned.isEmpty():
             raise ValueError(
@@ -254,8 +250,8 @@ class IncrementalVectorIndex:
 
         store = self.store
         raw = vectors.select(
-            F.col(self.id_col).cast("long").alias("vec_id"),
-            F.col(self.vec_col).alias("embedding"),
+            F.col("vec_id").cast("long").alias("vec_id"),
+            "embedding",
         )
         batch = last_wins(raw, ["vec_id"])
         live = batch.filter(F.size("embedding") > 0)
@@ -381,14 +377,11 @@ class IncrementalVectorIndex:
                 "over it is not replay-safe; discard the root and rerun "
                 "(the clone_rebucketed discipline)"
             )
-        vectors = self.cells().select(
-            F.col("vec_id").alias(self.id_col),
-            F.col("embedding").alias(self.vec_col),
-        )
+        vectors = self.cells().select("vec_id", "embedding")
         if new_centroids is None:
             stride = auto_centroid_stride(vectors.count())
             new_centroids = vectors.filter(
-                F.col(self.id_col) % stride == 0
+                F.col("vec_id") % stride == 0
             )
         want_buckets = n_buckets or self.store.n_buckets
         new_index = IncrementalVectorIndex(
@@ -397,15 +390,13 @@ class IncrementalVectorIndex:
             centroids=new_centroids,
             codebook_vectors=(
                 self.codebook_vectors().select(
-                    F.col("cent_id").alias(self.id_col),
-                    F.col("embedding").alias(self.vec_col),
+                    F.col("cent_id").alias("vec_id"),
+                    "embedding",
                 )
                 if self.has_codebook()
                 else None
             ),
             n_buckets=want_buckets,
-            id_col=self.id_col,
-            vec_col=self.vec_col,
         )
         if new_index.store.n_buckets != want_buckets:
             # a crashed earlier attempt can leave ONLY the store's
@@ -521,19 +512,14 @@ class IncrementalVectorIndex:
 
         if tau is None:
             tau = S.SEMDEDUP_TAU
-        cells = self.cells().select(
-            F.col("vec_id").alias(self.id_col), "cell_id"
-        )
-        return S.semantic_dedup(
-            vectors, tau=tau, id_col=self.id_col, vec_col=self.vec_col,
-            cells=cells,
-        )
+        cells = self.cells().select("vec_id", "cell_id")
+        return S.semantic_dedup(vectors, tau=tau, cells=cells)
 
     def _query_side(self, queries: DataFrame) -> DataFrame:
         return queries.select(
-            F.col(self.id_col).cast("long").alias("q_id"),
-            F.col(self.vec_col).alias("q_vec"),
-            _norm(F.col(self.vec_col)).alias("q_norm"),
+            F.col("vec_id").cast("long").alias("q_id"),
+            F.col("embedding").alias("q_vec"),
+            _norm(F.col("embedding")).alias("q_norm"),
         )
 
     def _probes(self, q: DataFrame, nprobe: int) -> DataFrame:

@@ -109,6 +109,17 @@ class IncrementalZOrderIndex:
     """Maintained z-cell layout with per-batch bucket-scoped MERGE
     maintenance and bucket-pruned 2-D box serving."""
 
+    # column order is part of the replay contract (feed.last_wins)
+    FEED_SCHEMA = T.StructType(
+        [
+            T.StructField("event_id", T.LongType(), True),
+            T.StructField("v1", T.LongType(), True),
+            T.StructField("v2", T.LongType(), True),
+            T.StructField("event_type", T.StringType(), True),
+            T.StructField("value", T.DoubleType(), True),
+        ]
+    )
+
     ROWS = "rows"
     CONFIG = "config"
 
@@ -168,9 +179,6 @@ class IncrementalZOrderIndex:
         self,
         rows: DataFrame,
         batch_id: int | None = None,
-        id_col: str = "event_id",
-        v1_col: str = "v1",
-        v2_col: str = "v2",
     ) -> None:
         """The foreachBatch body: assign each row its grid cell under
         the pinned bounds and replace its stored copy. Rows with a NULL
@@ -181,9 +189,9 @@ class IncrementalZOrderIndex:
 
         batch = last_wins(
             rows.select(
-                F.col(id_col).cast("long").alias("event_id"),
-                F.col(v1_col).cast("long").alias("v1"),
-                F.col(v2_col).cast("long").alias("v2"),
+                F.col("event_id").cast("long").alias("event_id"),
+                F.col("v1").cast("long").alias("v1"),
+                F.col("v2").cast("long").alias("v2"),
                 F.col("event_type").cast("string").alias("event_type"),
                 F.col("value").cast("double").alias("value"),
             ),
