@@ -259,43 +259,58 @@ def served(spark, tmp_path_factory):
 
 
 @pytest.mark.parametrize(
-    "queries",
+    "queries, max_partition_bytes",
     [
-        [],
-        [""],
-        ["fjord fjord"],
-        ["BLÅBÆR Øy"],
-        ["zzabsent"],
-        ["fjord", "hash join", "ærfugl ål sort zzabsent"],
+        ([], None),
+        ([""], None),
+        (["fjord fjord"], None),
+        (["BLÅBÆR Øy"], None),
+        (["zzabsent"], None),
+        (["fjord", "hash join", "ærfugl ål sort zzabsent"], None),
+        (["fjord", "hash join", "ærfugl ål sort zzabsent"], "1k"),
     ],
-    ids=["none", "blank", "repeated", "upper_aeoa", "absent", "batch3"],
+    ids=[
+        "none", "blank", "repeated", "upper_aeoa", "absent", "batch3",
+        "batch3_1k_partitions",
+    ],
 )
-def test_served_topk_matches_batch_scorer(served, queries):
+def test_served_topk_matches_batch_scorer(
+    spark, served, queries, max_partition_bytes
+):
+    """Served top-k equals the batch scorer. With ``maxPartitionBytes``
+    below the index's bucket files, the reads coalesce to more than one
+    partition, so the plan shuffles, and the answer must not change."""
     idx, docs = served
-    got = idx.bm25_topk(queries, k=3)
+    key = "spark.sql.files.maxPartitionBytes"
+    old = spark.conf.get(key)
+    try:
+        if max_partition_bytes:
+            spark.conf.set(key, max_partition_bytes)
+        got = idx.bm25_topk(queries, k=3)
+        got_rows = _rows(got)
+        plan = got._jdf.queryExecution().executedPlan().toString()
+    finally:
+        spark.conf.set(key, old)
     want = bm25_topk(docs, queries, k=3)
     assert got.schema == want.schema
-    assert _rows(got) == _rows(want)
+    assert got_rows == _rows(want)
+    if max_partition_bytes:
+        assert "Exchange hashpartitioning" in plan
 
 
-def test_serve_plan_launches_no_job_and_scans_no_rdd(spark, served):
-    """Building a query plan is pure planning: the term buckets come
-    from the host-side hash and the query terms are a JVM-local frame,
-    so no probe job runs and no scan re-runs a Python RDD. Holds while
-    n_buckets <= 32: above Spark's parallel-listing threshold a read of
-    every bucket path would itself launch a listing job."""
+def _jobs_in_group(spark, action) -> int:
+    """Spark jobs that ``action`` launches, counted from the status
+    tracker under a job group of their own. The tracker is fed
+    asynchronously and in order: once a later barrier job is visible,
+    every job of the action is too."""
     import time
     import uuid
 
-    idx, _ = served
-    assert idx.store.n_buckets <= 32
     sc = spark.sparkContext
-    group, probe = f"serve-plan-{uuid.uuid4().hex}", f"probe-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, "bm25_topk plan build")
+    group, probe = f"jobs-{uuid.uuid4().hex}", f"probe-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "counted action")
     try:
-        plan = idx.bm25_topk(["fjord", "hash join"], k=3)
-        # the status tracker is fed asynchronously and in order: once a
-        # later job is visible, any job of the build would be too
+        action()
         sc.setJobGroup(probe, "listener barrier")
         spark.range(1).count()
     finally:
@@ -306,9 +321,37 @@ def test_serve_plan_launches_no_job_and_scans_no_rdd(spark, served):
     while not tracker.getJobIdsForGroup(probe) and time.time() < deadline:
         time.sleep(0.05)
     assert tracker.getJobIdsForGroup(probe)
-    assert tracker.getJobIdsForGroup(group) == []
+    return len(tracker.getJobIdsForGroup(group))
+
+
+def test_serve_plan_launches_no_job_and_scans_no_rdd(spark, served):
+    """Building a query plan is pure planning: the term buckets come
+    from the host-side hash and the query terms are a literal map, so
+    no probe job runs and no scan re-runs a Python RDD. Holds while
+    n_buckets <= 32: above Spark's parallel-listing threshold a read of
+    every bucket path would itself launch a listing job."""
+    idx, _ = served
+    assert idx.store.n_buckets <= 32
+    plans = []
+    assert (
+        _jobs_in_group(
+            spark,
+            lambda: plans.append(idx.bm25_topk(["fjord", "hash join"], k=3)),
+        )
+        == 0
+    )
+    (plan,) = plans
     physical = plan._jdf.queryExecution().executedPlan().toString()
     assert "ExistingRDD" not in physical and "Python" not in physical
+
+
+def test_small_index_query_runs_in_two_jobs(spark, served):
+    """On an index whose reads fit one partition, a query is one stage
+    plus the broadcast of N and dl_sum: two Spark jobs, not one per
+    exchange."""
+    idx, _ = served
+    plan = idx.bm25_topk(["fjord", "hash join"], k=3)
+    assert _jobs_in_group(spark, plan.collect) <= 2
 
 
 def _bucket_snapshot(table_dir):

@@ -577,6 +577,10 @@ def test_incremental_index_scores_from_state_not_corpus(spark, tmp_path):
     assert plan.count("BroadcastExchange") >= 1
     # rank-limit pushdown on the top-k window
     assert "WindowGroupLimit" in plan
+    # the reads fit one partition: the coalesced scans report
+    # SinglePartition, so the window, join, aggregate and rank window
+    # run in one stage with no shuffle
+    assert "Exchange hashpartitioning" not in plan
 
 
 def test_weighted_reservoir_is_take_ordered(spark):

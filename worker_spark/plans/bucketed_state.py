@@ -225,6 +225,32 @@ def local_frame(
     )
 
 
+def read_coalesced(
+    store: "BucketedParquetStateStore",
+    table: str,
+    schema: T.StructType | None = None,
+    buckets: list[int] | None = None,
+) -> DataFrame:
+    """``store.read``, coalesced to one partition per
+    ``spark.sql.files.maxPartitionBytes`` of the bucket files it reads:
+    the partition count follows the bytes read, not the core count. A
+    read that fits one partition reports ``SinglePartition``, which
+    satisfies every required distribution, so the joins, aggregates and
+    windows above it plan no exchange; a larger read keeps its
+    parallelism and Catalyst adds the exchanges it needs. A module
+    function, not a method: every maintained row's source hash
+    (tools/query_hashes.py) covers the store class."""
+    rows = store.read(table, schema, buckets)
+    size = sum(
+        e.stat().st_size
+        for p in store.bucket_paths(table, buckets)
+        for e in os.scandir(p)
+        if e.is_file() and not e.name.startswith(("_", "."))
+    )
+    conf = store.spark._jsparkSession.sessionState().conf()
+    return rows.coalesce(max(1, -(-size // conf.filesMaxPartitionBytes())))
+
+
 def tree_bytes(root: str) -> dict[str, tuple[int, float]]:
     """file path -> (size, mtime): the ONE 'bytes rewritten' witness —
     shared by the state scaling probe (tools/scaling_probe.py --state)

@@ -190,8 +190,6 @@ class StreamingHeavyHitters:
         self.store.write(self.TABLE, new_state, keys=["token"])
 
     def _summary(self) -> DataFrame:
-        if not self.store.exists(self.TABLE):
-            return self.spark.createDataFrame([], MG_SCHEMA)
         return self.store.read(self.TABLE, MG_SCHEMA)
 
     def counters(self) -> DataFrame:

@@ -72,7 +72,10 @@ from worker_spark.operators.sampling import (
     _threshold_col,
     strat_bucket,
 )
-from worker_spark.plans.bucketed_state import BucketedParquetStateStore
+from worker_spark.plans.bucketed_state import (
+    BucketedParquetStateStore,
+    local_frame,
+)
 
 MEM_SCHEMA = T.StructType(
     [
@@ -227,7 +230,7 @@ class IncrementalMixtureLedger:
             .join(batch_ids, "doc_id", "left_semi")
             .localCheckpoint(eager=False)
             if doc_buckets
-            else self.spark.createDataFrame([], MEM_SCHEMA)
+            else local_frame(self.spark, [], MEM_SCHEMA)
         )
 
         # --- the delta: journaled truth for this batch_id -----------------
@@ -333,7 +336,7 @@ class IncrementalMixtureLedger:
 
     def _led_rows(self) -> DataFrame:
         if not self.store.has_schema_witness(self.LED):
-            return self.spark.createDataFrame([], LED_SCHEMA)
+            return local_frame(self.spark, [], LED_SCHEMA)
         return self.store.read(self.LED, LED_SCHEMA)
 
     def membership(self) -> DataFrame:

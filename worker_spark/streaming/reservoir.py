@@ -110,8 +110,6 @@ class StreamingReservoir:
         self.store.write(self.TABLE, top, keys=["doc_id"])
 
     def reservoir(self) -> DataFrame:
-        if not self.store.exists(self.TABLE):
-            return self.spark.createDataFrame([], RESERVOIR_SCHEMA)
         return self.store.read(self.TABLE, RESERVOIR_SCHEMA)
 
 
@@ -208,6 +206,4 @@ class StreamingStratifiedReservoir:
         self.store.write(self.TABLE, top, keys=["doc_id"])
 
     def reservoirs(self) -> DataFrame:
-        if not self.store.exists(self.TABLE):
-            return self.spark.createDataFrame([], STRAT_RESERVOIR_SCHEMA)
         return self.store.read(self.TABLE, STRAT_RESERVOIR_SCHEMA)

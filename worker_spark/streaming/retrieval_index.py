@@ -55,6 +55,25 @@ and the streamed state provably equals the batch ``bm25f_topk`` build
 (tests). That is the incremental twin of the reference's MULTI-FIELD
 search index (searchable-attribute priorities, src/meili.rs:273-433).
 
+Query shape: a query is one Spark stage plus one broadcast job. The
+query terms are a literal ``term -> queries`` map that the postings rows
+explode, not a frame to join. The postings read is pruned to the query
+terms' buckets and filtered to the terms in the scan; df is a window
+count per term, exact because all of a term's postings live in one
+bucket. Both state reads are coalesced to one partition per
+``spark.sql.files.maxPartitionBytes`` of files read
+(``bucketed_state.read_coalesced``). On an index that fits one
+partition each read reports ``SinglePartition``, which satisfies every
+required distribution, so the df window, the dl join, the per-doc sum
+and the rank window need no exchange; each exchange would be its own
+AQE job, and at serve sizes those jobs, not the bytes, are the cost. A
+larger read keeps its parallelism and Catalyst plans the exchanges
+itself. The dl join carries a ``merge`` hint: a broadcast of per-doc dl
+would be one more job, and over one partition a sort-merge join needs
+no exchange either. N and dl_sum are one aggregate over the same doclen
+read, broadcast-joined inside the plan rather than collected to the
+driver, so building the plan launches no job.
+
 Determinism pin (tests/test_incremental_retrieval.py): after streaming N
 batches with availableNow, postings == the batch ``inverted_postings``
 build on the union corpus and BM25 top-k == ``bm25_topk`` on the union
@@ -64,7 +83,9 @@ buckets (file-snapshot assertion).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+import functools
+
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -72,7 +93,7 @@ from worker_spark.operators.retrieval import BM25_B, BM25_K1, bm25_term_score
 from worker_spark.operators.text import tokens
 from worker_spark.plans.bucketed_state import (
     BucketedParquetStateStore,
-    local_frame,
+    read_coalesced,
 )
 from worker_spark.streaming.feed import DOC_FEED_SCHEMA, has_text
 
@@ -92,12 +113,14 @@ DOCLEN_SCHEMA = T.StructType(
         T.StructField("term_buckets", T.ArrayType(T.IntegerType()), False),
     ]
 )
-QTERMS_SCHEMA = T.StructType(
-    [
-        T.StructField("query", T.StringType()),
-        T.StructField("term", T.StringType()),
-    ]
-)
+
+
+@functools.cache
+def _term_score(k1: float, b: float) -> Column:
+    """``bm25_term_score`` built once per (k1, b): a Column is an
+    unresolved expression that every query plan can reuse, and building
+    it takes some 300 JVM calls, a quarter of a query's plan build."""
+    return bm25_term_score(k1, b)
 
 
 class IncrementalRetrievalIndex:
@@ -314,31 +337,42 @@ class IncrementalRetrievalIndex:
         payoff — the postings read is PRUNED to the buckets containing
         the query's terms: per-term posting traffic over a subset of the
         index files. df per query term is exact under the pruning
-        because a term's posting rows all live in its one bucket."""
+        because a term's posting rows all live in its one bucket. Plan
+        shape: module docstring, "Query shape"."""
         from pyspark.sql import Window
 
-        pairs = [
-            (q, t) for q in queries for t in dict.fromkeys(q.lower().split())
-        ]
-        # built in the JVM and bucketed on the driver: no probe job, and
-        # no Python-RDD scan for the scoring plan to re-run
-        qterms = local_frame(self.spark, pairs, QTERMS_SCHEMA)
-        qbuckets = sorted({self.store.bucket_of_str(t) for _, t in pairs})
-        tf = self.postings(buckets=qbuckets)
-        dl = self.doclen().select("doc_id", "dl")
+        queries_of: dict[str, list[str]] = {}
+        for q in queries:
+            for t in dict.fromkeys(q.lower().split()):
+                queries_of.setdefault(t, []).append(q)
+        # term -> its queries as one literal: no frame, no join; the cast
+        # keeps the exploded ``query`` nullable, as the batch scorer's is
+        qmap = F.create_map(
+            *[
+                c
+                for t, qs in queries_of.items()
+                for c in (F.lit(t), F.array(*map(F.lit, qs)))
+            ]
+        ).cast("map<string,array<string>>")
+        store = self.store
+        qbuckets = sorted({store.bucket_of_str(t) for t in queries_of})
+        by_term = Window.partitionBy("term")
+        tf = (
+            read_coalesced(store, self.POSTINGS, POSTINGS_SCHEMA, qbuckets)
+            .filter(F.col("term").isin(list(queries_of)))
+            .withColumn("df", F.count(F.lit(1)).over(by_term))
+            .withColumn("query", F.explode(F.element_at(qmap, F.col("term"))))
+        )
+        dl = read_coalesced(store, self.DOCLEN, DOCLEN_SCHEMA)
         stats = dl.agg(
             F.count(F.lit(1)).alias("n_docs"), F.sum("dl").alias("dl_sum")
         )
-        dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
-        scored = (
-            qterms.join(dfreq, "term")
-            .join(tf, "term")
-            .join(dl, "doc_id")
-            .crossJoin(F.broadcast(stats))
+        scored = tf.join(dl.hint("merge"), "doc_id").crossJoin(
+            F.broadcast(stats)
         )
         agg = (
             scored.select(
-                "query", "doc_id", bm25_term_score(k1, b).alias("ts")
+                "query", "doc_id", _term_score(k1, b).alias("ts")
             )
             .groupBy("query", "doc_id")
             .agg(F.sum("ts").alias("bm25"))
@@ -346,13 +380,9 @@ class IncrementalRetrievalIndex:
         w = Window.partitionBy("query").orderBy(
             F.desc("bm25"), F.asc("doc_id")
         )
-        return (
-            agg.withColumn("rnk", F.row_number().over(w))
-            .filter(F.col("rnk") <= k)
-            .select(
-                "query",
-                "doc_id",
-                F.col("bm25").cast("double").alias("bm25"),
-                F.col("rnk").cast("int").alias("rnk"),
-            )
-        )
+        return agg.select(
+            "query",
+            "doc_id",
+            F.col("bm25").cast("double").alias("bm25"),
+            F.row_number().over(w).alias("rnk"),
+        ).filter(F.col("rnk") <= k)
